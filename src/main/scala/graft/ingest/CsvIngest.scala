@@ -1,8 +1,8 @@
 package graft.ingest
 
 import graft.config.EntitySpec
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.plans.SqlIdent
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -13,124 +13,117 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * get it by deferring the cast to the validator's expressions).
   *
   * Row identity: the reference relies on DuckDB ROWID / pandas index
-  * (main.py:78,135). Spark has no stable implicit order, so we mint an
-  * explicit `_row_id`:
-  *   - `dense=false`: `monotonically_increasing_id` — order-consistent
-  *     with input order for a file-based read (partitions are
-  *     sequential file splits) at zero cost; all dedup first/last
-  *     needs is ordering, not density;
-  *   - `dense=true` (default, reference parity — pandas `index + 1`,
-  *     main.py:78): RDD `zipWithIndex`, which is fully distributed
-  *     (one lightweight job to count per-partition sizes, then a
-  *     per-partition offset add) — no single-partition window, no
-  *     global sort, survives a 100× scale-up.
+  * (main.py:78,135). Spark has no stable implicit order, so every read
+  * gets an explicit dense 1-based `_row_id` (pandas `index + 1`,
+  * main.py:78) from one mint, [[mintRowIds]]: each group's offset
+  * (group = scan partition, so ids follow partition order, or source
+  * file for file-aware reads) added to `monotonically_increasing_id`.
+  * No `.rdd` lineage break, no shuffle of the data, no global sort.
   */
 object CsvIngest {
 
   val RowId = "_row_id"
-
-  /** Format-dispatching source reader (the "universal importer"
-    * surface): csv is the reference's path; json/parquet/orc sources are
-    * normalized to all-string columns so the same lexical validation
-    * pipeline applies regardless of the wire format.
-    */
-  /** `fileAware=true` (csv only) mints layout-independent multi-file
-    * ids via [[readPathFileAware]] — `dense` is implied there (file
-    * order × in-file offset IS dense). Unsupported format+fileAware
-    * combinations throw rather than silently handing back
-    * layout-dependent ids the caller asked to avoid.
-    */
-  def read(spark: SparkSession, spec: EntitySpec, dense: Boolean = true,
-      fileAware: Boolean = false): DataFrame =
-    spec.format match {
-      case "csv" if fileAware => readPathFileAware(spark, spec.source)
-      case other if fileAware =>
-        throw new IllegalArgumentException(
-          s"file_aware row ids are only supported for csv sources (entity '${spec.name}' has format '$other')")
-      case "csv" => readPath(spark, spec.source, dense)
-      case "json" | "parquet" | "orc" =>
-        val raw = spark.read.format(spec.format).load(spec.source)
-        val asStrings = raw.select(raw.columns.map(c => col(c).cast("string").as(c)): _*)
-        if (dense) withDenseRowIds(asStrings)
-        else asStrings.withColumn(RowId, monotonically_increasing_id())
-      case other =>
-        throw new IllegalArgumentException(s"unsupported source format '$other' for entity '${spec.name}'")
-    }
-
-  def readPath(spark: SparkSession, path: String, dense: Boolean = true): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-    if (dense) withDenseRowIds(raw) else raw.withColumn(RowId, monotonically_increasing_id())
-  }
-
-  /** Append 1-based dense input-order row ids via zipWithIndex. */
-  def withDenseRowIds(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val schema = StructType(df.schema.fields :+ StructField(RowId, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex().map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ (idx + 1L))
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Multi-file CSV read with FILE-AWARE dense 1-based `_row_id`:
-    * identity = (file path order, row order within file), so
-    * keep-first/keep-last dedup is reproducible no matter how Spark
-    * parallelizes the read — the property SURVEY §7.4(1) asks for at
-    * the 100 TB multi-file scale, where `withDenseRowIds`' global
-    * zipWithIndex order would depend on partition layout.
-    *
-    * Mechanics (all Catalyst-native — no `.rdd` lineage break):
-    *   - `multiLine=true` makes each CSV file a single unsplittable
-    *     read unit, so a file's rows are contiguous in one partition
-    *     in input order, and `monotonically_increasing_id` is
-    *     order-consistent with in-file position;
-    *   - `row_number() over (partition by file order by mid)` mints the
-    *     within-file offset (shuffles by file — bounded by file size);
-    *   - per-file row counts (one row per file) get cumulative bases
-    *     via a window over the tiny file table, broadcast-joined back.
-    *
-    * Files are ordered by lexical path (name multi-part inputs
-    * part-00000, part-00001, … as writers already do).
-    */
-  def readPathFileAware(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .option("mode", "PERMISSIVE")
-      .option("multiLine", "true")
-      .csv(path)
-    val tagged = raw
-      .select(raw.columns.map(col) :+ col("_metadata.file_path").as(FileTag): _*)
-    mintFileAwareIds(tagged, raw.columns.toSeq)
-  }
 
   /** Column under which [[readPathFileAware]] / the streaming ingest
     * tag each row's source file before minting ids.
     */
   val FileTag = "_file"
 
-  /** Mint file-aware dense 1-based ids over a frame tagged with
-    * [[FileTag]], where each file was read as an UNSPLITTABLE unit
-    * (`multiLine=true`), so a file's rows are contiguous in one
-    * partition in input order and `monotonically_increasing_id` is
-    * order-consistent with in-file position. Shared by the batch
-    * multi-file reader and the streaming micro-batch ingest — identity
-    * = (lexical file path order, row order within file), independent
-    * of partition layout.
+  /** Format-dispatching source reader (the "universal importer"
+    * surface): csv is the reference's path; json/parquet/orc sources are
+    * normalized to all-string columns so the same lexical validation
+    * pipeline applies regardless of the wire format.
+    *
+    * `fileAware=true` (csv only) mints layout-independent multi-file
+    * ids via [[readPathFileAware]]. Unsupported format+fileAware
+    * combinations throw rather than silently handing back
+    * layout-dependent ids the caller asked to avoid.
     */
-  def mintFileAwareIds(tagged: DataFrame, dataCols: Seq[String]): DataFrame = {
-    val withSeq = tagged.withColumn("_seq", monotonically_increasing_id())
-    val inFileW = Window.partitionBy(col(FileTag)).orderBy(col("_seq"))
-    val withIn = withSeq.withColumn("_in_file", row_number().over(inFileW).cast("long"))
-    val baseW = Window.orderBy(col(FileTag))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = withIn.groupBy(col(FileTag)).agg(count(lit(1)).as("_n"))
-      .withColumn("_base", coalesce(sum(col("_n")).over(baseW), lit(0L)))
-      .select(col(FileTag), col("_base"))
-    withIn.join(broadcast(bases), FileTag)
-      .withColumn(RowId, col("_base") + col("_in_file"))
-      .select(dataCols.map(col) :+ col(RowId): _*)
+  def read(spark: SparkSession, spec: EntitySpec, fileAware: Boolean = false): DataFrame =
+    spec.format match {
+      case "csv" if fileAware => readPathFileAware(spark, spec.source)
+      case other if fileAware =>
+        throw new IllegalArgumentException(
+          s"file_aware row ids are only supported for csv sources (entity '${spec.name}' has format '$other')")
+      case "csv" => readPath(spark, spec.source)
+      case "json" | "parquet" | "orc" =>
+        val raw = spark.read.format(spec.format).load(spec.source)
+        withPartitionRowIds(raw.select(raw.columns.map(c => col(c).cast("string").as(c)): _*))
+      case other =>
+        throw new IllegalArgumentException(s"unsupported source format '$other' for entity '${spec.name}'")
+    }
+
+  def readPath(spark: SparkSession, path: String): DataFrame =
+    withPartitionRowIds(csvReader(spark).csv(path))
+
+  /** Multi-file CSV read with FILE-AWARE dense 1-based `_row_id`:
+    * identity = (file path order, row order within file), so
+    * keep-first/keep-last dedup is reproducible no matter how Spark
+    * parallelizes the read — the property SURVEY §7.4(1) asks for at
+    * the 100 TB multi-file scale, where partition-order ids would
+    * depend on partition layout.
+    *
+    * `multiLine=true` makes each CSV file a single unsplittable read
+    * unit, so a file's rows are contiguous in one partition in input
+    * order, and the mint groups by the file tag: a file's ids start
+    * after all rows of the files before it.
+    *
+    * Files are ordered by lexical path (name multi-part inputs
+    * part-00000, part-00001, … as writers already do).
+    */
+  def readPathFileAware(spark: SparkSession, path: String): DataFrame = {
+    val raw = csvReader(spark).option("multiLine", "true").csv(path)
+    val tagged = raw
+      .select(raw.columns.map(col) :+ col("_metadata.file_path").as(FileTag): _*)
+    mintFileAwareIds(tagged, raw.columns.toSeq)
   }
+
+  /** Mint file-aware ids over a frame tagged with [[FileTag]], where
+    * each file was read as an UNSPLITTABLE unit (`multiLine=true`).
+    * Shared by the batch multi-file reader and the streaming
+    * micro-batch ingest — identity = (lexical file path order, row
+    * order within file), independent of partition layout.
+    */
+  def mintFileAwareIds(tagged: DataFrame, dataCols: Seq[String]): DataFrame =
+    mintRowIds(tagged, col(FileTag), dataCols)
+
+  private def csvReader(spark: SparkSession) =
+    spark.read.option("header", "true").option("mode", "PERMISSIVE")
+
+  private def withPartitionRowIds(df: DataFrame): DataFrame =
+    mintRowIds(df, spark_partition_id(), df.columns.toSeq)
+
+  /** The one row-id mint: `_row_id` = the row's 1-based position in
+    * (group key order, position within group), returned over
+    * `dataCols :+ _row_id`. Each `key` group's rows must be contiguous,
+    * in input order, in one partition, so `monotonically_increasing_id`
+    * minus the group's first id is the in-group offset.
+    *
+    * One small aggregate job collects each group's count and first id;
+    * the key-ordered counts sum into bases, broadcast-joined back on the
+    * key (one hash lookup per row).
+    *
+    * The offsets are computed eagerly against the scan's partition
+    * layout, which is a function of the input files, the
+    * `spark.sql.files.*` split settings and the default parallelism;
+    * keep those fixed until the frame's last action (or persist it).
+    */
+  private def mintRowIds(df: DataFrame, key: Column, dataCols: Seq[String]): DataFrame = {
+    val Seq(g, seq, off) = Seq("_g", "_seq", "_offset").map(freshName(_, df.columns))
+    val keyed = df.select(col("*"), key.as(g), monotonically_increasing_id().as(seq))
+    // one row per group, sorted in one task in Spark's own key order
+    // (file paths byte-wise)
+    val groups = keyed.groupBy(g).agg(count(lit(1)), min(seq))
+      .coalesce(1).sortWithinPartitions(g).collect()
+    val offsets = groups.zip(groups.scanLeft(0L)(_ + _.getLong(1)))
+      .map { case (r, base) => Row(r.get(0), base - r.getLong(2) + 1) }
+    val table = df.sparkSession.createDataFrame(java.util.Arrays.asList(offsets: _*),
+      StructType(Seq(keyed.schema(g), StructField(off, LongType))))
+    keyed.join(broadcast(table), Seq(g), "left")
+      .select(dataCols.map(c => col(SqlIdent.quote(c))) :+ (col(seq) + col(off)).as(RowId): _*)
+  }
+
+  /** `base` plus `_`s until no name in `taken` matches it, ignoring case as Spark does. */
+  private def freshName(base: String, taken: Seq[String]): String =
+    Iterator.iterate(base)(_ + "_").find(n => !taken.exists(_.equalsIgnoreCase(n))).get
 }

@@ -77,37 +77,77 @@ class DedupSpec extends SparkSpec {
   }
 
   // SURVEY §7.4(1): file-aware row identity must make keep-first/last
-  // over a multi-file ingest pick the same rows as the single-file read
+  // over a multi-file ingest pick the same rows as the single-file read.
+  // Checked across scan layouts: one file in one partition, the same
+  // file split over several partitions, one partition per file, and
+  // all files packed into one partition.
   test("file-aware _row_id: multi-file read matches single-file dedup") {
     import graft.ingest.CsvIngest
     import java.nio.file.{Files, Paths}
     val lines = Fixtures.employeesCsv.split("\n").toSeq
     val header = lines.head
-    val rows = lines.tail
+    // 60 copies of the fixture with employee ids shifted per copy, so
+    // each copy keeps the fixture's duplicates: ~46 KB, enough for the
+    // single file to split at a 16 KB partition size
+    val rows = (0 until 60).flatMap { copy =>
+      lines.tail.map { l =>
+        val f = l.split(",", -1)
+        f.updated(1, (f(1).toLong + 1000L * copy).toString).mkString(",")
+      }
+    }
     val singleDir = tmpDir("rowid-single")
     Files.write(Paths.get(singleDir, "part-00000.csv"),
       (header +: rows).mkString("\n").getBytes)
     val multiDir = tmpDir("rowid-multi")
-    val chunks = Seq(rows.slice(0, 5), rows.slice(5, 10), rows.slice(10, rows.size))
+    val chunks = Seq(rows.slice(0, 250), rows.slice(250, 600), rows.slice(600, rows.size))
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       Files.write(Paths.get(multiDir, f"part-$i%05d.csv"),
         (header +: chunk).mkString("\n").getBytes)
     }
 
-    val single = CsvIngest.readPath(spark, singleDir, dense = true)
-    val multi = CsvIngest.readPathFileAware(spark, multiDir)
-    // identical (row content, _row_id) assignments regardless of layout
-    val cols = single.columns.sorted.map(col)
-    assert(multi.columns.sorted.toSeq == single.columns.sorted.toSeq)
-    assert(multi.select(cols: _*).collect().toSet ==
-      single.select(cols: _*).collect().toSet)
+    val fileConfs = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum")
+    // ingest under the given file-split confs and materialize everything
+    // the assertions need (scan partitions, rows in id order, dedup
+    // picks) before the confs are restored
+    def ingest(dir: String, fileAware: Boolean, confs: (String, String)*) = {
+      val prev = fileConfs.map(k => k -> spark.conf.getOption(k))
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val df =
+          if (fileAware) CsvIngest.readPathFileAware(spark, dir) else CsvIngest.readPath(spark, dir)
+        val partitions = df.select(spark_partition_id()).distinct().count()
+        val ordered = df.orderBy(CsvIngest.RowId).collect().toSeq
+        val picks = Seq("first", "last").map { res =>
+          Dedup(df, Seq(Seq("employee_id", "company_id")), res)
+            .survivors.select("employee_id", "email").as[(String, String)].collect().toSet
+        }
+        (df.columns.toSeq, partitions, ordered, picks)
+      } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
 
-    // keep-first and keep-last pick the same physical rows either way
-    for (res <- Seq("first", "last")) {
-      def picks(df: org.apache.spark.sql.DataFrame) =
-        Dedup(df, Seq(Seq("employee_id", "company_id")), res)
-          .survivors.select("employee_id", "email").as[(String, String)].collect().toSet
-      assert(picks(multi) == picks(single), s"resolution=$res")
+    val layouts = Seq(
+      "single file, one partition" -> ingest(singleDir, fileAware = false),
+      "single file, split" -> ingest(singleDir, fileAware = false,
+        "spark.sql.files.maxPartitionBytes" -> "16384"),
+      "multi-file, one partition per file" -> ingest(multiDir, fileAware = true),
+      "multi-file, packed into one partition" -> ingest(multiDir, fileAware = true,
+        "spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1"))
+    val partitions = layouts.map { case (name, l) => name -> l._2 }.toMap
+    assert(partitions("single file, one partition") == 1)
+    assert(partitions("single file, split") > 1)
+    assert(partitions("multi-file, one partition per file") == 3)
+    assert(partitions("multi-file, packed into one partition") == 1)
+
+    val expectedCols = header.split(",").toSeq :+ CsvIngest.RowId
+    val singlePicks = layouts.head._2._4
+    for ((name, (cols, _, ordered, picks)) <- layouts) {
+      assert(cols == expectedCols, name)
+      // _row_id is 1..n in input order
+      assert(ordered.map(_.getAs[Long](CsvIngest.RowId)) == (1L to rows.size.toLong), name)
+      assert(ordered.map(_.toSeq.init.mkString(",")) == rows, name)
+      // keep-first and keep-last pick the same physical rows either way
+      assert(picks == singlePicks, name)
     }
   }
 }

@@ -133,6 +133,28 @@ class PipelineSpec extends SparkSpec {
       graft.ingest.CsvIngest.read(spark, badSpec, fileAware = true)
     }
     assert(ex.getMessage.contains("only supported for csv"))
+
+    // a header-only csv has no rows to mint ids for: plain and
+    // file-aware reads both yield an empty frame, not an exception.
+    // Input columns named like the mint's helper columns pass through
+    // as data.
+    val headerOnlyDir = s"$dir/headeronly"
+    Files.createDirectories(Paths.get(headerOnlyDir))
+    Files.write(Paths.get(headerOnlyDir, "part-00000.csv"), s"${lines.head},_g,_seq".getBytes)
+    val headerOnly = cfg.entity("employees").copy(source = headerOnlyDir)
+    val clashDir = s"$dir/clash"
+    Files.createDirectories(Paths.get(clashDir))
+    Files.write(Paths.get(clashDir, "part-00000.csv"), "id,_g,_SEQ,_offset\na,x,y,z\nb,u,v,w".getBytes)
+    val clash = cfg.entity("employees").copy(source = clashDir)
+    for (fileAware <- Seq(false, true)) {
+      val df = graft.ingest.CsvIngest.read(spark, headerOnly, fileAware = fileAware)
+      assert(df.columns.toSeq.takeRight(3) == Seq("_g", "_seq", "_row_id"), s"fileAware=$fileAware")
+      assert(df.count() == 0, s"fileAware=$fileAware")
+      val ids = graft.ingest.CsvIngest.read(spark, clash, fileAware = fileAware)
+      assert(ids.columns.toSeq == Seq("id", "_g", "_SEQ", "_offset", "_row_id"))
+      assert(ids.orderBy("_row_id").collect().map(_.toSeq).toSeq ==
+        Seq(Seq("a", "x", "y", "z", 1L), Seq("b", "u", "v", "w", 2L)), s"fileAware=$fileAware")
+    }
   }
 
   test("alias referencing unknown field skips that projection only") {

@@ -72,9 +72,21 @@ class PlanAuditSpec extends SparkSpec {
     // is 20 rows by construction at ANY scale)
     "q165_knn_classify_sampled", "q166_mrl_recall_sampled")
 
+  // every query's executed plan, built once and shared by the audits.
+  // Plan strings truncate metadata at maxMetadataStringLength (100);
+  // it is raised while the plans are built and printed so the full
+  // ReadSchema is visible to the pruning audits' regex
+  private lazy val plans: Seq[(String, String)] = {
+    val prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, sfDir).queryExecution.executedPlan.toString
+    }
+    finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+  }
+
   test("no query plans a CartesianProduct; nested-loop joins only where intended") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+    val offenders = plans.flatMap { case (name, plan) =>
       val cartesian = plan.contains("CartesianProduct")
       val unexpectedBnl =
         plan.contains("BroadcastNestedLoopJoin") && !bnlAllowed.contains(name)
@@ -86,53 +98,40 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("lineitem scans prune columns (no SELECT * of the fact table)") {
-    // plan strings truncate metadata at maxMetadataStringLength (100);
-    // raise it so the full ReadSchema is visible to the regex below
-    val prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    try {
-      val schemaRe = "ReadSchema: struct<([^>]*)>".r
-      val wide = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        // count columns only on the LINEITEM scan's own line — other
-        // tables' scans in the same plan must not be attributed to it
-        val lineitemReads = plan.linesIterator
-          .filter(_.contains("lineitem.parquet"))
-          .flatMap(l => schemaRe.findFirstMatchIn(l))
-          .map(m => m.group(1).count(_ == ',') + 1)
-          .toSeq
-        if (lineitemReads.exists(_ >= 11)) Some(name) else None
-      }
-      assert(wide.isEmpty, s"queries scanning all lineitem columns: $wide")
-      // the guard must actually see schemas: q01 reads lineitem, so at
-      // least one un-truncated lineitem ReadSchema must have matched
-      val q01Plan = SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(q01Plan.linesIterator.exists(l =>
-        l.contains("lineitem.parquet") && schemaRe.findFirstMatchIn(l).isDefined),
-        "self-check failed: lineitem ReadSchema not visible to the audit")
-    } finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+    val schemaRe = "ReadSchema: struct<([^>]*)>".r
+    val wide = plans.flatMap { case (name, plan) =>
+      // count columns only on the LINEITEM scan's own line — other
+      // tables' scans in the same plan must not be attributed to it
+      val lineitemReads = plan.linesIterator
+        .filter(_.contains("lineitem.parquet"))
+        .flatMap(l => schemaRe.findFirstMatchIn(l))
+        .map(m => m.group(1).count(_ == ',') + 1)
+        .toSeq
+      if (lineitemReads.exists(_ >= 11)) Some(name) else None
+    }
+    assert(wide.isEmpty, s"queries scanning all lineitem columns: $wide")
+    // the guard must actually see schemas: q01 reads lineitem, so at
+    // least one un-truncated lineitem ReadSchema must have matched
+    val q01Plan = plans.toMap.apply("q01_pricing_summary")
+    assert(q01Plan.linesIterator.exists(l =>
+      l.contains("lineitem.parquet") && schemaRe.findFirstMatchIn(l).isDefined),
+      "self-check failed: lineitem ReadSchema not visible to the audit")
   }
 
   test("documents scans prune columns (the 100 TB corpus table)") {
-    val prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    try {
-      val schemaRe = "ReadSchema: struct<([^>]*)>".r
-      // documents has 5 columns (doc_id, text, lang, source, n_chars);
-      // a scan reading all 5 for a query that uses fewer is a pruning
-      // regression — at 100 TB the text column alone dominates I/O, so
-      // queries not touching text must never read it
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        val docReads = plan.linesIterator
-          .filter(_.contains("documents.parquet"))
-          .flatMap(l => schemaRe.findFirstMatchIn(l))
-          .map(_.group(1)).toSeq
-        val wide = docReads.exists(s => s.count(_ == ',') + 1 >= 5)
-        if (wide) Some(name) else None
-      }
-      assert(offenders.isEmpty, s"queries scanning all documents columns: $offenders")
-    } finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+    val schemaRe = "ReadSchema: struct<([^>]*)>".r
+    // documents has 5 columns (doc_id, text, lang, source, n_chars);
+    // a scan reading all 5 for a query that uses fewer is a pruning
+    // regression — at 100 TB the text column alone dominates I/O, so
+    // queries not touching text must never read it
+    val offenders = plans.flatMap { case (name, plan) =>
+      val docReads = plan.linesIterator
+        .filter(_.contains("documents.parquet"))
+        .flatMap(l => schemaRe.findFirstMatchIn(l))
+        .map(_.group(1)).toSeq
+      val wide = docReads.exists(s => s.count(_ == ',') + 1 >= 5)
+      if (wide) Some(name) else None
+    }
+    assert(offenders.isEmpty, s"queries scanning all documents columns: $offenders")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.config.{EntitySpec, FieldSpec, ProjectionSpec, Settings}
-import graft.ingest.CsvIngest
 import graft.project.Projections
 import graft.sinks.Sinks
 import org.apache.spark.sql.functions._
@@ -56,15 +55,5 @@ class SinksProjectionsSpec extends SparkSpec {
     val path = Sinks.exportProjection(df, "j", dir, format = "json")
     assert(path.endsWith("exports/j.json"))
     assert(spark.read.json(path).count() == 2)
-  }
-
-  test("ordering-only row ids (dense=false) are order-consistent with input") {
-    val dir = tmpDir("ingest-mono")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/d.csv"),
-      "v\n" + (1 to 50).mkString("\n"))
-    val got = CsvIngest.readPath(spark, s"$dir/d.csv", dense = false)
-      .select($"v".cast("int"), col(CsvIngest.RowId))
-      .as[(Int, Long)].collect().sortBy(_._2).map(_._1)
-    assert(got.toSeq == (1 to 50)) // id order == input order, values sparse
   }
 }
