@@ -7,7 +7,8 @@ import graft.project.Projections
 import graft.rules.CustomRules
 import graft.sinks.Sinks
 import graft.validate.SchemaValidator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 import java.time.LocalDate
 
@@ -16,9 +17,13 @@ import java.time.LocalDate
   *   read CSV → schema validation (vectorized) → raw → dedup →
   *   custom rules → projections → CSV exports + error CSVs → summary
   *
-  * Stage boundaries that the reference materializes as DuckDB tables
-  * (raw/stage CTAS) become cache() points here — needed anyway because
-  * valid/error/dup splits each traverse the same parent.
+  * Each stage runs once. The reference materializes raw/stage as
+  * DuckDB tables (CTAS, main.py:90-95); here three frames are persisted:
+  * the validated input (read by the error and valid splits), the dedup
+  * survivors (read by the rule counts, the rule issue writes and the
+  * stage) and the stage, sorted by row id once for every projection.
+  * Every output is one write job, and the summary counts are the row
+  * counts those writes observe — no separate `count()` per split.
   *
   * Quirks kept for parity:
   *   - `custom_validation_mode == "stop"` also gates *schema* errors
@@ -44,22 +49,18 @@ object Pipeline {
       duplicates: Option[DataFrame],
       ruleIssues: Seq[CustomRules.RuleIssue],
       projections: Seq[Projections.ProjectionResult],
-      /** intermediates persisted by multi-key dedup / multi-rule runs */
+      /** every frame the run persisted: the validated input, the dedup
+        * survivors, the stage, the table projections and the multi-key
+        * dedup / multi-rule fold intermediates
+        */
       intermediateCaches: Seq[DataFrame] = Seq.empty) {
 
-    /** Release every DataFrame this run cached (stage barriers, table
-      * projections, fold intermediates) — call when done consuming the
-      * result in a long-lived session; a run-and-exit CLI doesn't
-      * strictly need to.
+    /** Release every DataFrame this run cached — call when done
+      * consuming the result in a long-lived session: a cache left
+      * behind would also serve its stale rows to the next run over the
+      * same source path.
       */
-    def unpersist(): Unit = {
-      stage.foreach(_.unpersist())
-      schemaErrors.unpersist()
-      duplicates.foreach(_.unpersist())
-      projections.foreach(_.df.unpersist())
-      intermediateCaches.foreach(_.unpersist())
-      ()
-    }
+    def unpersist(): Unit = intermediateCaches.foreach(_.unpersist())
   }
 
   def run(
@@ -72,70 +73,79 @@ object Pipeline {
 
     val spec0 = config.entity(entityName)
     val spec: EntitySpec = sourceOverride.fold(spec0)(src => spec0.copy(source = src))
-
-    // 1. ingest + 2. schema validation
-    val input = CsvIngest.read(spark, spec, fileAware = spec.settings.fileAware)
-    val vr = SchemaValidator.validate(input, spec.fields)
-    val schemaErrors = vr.errors.persist(StorageLevel.MEMORY_AND_DISK)
-    val schemaErrorCount = schemaErrors.count()
-    Sinks.saveErrors(schemaErrors, "schema_validation", entityName, outputDir)
-
-    // 3. raw table (materialization barrier, main.py:90-95) — persisted
-    // before the stop gate so the gate's totals come from the already
-    // computed valid/error frames instead of a second source scan.
-    val raw = vr.valid.persist(StorageLevel.MEMORY_AND_DISK)
-    val validRows = raw.count()
-
-    if (schemaErrorCount > 0 && spec.settings.customValidationMode == "stop") {
-      return PipelineResult(
-        PipelineSummary(validRows + schemaErrorCount, validRows, schemaErrorCount, 0, 0,
-          Map.empty, stoppedAtSchemaErrors = true),
-        None, schemaErrors, None, Seq.empty, Seq.empty,
-        intermediateCaches = Seq(raw))
+    // every frame this run persists; released here if the run fails
+    val cached = Seq.newBuilder[DataFrame]
+    def hold(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE) cached += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
     }
 
-    // 4. dedup raw → stage (main.py:97-159)
-    val dd = Dedup(raw, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
-    val duplicates = dd.removed.persist(StorageLevel.MEMORY_AND_DISK)
-    val duplicatesRemoved = duplicates.count()
-    if (duplicatesRemoved > 0)
-      Sinks.saveErrors(duplicates, "duplicates", entityName, outputDir)
+    try {
+      // 1. ingest + 2. schema validation. The validated frame is
+      // persisted for both splits; the input rows are counted once, as
+      // it is built by the error write, the first job over it.
+      val inputRows = Observation()
+      val input = CsvIngest.read(spark, spec, fileAware = spec.settings.fileAware)
+        .observe(inputRows, count(lit(1)).as("rows"))
+      val vr = SchemaValidator.validate(input, spec.fields)
+      hold(vr.flagged)
+      val schemaErrorRows = Sinks.saveErrors(vr.errors, "schema_validation", entityName, outputDir)
+      val totalRows = inputRows.get("rows").asInstanceOf[Long]
+      val validRows = totalRows - schemaErrorRows
 
-    // 5. custom rules (main.py:161-197); stop mode raises out of here
-    // after the issue capture, like the reference's ValueError.
-    val rr = CustomRules.execute(
-      dd.survivors, spec.rules, spec.settings.customValidationMode, asOf)
-    for (issue <- rr.issues)
-      Sinks.saveErrors(issue.invalidRows, s"custom_${issue.field}", entityName, outputDir)
+      // the stop gate needs only the counts the error write observed
+      if (schemaErrorRows > 0 && spec.settings.customValidationMode == "stop")
+        PipelineResult(
+          PipelineSummary(totalRows, validRows, schemaErrorRows, 0, 0,
+            Map.empty, stoppedAtSchemaErrors = true),
+          None, vr.errors, None, Seq.empty, Seq.empty, cached.result())
+      else {
+        // 3. raw (the valid split) + 4. dedup raw → stage (main.py:97-159)
+        val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
+        cached ++= dd.cached
+        val survivors = hold(dd.survivors)
+        val duplicateRowsRemoved = Sinks.saveErrors(dd.removed, "duplicates", entityName, outputDir)
 
-    val stage = rr.survivors.persist(StorageLevel.MEMORY_AND_DISK)
+        // 5. custom rules (main.py:161-197); stop mode raises out of here
+        // after the issue capture, like the reference's ValueError.
+        val rr = CustomRules.execute(
+          survivors, spec.rules, spec.settings.customValidationMode, asOf)
+        cached ++= rr.cached
+        for (issue <- rr.issues)
+          Sinks.saveErrors(issue.invalidRows, s"custom_${issue.field}", entityName, outputDir)
 
-    // 6. projections (user SQL over the stage view). The stage is
-    // sorted by _row_id BEFORE the id is dropped so projection output
-    // (and therefore the exports) comes out in input order, matching
-    // the reference's ROWID-ordered table scans (main.py:323). For
-    // plain SELECT projections the sort survives to the single-file
-    // writer; queries that aggregate define their own order, exactly
-    // as in the reference.
-    val projections = Projections.run(
-      spark, stage.orderBy(CsvIngest.RowId).drop(CsvIngest.RowId), spec)
+        // 6. projections (user SQL over the stage view). The stage is
+        // sorted by _row_id once, before it is persisted and before the
+        // id is dropped, so projection output (and therefore the
+        // exports) comes out in input order, matching the reference's
+        // ROWID-ordered table scans (main.py:323). For plain SELECT
+        // projections the order survives to the single-file writer;
+        // queries that aggregate define their own order, exactly as in
+        // the reference.
+        val stage = hold(rr.survivors.orderBy(CsvIngest.RowId))
+        val projections = Projections.run(spark, stage.drop(CsvIngest.RowId), spec)
+        cached ++= projections.map(_.df).filter(_.storageLevel != StorageLevel.NONE)
 
-    // 7. exports
-    for (p <- projections)
-      Sinks.exportProjection(p.df, p.spec.name, outputDir, format = spec.exportFormat)
+        // 7. exports
+        val projectionRows = projections.map { p =>
+          p.spec.name -> Sinks.exportProjection(p.df, p.spec.name, outputDir, format = spec.exportFormat)
+        }.toMap
 
-    val projectionRows = projections.map(p => p.spec.name -> p.df.count()).toMap
-
-    PipelineResult(
-      PipelineSummary(
-        totalRows = validRows + schemaErrorCount,
-        validRows = validRows,
-        schemaErrorRows = schemaErrorCount,
-        customInvalidRows = rr.totalInvalidRows,
-        duplicateRowsRemoved = duplicatesRemoved,
-        projectionRows = projectionRows,
-        stoppedAtSchemaErrors = false),
-      Some(stage), schemaErrors, Some(duplicates), rr.issues, projections,
-      intermediateCaches = dd.cached ++ rr.cached)
+        PipelineResult(
+          PipelineSummary(
+            totalRows = totalRows,
+            validRows = validRows,
+            schemaErrorRows = schemaErrorRows,
+            customInvalidRows = rr.totalInvalidRows,
+            duplicateRowsRemoved = duplicateRowsRemoved,
+            projectionRows = projectionRows,
+            stoppedAtSchemaErrors = false),
+          Some(stage), vr.errors, Some(dd.removed), rr.issues, projections, cached.result())
+      }
+    } catch {
+      case t: Throwable =>
+        cached.result().foreach(_.unpersist())
+        throw t
+    }
   }
 }

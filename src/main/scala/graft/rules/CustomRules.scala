@@ -94,7 +94,7 @@ object CustomRules {
         case None => () // unknown rule names are ignored, like the if-chain
         case Some(rule) =>
           val fail = rule.failPredicate(spec.field, spec.params, asOf)
-          if (rules.size > 1) {
+          if (rules.size > 1 && current.storageLevel == StorageLevel.NONE) {
             current = current.persist(StorageLevel.MEMORY_AND_DISK)
             cached += current
           }

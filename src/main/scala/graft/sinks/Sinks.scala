@@ -1,9 +1,9 @@
 package graft.sinks
 
 import graft.ingest.CsvIngest.RowId
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** CSV sinks matching the reference's output layout:
@@ -11,25 +11,32 @@ import scala.jdk.CollectionConverters._
   * `output/errors/{entity}_{type}_errors.csv` per error set
   * (main.py:367-399).
   *
+  * Each output is one write job, and each write returns the rows it
+  * wrote, counted on that job with an `Observation`, so callers need
+  * no separate `count()`.
+  *
   * `singleFile=true` reproduces the reference's one-file-per-projection
   * layout via coalesce(1) + rename — the right call for an export the
-  * size a config-driven import handles. At cluster scale flip it off:
-  * the writer then emits a standard sharded directory `{name}.csv/`
-  * with no single-node merge bottleneck.
+  * size a config-driven import handles. A frame carrying the row id
+  * (or `row`) is sorted inside that one partition, so the write needs
+  * no range-partition sample job or exchange. At cluster scale flip it
+  * off: the writer then emits a standard sharded directory `{name}.csv/`
+  * with no single-node merge bottleneck, globally ordered by `orderBy`.
   */
 object Sinks {
 
+  /** Writes `{outputDir}/exports/{name}.{format}`; returns the rows
+    * written.
+    */
   def exportProjection(df: DataFrame, name: String, outputDir: String,
-      singleFile: Boolean = true, format: String = "csv"): String = format match {
-    case "csv" =>
-      writeCsv(ordered(df), s"$outputDir/exports", s"$name.csv", singleFile)
-    case "json" =>
-      writeSingle(ordered(df), s"$outputDir/exports", s"$name.json", "json", singleFile)
+      singleFile: Boolean = true, format: String = "csv"): Long = format match {
+    case "csv" | "json" =>
+      write(ordered(df, singleFile), s"$outputDir/exports", s"$name.$format", format,
+        singleFile, keepEmpty = true)
     case "parquet" | "orc" =>
       // columnar exports are inherently sharded; no single-file contortion
-      val target = s"$outputDir/exports/$name.$format"
-      ordered(df).write.mode("overwrite").format(format).save(target)
-      target
+      write(ordered(df, singleFile = false), s"$outputDir/exports", s"$name.$format", format,
+        singleFile = false, keepEmpty = true)
     case other =>
       throw new IllegalArgumentException(s"unsupported export format '$other'")
   }
@@ -40,21 +47,22 @@ object Sinks {
     * structured error records (main.py:388-394); the internal
     * `_row_id` never reaches the file (the reference exports its `rn`
     * but not its ROWID).
+    *
+    * Returns the rows written. An empty error set leaves no file, like
+    * the reference, which writes only non-empty error lists.
     */
   def saveErrors(df: DataFrame, errorType: String, entity: String, outputDir: String,
-      singleFile: Boolean = true): Option[String] = {
-    if (df.isEmpty) None
-    else {
-      val flat = df.schema.find(_.name == "errors") match {
-        case Some(f) if f.dataType.typeName == "array" =>
-          df.withColumn("errors", concat_ws("; ", col("errors")))
-        case _ => df
-      }
-      val lead = Seq("row", "errors").filter(flat.columns.contains)
-      val rest = flat.columns.filterNot(c => lead.contains(c) || c == RowId)
-      val shaped = ordered(flat).select((lead ++ rest).map(col): _*)
-      Some(writeCsv(shaped, s"$outputDir/errors", s"${entity}_${errorType}_errors.csv", singleFile))
+      singleFile: Boolean = true): Long = {
+    val flat = df.schema.find(_.name == "errors") match {
+      case Some(f) if f.dataType.typeName == "array" =>
+        df.withColumn("errors", concat_ws("; ", col("errors")))
+      case _ => df
     }
+    val lead = Seq("row", "errors").filter(flat.columns.contains)
+    val rest = flat.columns.filterNot(c => lead.contains(c) || c == RowId)
+    val shaped = ordered(flat, singleFile).select((lead ++ rest).map(col): _*)
+    write(shaped, s"$outputDir/errors", s"${entity}_${errorType}_errors.csv", "csv",
+      singleFile, keepEmpty = false)
   }
 
   /** Hive-style partitioned dataset sink (the training-shard layout:
@@ -116,35 +124,43 @@ object Sinks {
     dir
   }
 
-  private def ordered(df: DataFrame): DataFrame =
-    if (df.columns.contains(RowId)) df.orderBy(col(RowId))
-    else if (df.columns.contains("row")) df.orderBy(col("row"))
-    else df
-
-  private def writeCsv(df: DataFrame, dir: String, fileName: String, singleFile: Boolean): String =
-    writeSingle(df, dir, fileName, "csv", singleFile)
-
-  private def writeSingle(df: DataFrame, dir: String, fileName: String,
-      format: String, singleFile: Boolean): String = {
-    Files.createDirectories(Paths.get(dir))
-    val target = s"$dir/$fileName"
-    def writer(d: DataFrame) = {
-      val w = d.write.mode("overwrite")
-      if (format == "csv") w.option("header", "true") else w
-    }
-    if (!singleFile) {
-      writer(df).format(format).save(target)
-      target
-    } else {
-      val tmp = s"$dir/.tmp_$fileName"
-      writer(df.coalesce(1)).format(format).save(tmp)
-      val part = Files.list(Paths.get(tmp)).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file written under $tmp"))
-      Files.move(part, Paths.get(target), StandardCopyOption.REPLACE_EXISTING)
-      // clean the temp dir (part metadata, _SUCCESS)
-      Files.walk(Paths.get(tmp)).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      target
+  /** `df` in row-id (else `row`) order: sorted inside one partition
+    * for a single-file write, globally sorted otherwise.
+    */
+  private def ordered(df: DataFrame, singleFile: Boolean): DataFrame = {
+    val one = if (singleFile) df.coalesce(1) else df
+    Seq(RowId, "row").find(df.columns.contains).fold(one) { key =>
+      if (singleFile) one.sortWithinPartitions(col(key)) else one.orderBy(col(key))
     }
   }
+
+  /** Writes `df` to `dir/fileName` and returns the rows written. A
+    * single-file write goes to a temp directory whose one part file is
+    * then moved to the target; with `keepEmpty=false` a write of no
+    * rows leaves nothing behind, not even a directory it created.
+    */
+  private def write(df: DataFrame, dir: String, fileName: String, format: String,
+      singleFile: Boolean, keepEmpty: Boolean): Long = {
+    val fresh = Files.notExists(Paths.get(dir))
+    val target = Paths.get(dir, fileName)
+    val out = if (singleFile) Paths.get(dir, s".tmp_$fileName") else target
+    val written = Observation()
+    val w = df.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").format(format)
+    (if (format == "csv") w.option("header", "true") else w).save(out.toString)
+    val rows = written.get("rows").asInstanceOf[Long]
+    if (singleFile && (rows > 0 || keepEmpty)) {
+      val part = Files.list(out).iterator().asScala
+        .find(_.getFileName.toString.startsWith("part-"))
+        .getOrElse(throw new IllegalStateException(s"no part file written under $out"))
+      Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
+    }
+    // the temp dir (part metadata, _SUCCESS), or an empty sharded output
+    // and the directory the write created for it
+    if (singleFile || (rows == 0 && !keepEmpty)) deleteTree(out)
+    if (rows == 0 && !keepEmpty && fresh) Files.deleteIfExists(Paths.get(dir))
+    rows
+  }
+
+  private def deleteTree(p: Path): Unit =
+    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
 }

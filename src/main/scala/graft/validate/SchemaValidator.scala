@@ -5,6 +5,7 @@ import graft.ingest.CsvIngest.RowId
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.VectorMap
 
 /** Schema validation as an expression compiler.
   *
@@ -27,7 +28,11 @@ object SchemaValidator {
       valid: DataFrame,
       /** rows with >=1 error: row (1-based id), errors array, original string data */
       errors: DataFrame,
-      fields: Seq[FieldSpec])
+      fields: Seq[FieldSpec],
+      /** the input plus the `_errors` array; both splits filter it, so a
+        * caller that reads both persists it to run the checks once
+        */
+      flagged: DataFrame)
 
   /** Pydantic lax-mode-ish parse acceptance for string input. */
   private val IntPattern = "^[+-]?\\d+(\\.0*)?$"
@@ -89,9 +94,10 @@ object SchemaValidator {
     // Fields declared but absent from the CSV behave as all-null
     // (Pydantic sees a missing key); extra CSV columns pass through
     // untouched (SURVEY.md §1.2 — Pydantic ignores extras).
-    val withDeclared = fields.foldLeft(fillDefaults(input, fields)) { (df, f) =>
-      if (df.columns.contains(f.name)) df else df.withColumn(f.name, lit(null).cast(StringType))
-    }
+    val filled = fillDefaults(input, fields)
+    val withDeclared = filled.withColumns(VectorMap.from(
+      fields.filterNot(f => filled.columns.contains(f.name))
+        .map(f => f.name -> lit(null).cast(StringType))))
     val msgs: Seq[Column] = fields.flatMap(fieldChecks).map {
       case (failPred, msg) => when(failPred, lit(msg))
     }
@@ -110,24 +116,23 @@ object SchemaValidator {
     val valid = flagged
       .filter(size(col(ErrorsCol)) === 0)
       .drop(ErrorsCol)
-    val typed = fields.foldLeft(valid) { (df, f) =>
+    val typed = valid.withColumns(fields.flatMap { f =>
+      val c = col(f.name)
       val target = sparkType(f.typeName)
-      if (target == StringType) df
+      if (target == StringType) None
       else if (target == BooleanType)
         // accept 0/1 spellings that a plain string->boolean cast rejects
-        df.withColumn(f.name,
-          when(col(f.name).isNull, lit(null).cast(BooleanType))
-            .otherwise(col(f.name).rlike("(?i)^(true|1)$")))
+        Some(f.name -> when(c.isNull, lit(null).cast(BooleanType))
+          .otherwise(c.rlike("(?i)^(true|1)$")))
       else if (target == LongType)
         // direct bigint cast first (lossless for any 64-bit value);
         // the double path only for the ".0"-suffixed spellings
         // IntPattern admits, which the ANSI string→bigint cast rejects
-        df.withColumn(f.name,
-          coalesce(
-            expr(s"try_cast(`${f.name}` AS BIGINT)"),
-            expr(s"try_cast(`${f.name}` AS DOUBLE)").cast(LongType)))
-      else df.withColumn(f.name, expr(s"try_cast(`${f.name}` AS DOUBLE)"))
-    }
-    ValidationResult(typed, errors, fields)
+        Some(f.name -> coalesce(
+          expr(s"try_cast(`${f.name}` AS BIGINT)"),
+          expr(s"try_cast(`${f.name}` AS DOUBLE)").cast(LongType)))
+      else Some(f.name -> expr(s"try_cast(`${f.name}` AS DOUBLE)"))
+    }.toMap)
+    ValidationResult(typed, errors, fields, flagged)
   }
 }

@@ -2,7 +2,13 @@ package graft
 
 import graft.config.PipelineConfig
 import graft.pipeline.Pipeline
+import graft.pipeline.Pipeline.PipelineSummary
+import graft.rules.ValidationStopException
+import graft.sinks.Sinks
+import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDate
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end: full pipeline on the self-authored employees
@@ -10,7 +16,11 @@ import scala.jdk.CollectionConverters._
   * duplicates (keep-last), 2 age_gte(35) failures skipped, 2 table
   * projections exported as single CSVs.
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with TimeLimits {
+
+  // an observed count whose node never runs would block forever:
+  // interrupt the test thread instead
+  implicit val signaler: Signaler = ThreadSignaler
 
   private lazy val run = {
     val dir = tmpDir("pipeline")
@@ -167,5 +177,142 @@ class PipelineSpec extends SparkSpec {
       spark, PipelineConfig.load(cfgPath), "employees", s"$dir/output",
       asOf = LocalDate.parse("2026-01-01"))
     assert(r.projections.map(_.spec.name) == Seq("personal_data"))
+  }
+
+  private val goldenAsOf = LocalDate.parse("2026-01-01")
+
+  /** The committed golden config with the employees source pointed at
+    * a private copy of the golden employees CSV (`csvLines` rewrites
+    * its lines, `yamlEdit` the config); returns (config, csv path).
+    */
+  private def goldenCopy(dir: String, csvLines: Seq[String] => Seq[String] = identity,
+      yamlEdit: String => String = identity): (PipelineConfig, Path) = {
+    val golden = new java.io.File(getClass.getResource("/golden").toURI).getAbsolutePath
+    val csv = Paths.get(dir, "employees.csv")
+    writeLines(csv,
+      csvLines(Files.readAllLines(Paths.get(s"$golden/input_data/employees.csv")).asScala.toSeq))
+    val cfg = Paths.get(dir, "config.yaml")
+    Files.writeString(cfg, yamlEdit(Files.readString(Paths.get(s"$golden/config.yaml"))
+      .replaceAll("source: .*/employees.csv", s"source: $csv")))
+    (PipelineConfig.load(cfg.toString), csv)
+  }
+
+  private def writeLines(p: Path, lines: Seq[String]): Unit =
+    Files.writeString(p, lines.mkString("", "\n", "\n"))
+
+  /** Paths under `out`, relative to it, of every error CSV and every
+    * leftover temp directory, and the errors directory itself.
+    */
+  private def errorFilesAndTemps(out: String): Set[String] =
+    if (!Files.exists(Paths.get(out))) Set.empty
+    else Files.walk(Paths.get(out)).iterator().asScala
+      .map(p => Paths.get(out).relativize(p).toString)
+      .filter(p => p.startsWith("errors") || p.contains(".tmp_")).toSet
+
+  test("a re-run over a rewritten source reads its new rows; unpersist releases every cache") {
+    val dir = tmpDir("pipeline-rerun")
+    val (cfg, csv) = goldenCopy(dir)
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val first = Pipeline.run(spark, cfg, "employees", s"$dir/out1", goldenAsOf)
+    assert(first.summary.totalRows == 12)
+    first.unpersist()
+    assert(cacheManager.isEmpty, "the first run left a cache behind")
+
+    // same path, header + 3 data rows: a cache left by the first run
+    // would still answer with its 12
+    writeLines(csv, Files.readAllLines(csv).asScala.toSeq.take(4))
+    val second = Pipeline.run(spark, cfg, "employees", s"$dir/out2", goldenAsOf)
+    assert(second.summary.totalRows == 3)
+    assert(second.summary.validRows == 3)
+    second.unpersist()
+    assert(cacheManager.isEmpty, "the second run left a cache behind")
+
+    // the schema-error stop path returns early; its result releases
+    // the validated frame too
+    val stopDir = tmpDir("pipeline-rerun-stop")
+    val (stopCfg, _) = Fixtures.materialize(stopDir)
+    Files.writeString(Paths.get(stopCfg), Files.readString(Paths.get(stopCfg))
+      .replace("custom_validation_mode: \"skip\"", "custom_validation_mode: \"stop\""))
+    val stopped = Pipeline.run(spark, PipelineConfig.load(stopCfg), "employees",
+      s"$stopDir/out", goldenAsOf)
+    assert(stopped.summary.stoppedAtSchemaErrors)
+    assert(stopped.summary.totalRows == 14 && stopped.summary.schemaErrorRows == 2)
+    stopped.unpersist()
+    assert(cacheManager.isEmpty, "the schema-error stop path left a cache behind")
+
+    // a failing `stop` rule raises out of the run; the run releases
+    // what it persisted before rethrowing
+    val (ruleStop, _) = goldenCopy(tmpDir("pipeline-rerun-rulestop"),
+      yamlEdit = _.replace("custom_validation_mode: skip", "custom_validation_mode: stop"))
+    intercept[ValidationStopException] {
+      Pipeline.run(spark, ruleStop, "employees", s"$dir/out3", goldenAsOf)
+    }
+    assert(cacheManager.isEmpty, "the rule stop path left a cache behind")
+  }
+
+  test("observed counts return on empty error sets and empty inputs, leaving no empty files") {
+    def check(name: String, csvLines: Seq[String] => Seq[String], yamlEdit: String => String,
+        want: PipelineSummary, wantErrorFiles: Set[String]): Unit = {
+      val dir = tmpDir(s"pipeline-edge-$name")
+      val (cfg, _) = goldenCopy(dir, csvLines, yamlEdit)
+      val out = s"$dir/out"
+      failAfter(Span(120, Seconds)) {
+        val r = Pipeline.run(spark, cfg, "employees", out, goldenAsOf)
+        try {
+          assert(r.summary == want, name)
+          // called directly, saveErrors returns the same counts; an
+          // empty set writes nothing
+          assert(Sinks.saveErrors(r.schemaErrors, "check_schema", "employees", out) ==
+            want.schemaErrorRows, name)
+          r.duplicates.foreach { d =>
+            assert(Sinks.saveErrors(d, "check_duplicates", "employees", out) ==
+              want.duplicateRowsRemoved, name)
+          }
+        } finally r.unpersist()
+      }
+      assert(errorFilesAndTemps(out) == wantErrorFiles, name)
+    }
+    val customErrors = Set("errors", "errors/employees_custom_birthday_on_errors.csv")
+    // the golden import itself: no schema errors
+    check("no-schema-errors", identity, identity,
+      PipelineSummary(12, 12, 0, 4, 2, Map("personal_data" -> 6, "contract_data" -> 6), false),
+      customErrors ++ Set("errors/employees_duplicates_errors.csv",
+        "errors/employees_check_duplicates_errors.csv"))
+    // the two trailing rows repeat earlier keys: without them nothing is a duplicate
+    check("no-duplicates", _.dropRight(2), identity,
+      PipelineSummary(10, 10, 0, 4, 0, Map("personal_data" -> 6, "contract_data" -> 6), false),
+      customErrors)
+    // no key sets: the removed frame is Dedup's empty-RDD frame
+    check("no-unique-composite", identity,
+      _.replaceAll("unique_composite:\\n(\\s+-.*\\n)+", "unique_composite: []\n"),
+      PipelineSummary(12, 12, 0, 5, 0, Map("personal_data" -> 7, "contract_data" -> 7), false),
+      customErrors)
+    check("header-only", _.take(1), identity,
+      PipelineSummary(0, 0, 0, 0, 0, Map("personal_data" -> 0, "contract_data" -> 0), false),
+      Set.empty)
+  }
+
+  test("a warm golden employees import runs a pinned number of Spark jobs") {
+    val dir = tmpDir("pipeline-jobs")
+    val (cfg, _) = goldenCopy(dir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // warm-up: codegen and first-use class loading stay out of the count
+    Pipeline.run(spark, cfg, "employees", s"$dir/warm", goldenAsOf).unpersist()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf).unpersist()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val Pinned = 20
+    assert(jobs.get == Pinned,
+      s"a warm golden employees Pipeline.run ran ${jobs.get} Spark jobs, pinned at $Pinned: " +
+        "an eager action was added or removed. Update this pin and CHANGES.md together.")
   }
 }
