@@ -22,8 +22,11 @@ import java.time.LocalDate
   * the validated input (read by the error and valid splits), the dedup
   * survivors (read by the rule counts, the rule issue writes and the
   * stage) and the stage, sorted by row id once for every projection.
-  * Every output is one write job, and the summary counts are the row
-  * counts those writes observe — no separate `count()` per split.
+  * The validated input is built by one parallel job that also counts
+  * the input rows. Every output is one write job (a single-file one
+  * runs in one task, see [[graft.sinks.Sinks]]), and the other summary
+  * counts are the row counts those writes observe — no separate
+  * `count()` per split.
   *
   * Quirks kept for parity:
   *   - `custom_validation_mode == "stop"` also gates *schema* errors
@@ -45,7 +48,13 @@ object Pipeline {
   final case class PipelineResult(
       summary: PipelineSummary,
       stage: Option[DataFrame],
+      /** a filter over the persisted validated input, not itself
+        * persisted: each action on it re-runs that filter
+        */
       schemaErrors: DataFrame,
+      /** the dedup's removed rows, a lazy plan: each action on it re-runs
+        * the dedup window (and a multi-key fold) over the valid rows
+        */
       duplicates: Option[DataFrame],
       ruleIssues: Seq[CustomRules.RuleIssue],
       projections: Seq[Projections.ProjectionResult],
@@ -82,18 +91,19 @@ object Pipeline {
 
     try {
       // 1. ingest + 2. schema validation. The validated frame is
-      // persisted for both splits; the input rows are counted once, as
-      // it is built by the error write, the first job over it.
-      val inputRows = Observation()
+      // persisted for both splits and built by a no-op write that counts
+      // the input rows: one job over every input partition in parallel,
+      // not inside the single task of the error file's write.
       val input = CsvIngest.read(spark, spec, fileAware = spec.settings.fileAware)
-        .observe(inputRows, count(lit(1)).as("rows"))
       val vr = SchemaValidator.validate(input, spec.fields)
-      hold(vr.flagged)
-      val schemaErrorRows = Sinks.saveErrors(vr.errors, "schema_validation", entityName, outputDir)
+      val inputRows = Observation()
+      hold(vr.flagged).observe(inputRows, count(lit(1)).as("rows"))
+        .write.format("noop").mode("overwrite").save()
       val totalRows = inputRows.get("rows").asInstanceOf[Long]
+      val schemaErrorRows = Sinks.saveErrors(vr.errors, "schema_validation", entityName, outputDir)
       val validRows = totalRows - schemaErrorRows
 
-      // the stop gate needs only the counts the error write observed
+      // the stop gate needs only the counts taken so far
       if (schemaErrorRows > 0 && spec.settings.customValidationMode == "stop")
         PipelineResult(
           PipelineSummary(totalRows, validRows, schemaErrorRows, 0, 0,

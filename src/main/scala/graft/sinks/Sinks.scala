@@ -19,9 +19,14 @@ import scala.jdk.CollectionConverters._
   * layout via coalesce(1) + rename — the right call for an export the
   * size a config-driven import handles. A frame carrying the row id
   * (or `row`) is sorted inside that one partition, so the write needs
-  * no range-partition sample job or exchange. At cluster scale flip it
-  * off: the writer then emits a standard sharded directory `{name}.csv/`
-  * with no single-node merge bottleneck, globally ordered by `orderBy`.
+  * no range-partition sample job or exchange. The write then runs in
+  * one task, together with whatever part of `df`'s plan after its last
+  * exchange or cache is not yet computed: build an expensive input in
+  * parallel first (persist it and run a job over it, as
+  * [[graft.pipeline.Pipeline]] does for the validated input). At
+  * cluster scale flip it off: the writer then emits a standard sharded
+  * directory `{name}.csv/` with no single-node merge bottleneck,
+  * globally ordered by `orderBy`.
   */
 object Sinks {
 

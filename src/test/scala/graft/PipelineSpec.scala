@@ -310,7 +310,7 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf).unpersist()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    val Pinned = 20
+    val Pinned = 21
     assert(jobs.get == Pinned,
       s"a warm golden employees Pipeline.run ran ${jobs.get} Spark jobs, pinned at $Pinned: " +
         "an eager action was added or removed. Update this pin and CHANGES.md together.")
