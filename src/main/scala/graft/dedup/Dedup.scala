@@ -1,98 +1,82 @@
 package graft.dedup
 
 import graft.ingest.CsvIngest.RowId
-import org.apache.spark.sql.DataFrame
+import graft.plans.SqlIdent
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 
 /** Composite-key deduplication (reference main.py:97-159).
   *
-  * The reference mutates a stage table with DELETEs; here each step is
-  * a pure (survivors, removed) split of an immutable DataFrame:
-  *   - first/last  → `row_number` over the composite key ordered by
-  *     `_row_id` (asc/desc), keep rn=1 (one shuffle on the key; the
-  *     partial ranking is Catalyst's WindowExec, which scales by key
-  *     group, with AQE handling skewed keys);
-  *   - exclude_all → count per key, semi-join captures every member of
-  *     a >1 group, anti-join keeps the rest (map-side partial counts,
-  *     then one shuffle; the dup-key set is usually small → broadcast
-  *     back by AQE).
+  * The reference ranks each key set with one window and DELETEs the
+  * losers from its stage table. Here the result is one flagged frame,
+  * the input plus one window column per key set, and the survivors/
+  * removed split is two filters over it (the idiom of
+  * [[graft.validate.SchemaValidator]]'s flagged frame):
+  *   - first/last  → `row_number` over the key ordered by `_row_id`
+  *     (asc/desc); a row ranked above 1 is removed;
+  *   - exclude_all → `count` over the key; every member of a key with
+  *     more than one row is removed, unless a key value is null (null
+  *     never matches, as in the reference's join).
+  *
+  * Key sets apply sequentially: each window is partitioned by its key
+  * set AND by whether the row survived the earlier key sets, so each
+  * sees only the earlier survivors. One shuffle per key set, nothing
+  * persisted; a caller that reads both splits holds `flagged`, as
+  * [[graft.pipeline.Pipeline]] does. The capture frame spans all key
+  * sets, possibly overlapping, like the reference (main.py:106-158);
+  * for first/last it keeps `rn`, the rank at the key set that removed
+  * the row, like the reference's dup frame (main.py:132-139).
   *
   * `last` follows the reference's *documented* semantics (keep the
   * final occurrence, readme.md:92-94) rather than its executed bug
   * which treats last as first (main.py:131-152; SURVEY.md §2.5 note).
-  *
-  * Key sets apply sequentially, each seeing the survivors of the
-  * previous, and capture frames are concatenated across key sets —
-  * possibly overlapping, exactly like the reference (main.py:106-158).
   */
 object Dedup {
 
-  /** @param cached intermediate frames this run persisted (multi-pass
-    *        folds) — callers release them once survivors/removed are
-    *        fully consumed
-    */
   final case class DedupResult(
       survivors: DataFrame,
       removed: DataFrame,
-      cached: Seq[DataFrame] = Seq.empty)
+      /** the input plus one window column per key set; both splits
+        * filter it
+        */
+      flagged: DataFrame) {
+
+    /** Always empty: dedup persists nothing. Kept only so the
+      * benchmark's `perfbench.Driver`, which releases it, compiles
+      * unchanged; delete it with the next change to the benchmark.
+      */
+    def cached: Seq[DataFrame] = Seq.empty
+  }
 
   val RnCol = "rn"
 
-  def apply(
-      df: DataFrame,
-      uniqueComposite: Seq[Seq[String]],
-      resolution: String,
-      orderCol: String = RowId): DedupResult = {
+  def apply(df: DataFrame, uniqueComposite: Seq[Seq[String]], resolution: String): DedupResult = {
     require(Seq("first", "last", "exclude_all").contains(resolution),
       s"unknown duplicate_resolution '$resolution'")
-    val multiPass = uniqueComposite.size > 1
-    var current = df
-    val captures = Seq.newBuilder[DataFrame]
-    val cached = Seq.newBuilder[DataFrame]
-    for (keys <- uniqueComposite) {
-      val step = one(current, keys, resolution, orderCol)
-      captures += step.removed
-      current = step.survivors
-      if (multiPass) {
-        current = current.persist(StorageLevel.MEMORY_AND_DISK)
-        cached += current
-      }
+    val ranked = resolution != "exclude_all"
+    val order = if (resolution == "last") col(RowId).desc else col(RowId).asc
+    // helper columns: fresh against the input, distinct by their index
+    val names = uniqueComposite.indices.map(i => SqlIdent.freshName(s"_dedup_$i", df.columns))
+    def alive(lost: Seq[Column]): Column = lost.foldLeft(lit(true))(_ && !_)
+    // one window column per key set, and per key set the condition that
+    // it removes a row still alive after the earlier key sets
+    val (flagged, lost) = uniqueComposite.zip(names).foldLeft((df, Seq.empty[Column])) {
+      case ((acc, lost), (keys, name)) =>
+        val w = Window.partitionBy(keys.map(col) ++ (if (lost.isEmpty) Nil else Seq(alive(lost))): _*)
+        val removes =
+          if (ranked) col(name) > 1
+          else col(name) > 1 && keys.map(col(_).isNotNull).reduce(_ && _)
+        (acc.withColumn(name,
+          if (ranked) row_number().over(w.orderBy(order)).cast("long") else count(lit(1)).over(w)),
+          lost :+ removes)
     }
-    val removed = captures.result() match {
-      case Seq()     => emptyLike(df)
-      case Seq(only) => only
-      case many      => many.reduce(_.unionByName(_, allowMissingColumns = true))
-    }
-    DedupResult(current, removed, cached.result())
+    val captured = flagged.filter(!alive(lost))
+    // a removed row ranks 1 at every key set before the one removing it
+    val removed =
+      if (ranked && names.nonEmpty)
+        captured.withColumn(RnCol, coalesce(names.map(n => when(col(n) > 1, col(n))): _*))
+      else captured
+    DedupResult(flagged.filter(alive(lost)).drop(names: _*), removed.drop(names: _*), flagged)
   }
-
-  private def one(df: DataFrame, keys: Seq[String], resolution: String, orderCol: String): DedupResult =
-    resolution match {
-      case "exclude_all" =>
-        val dupKeys = df.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("_cnt")).filter(col("_cnt") > 1)
-          .select(keys.map(col): _*)
-        // using-column joins move the key columns to the front of the
-        // output; the reference's capture/stage frames keep the
-        // original CSV column order (found by GoldenFuzzSpec on a
-        // non-leading key) — restore it explicitly
-        val original = df.columns.map(col)
-        DedupResult(
-          survivors = df.join(dupKeys, keys, "left_anti").select(original: _*),
-          removed = df.join(dupKeys, keys, "left_semi").select(original: _*))
-      case firstOrLast =>
-        val order = if (firstOrLast == "last") col(orderCol).desc else col(orderCol).asc
-        val w = Window.partitionBy(keys.map(col): _*).orderBy(order)
-        val ranked = df.withColumn(RnCol, row_number().over(w).cast("long"))
-        DedupResult(
-          survivors = ranked.filter(col(RnCol) === 1).drop(RnCol),
-          // capture keeps rn, like the reference's dup frame (main.py:132-139)
-          removed = ranked.filter(col(RnCol) > 1))
-    }
-
-  private def emptyLike(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
 }

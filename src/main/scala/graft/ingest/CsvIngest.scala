@@ -109,7 +109,7 @@ object CsvIngest {
     * keep those fixed until the frame's last action (or persist it).
     */
   private def mintRowIds(df: DataFrame, key: Column, dataCols: Seq[String]): DataFrame = {
-    val Seq(g, seq, off) = Seq("_g", "_seq", "_offset").map(freshName(_, df.columns))
+    val Seq(g, seq, off) = Seq("_g", "_seq", "_offset").map(SqlIdent.freshName(_, df.columns))
     val keyed = df.select(col("*"), key.as(g), monotonically_increasing_id().as(seq))
     // one row per group, sorted in one task in Spark's own key order
     // (file paths byte-wise)
@@ -122,8 +122,4 @@ object CsvIngest {
     keyed.join(broadcast(table), Seq(g), "left")
       .select(dataCols.map(c => col(SqlIdent.quote(c))) :+ (col(seq) + col(off)).as(RowId): _*)
   }
-
-  /** `base` plus `_`s until no name in `taken` matches it, ignoring case as Spark does. */
-  private def freshName(base: String, taken: Seq[String]): String =
-    Iterator.iterate(base)(_ + "_").find(n => !taken.exists(_.equalsIgnoreCase(n))).get
 }

@@ -18,21 +18,22 @@ import java.time.LocalDate
   *   custom rules → projections → CSV exports + error CSVs → summary
   *
   * Each stage runs once. The reference materializes raw/stage as
-  * DuckDB tables (CTAS, main.py:90-95); here three frames are persisted:
-  * the validated input (read by the error and valid splits), the dedup
-  * survivors (read by the rule counts, the rule issue writes and the
-  * stage) and the stage, sorted by row id once for every projection.
-  * The validated input is built by one parallel job that also counts
-  * the input rows. Every output is one write job (a single-file one
-  * runs in one task, see [[graft.sinks.Sinks]]), and the other summary
-  * counts are the row counts those writes observe — no separate
-  * `count()` per split.
+  * DuckDB tables (CTAS, main.py:90-95); here only this module persists
+  * (besides a `table` projection's CTAS cache), three frames:
+  *   - the validated input, read by the error and valid splits and
+  *     built by one parallel job that counts the input rows;
+  *   - the flagged dedup frame, built by the duplicates write and read
+  *     by the rule counts, the rule issue writes and the stage;
+  *   - the stage, sorted by row id once for every projection.
+  * Every output is one write job (a single-file one runs in one task,
+  * see [[graft.sinks.Sinks]]), one aggregate job counts every rule, and
+  * the other summary counts are the row counts the writes observe.
   *
   * Quirks kept for parity:
   *   - `custom_validation_mode == "stop"` also gates *schema* errors
   *     (main.py:435-439) — the flag's name notwithstanding;
   *   - error CSVs are written before the stop-gate fires;
-  *   - a `stop` custom rule raises after capturing its issue set.
+  *   - a `stop` custom rule raises before any rule issue set is written.
   */
 object Pipeline {
 
@@ -52,15 +53,15 @@ object Pipeline {
         * persisted: each action on it re-runs that filter
         */
       schemaErrors: DataFrame,
-      /** the dedup's removed rows, a lazy plan: each action on it re-runs
-        * the dedup window (and a multi-key fold) over the valid rows
+      /** the dedup's removed rows: a filter over the persisted dedup
+        * frame, not itself persisted — each action on it re-runs that
+        * filter, not the dedup windows
         */
       duplicates: Option[DataFrame],
       ruleIssues: Seq[CustomRules.RuleIssue],
       projections: Seq[Projections.ProjectionResult],
-      /** every frame the run persisted: the validated input, the dedup
-        * survivors, the stage, the table projections and the multi-key
-        * dedup / multi-rule fold intermediates
+      /** every frame the run persisted: the validated input, the
+        * flagged dedup frame, the stage and the table projections
         */
       intermediateCaches: Seq[DataFrame] = Seq.empty) {
 
@@ -110,17 +111,17 @@ object Pipeline {
             Map.empty, stoppedAtSchemaErrors = true),
           None, vr.errors, None, Seq.empty, Seq.empty, cached.result())
       else {
-        // 3. raw (the valid split) + 4. dedup raw → stage (main.py:97-159)
+        // 3. raw (the valid split) + 4. dedup raw → stage (main.py:97-159).
+        // The duplicates write builds the held flagged frame; the
+        // survivors are a filter over it.
         val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
-        cached ++= dd.cached
-        val survivors = hold(dd.survivors)
+        hold(dd.flagged)
         val duplicateRowsRemoved = Sinks.saveErrors(dd.removed, "duplicates", entityName, outputDir)
 
         // 5. custom rules (main.py:161-197); stop mode raises out of here
-        // after the issue capture, like the reference's ValueError.
+        // after the one counting job, like the reference's ValueError.
         val rr = CustomRules.execute(
-          survivors, spec.rules, spec.settings.customValidationMode, asOf)
-        cached ++= rr.cached
+          dd.survivors, spec.rules, spec.settings.customValidationMode, asOf)
         for (issue <- rr.issues)
           Sinks.saveErrors(issue.invalidRows, s"custom_${issue.field}", entityName, outputDir)
 

@@ -3,7 +3,6 @@ package graft.rules
 import graft.config.RuleSpec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import java.time.LocalDate
 
 /** Custom-validation rule registry (reference main.py:161-197).
@@ -69,48 +68,47 @@ object CustomRules {
   final case class RulesResult(
       survivors: DataFrame,
       issues: Seq[RuleIssue],
-      totalInvalidRows: Long,
-      /** intermediate frames persisted by multi-rule runs — callers
-        * release once survivors/issues are fully consumed
-        */
-      cached: Seq[DataFrame] = Seq.empty)
+      totalInvalidRows: Long) {
+
+    /** Always empty: rules persist nothing. Kept only so the
+      * benchmark's `perfbench.Driver`, which releases it, compiles
+      * unchanged; delete it with the next change to the benchmark.
+      */
+    def cached: Seq[DataFrame] = Seq.empty
+  }
 
   /** Sequential rule application with stop/skip modes
-    * (main.py:177-194): `stop` raises on the first failing rule;
-    * `skip` filters failing rows out of the stage, each rule seeing the
-    * survivors of the previous.
+    * (main.py:177-194), as one plan over `df`: rule i's invalid rows
+    * are the rows its predicate fails (a null verdict passes) and, in
+    * `skip` mode, every earlier rule passed — the rows the reference's
+    * earlier DELETEs leave. One aggregate job counts every rule; `stop`
+    * then raises on the first rule with a failing row, before any
+    * write; `skip` filters the failing rows out of the survivors. The
+    * issue sets and the survivors are filters over `df`; nothing is
+    * persisted. Unknown rule names are ignored, like the if-chain.
     */
   def execute(
       df: DataFrame,
       rules: Seq[RuleSpec],
       mode: String,
       asOf: LocalDate): RulesResult = {
-    var current = df
-    var total = 0L
-    val issues = Seq.newBuilder[RuleIssue]
-    val cached = Seq.newBuilder[DataFrame]
-    for (spec <- rules) {
-      registry.get(spec.validation) match {
-        case None => () // unknown rule names are ignored, like the if-chain
-        case Some(rule) =>
-          val fail = rule.failPredicate(spec.field, spec.params, asOf)
-          if (rules.size > 1 && current.storageLevel == StorageLevel.NONE) {
-            current = current.persist(StorageLevel.MEMORY_AND_DISK)
-            cached += current
-          }
-          val invalid = current.filter(fail)
-          val n = invalid.count()
-          total += n
-          if (n > 0) {
-            issues += RuleIssue(spec.field, spec.validation, invalid, n)
-            if (mode == "stop")
-              throw new ValidationStopException(
-                s"Custom validation failed for field '${spec.field}' with ${spec.validation}.")
-            if (mode == "skip")
-              current = current.filter(!fail || fail.isNull)
-          }
-      }
+    val known = rules.flatMap(spec => registry.get(spec.validation).map(rule =>
+      spec -> coalesce(rule.failPredicate(spec.field, spec.params, asOf), lit(false))))
+    val fails = known.map(_._2)
+    val invalid = fails.indices.map { i =>
+      if (mode == "skip") fails.take(i).foldLeft(fails(i))(_ && !_) else fails(i)
     }
-    RulesResult(current, issues.result(), total, cached.result())
+    val counts = if (invalid.isEmpty) Seq.empty[Long]
+      else df.select(invalid.map(count_if): _*).head().toSeq.map(_.asInstanceOf[Long])
+    if (mode == "stop")
+      known.zip(counts).collectFirst { case ((spec, _), n) if n > 0 => spec }.foreach { spec =>
+        throw new ValidationStopException(
+          s"Custom validation failed for field '${spec.field}' with ${spec.validation}.")
+      }
+    val issues = known.zip(invalid).zip(counts).collect {
+      case (((spec, _), inv), n) if n > 0 => RuleIssue(spec.field, spec.validation, df.filter(inv), n)
+    }
+    val survivors = if (mode == "skip" && fails.nonEmpty) df.filter(!fails.reduce(_ || _)) else df
+    RulesResult(survivors, issues, counts.sum)
   }
 }

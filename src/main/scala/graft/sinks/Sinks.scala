@@ -1,6 +1,7 @@
 package graft.sinks
 
 import graft.ingest.CsvIngest.RowId
+import graft.plans.SqlIdent
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -104,15 +105,14 @@ object Sinks {
           case _ => true
         }
         val saltSrc = df.schema.fields.filter(f => hashable(f.dataType))
-          .map(f => col(s"`${f.name.replace("`", "``")}`"))
+          .map(f => col(SqlIdent.quote(f.name)))
         val salt = pmod(
           if (saltSrc.nonEmpty) hash(saltSrc.toIndexedSeq: _*)
           else hash(monotonically_increasing_id()),
           lit(filesPerPartition))
         // a fresh name — overwriting a real user column would corrupt
         // then drop it
-        val saltCol = Iterator.iterate("_salt")(_ + "_")
-          .dropWhile(df.columns.contains).next()
+        val saltCol = SqlIdent.freshName("_salt", df.columns)
         // explicit partition count: a bare repartition-by-column is an
         // AQE coalescing target, which would re-merge the salt groups
         // into one task and undo the fan-out

@@ -150,4 +150,88 @@ class DedupSpec extends SparkSpec {
       assert(picks == singlePicks, name)
     }
   }
+
+  // Differential check: Dedup against a sequential plain-Scala fold over
+  // the collected rows: each key set applies to the survivors of the previous one;
+  // `first`/`last` keep the lowest/highest `_row_id` per key and capture
+  // the rest with their rank `rn` at the removing key set; `exclude_all`
+  // captures every member of a key with more than one survivor, and a
+  // key holding a null never matches.
+
+  type In = (Long, Option[Int], Option[String], Option[Int], String)
+  private val cols = Seq("_row_id", "k1", "k2", "k3", "payload")
+  private val keyIndex = Map("k1" -> 1, "k2" -> 2, "k3" -> 3)
+
+  private def key(r: In, keys: Seq[String]): Seq[Option[Any]] =
+    keys.map(k => r.productElement(keyIndex(k)).asInstanceOf[Option[Any]])
+
+  /** (survivors, removed with rn — None for exclude_all) */
+  private def model(rows: Seq[In], keySets: Seq[Seq[String]],
+      res: String): (Seq[In], Seq[(In, Option[Long])]) =
+    keySets.foldLeft((rows, Seq.empty[(In, Option[Long])])) { case ((alive, removed), keys) =>
+      val groups = alive.groupBy(key(_, keys)).values.toSeq
+      val gone = res match {
+        case "exclude_all" =>
+          groups.filter(g => g.size > 1 && key(g.head, keys).forall(_.isDefined))
+            .flatten.map(r => r -> None)
+        case _ =>
+          groups.flatMap { g =>
+            val byId = g.sortBy(_._1)
+            (if (res == "last") byId.reverse else byId).zipWithIndex.drop(1)
+              .map { case (r, i) => r -> Some(i + 1L) }
+          }
+      }
+      val goneIds = gone.map(_._1._1).toSet
+      (alive.filterNot(r => goneIds(r._1)), removed ++ gone)
+    }
+
+  private def input(seed: Int): Seq[In] = {
+    val rnd = new scala.util.Random(seed)
+    def opt[A](a: => A): Option[A] = if (rnd.nextInt(10) == 0) None else Some(a)
+    // ids in scrambled input order, so row order and id order differ
+    rnd.shuffle((1L to 60L).toList).map { id =>
+      (id, opt(rnd.nextInt(4)), opt(Seq("a", "b", "c")(rnd.nextInt(3))), opt(rnd.nextInt(3)),
+        s"p$id")
+    }
+  }
+
+  private def check(rows: Seq[In], keySets: Seq[Seq[String]], res: String, clue: String): Unit = {
+    val df = rows.toDF(cols: _*).repartition(3)
+    val r = Dedup(df, keySets, res)
+    val withRn = res != "exclude_all" && keySets.nonEmpty
+    assert(r.survivors.columns.toSeq == cols, clue)
+    assert(r.removed.columns.toSeq == (if (withRn) cols :+ Dedup.RnCol else cols), clue)
+    val (wantSurvivors, wantRemoved) = model(rows, keySets, res)
+    val survivors = r.survivors.as[In].collect().toSeq.sortBy(_._1)
+    assert(survivors == wantSurvivors.sortBy(_._1), clue)
+    val removed = r.removed.collect().toSeq.map { row =>
+      val in = (row.getLong(0), Option(row.get(1)).map(_.asInstanceOf[Int]),
+        Option(row.getString(2)), Option(row.get(3)).map(_.asInstanceOf[Int]), row.getString(4))
+      in -> (if (withRn) Some(row.getLong(5)) else None)
+    }.sortBy(_._1._1)
+    assert(removed == wantRemoved.sortBy(_._1._1), clue)
+  }
+
+  test("flagged dedup matches the sequential model over seeded inputs, 1-3 key sets") {
+    // overlapping key sets: k1 appears in three of them
+    val pool = Seq(Seq("k1", "k2"), Seq("k1"), Seq("k2", "k3"), Seq("k3", "k1"))
+    for (seed <- 1 to 4; n <- 1 to 3; res <- Seq("first", "last", "exclude_all")) {
+      val keySets = new scala.util.Random(seed * 10 + n).shuffle(pool).take(n)
+      check(input(seed), keySets, res, s"seed=$seed res=$res keys=$keySets")
+    }
+  }
+
+  test("exclude_all keeps rows whose key holds a null; first/last rank null keys as one group") {
+    val rows: Seq[In] = Seq(
+      (1L, None, Some("a"), Some(0), "n1"),
+      (2L, None, Some("a"), Some(0), "n2"),
+      (3L, Some(1), Some("b"), Some(0), "d1"),
+      (4L, Some(1), Some("b"), Some(0), "d2"),
+      (5L, Some(2), Some("b"), Some(0), "u"))
+    val r = Dedup(rows.toDF(cols: _*), Seq(Seq("k1", "k2")), "exclude_all")
+    assert(r.survivors.select("payload").as[String].collect().sorted.toSeq == Seq("n1", "n2", "u"))
+    assert(r.removed.select("payload").as[String].collect().sorted.toSeq == Seq("d1", "d2"))
+    for (res <- Seq("first", "last", "exclude_all"); keySets <- Seq(Nil, Seq(Seq("k1", "k2"))))
+      check(rows, keySets, res, s"res=$res keys=$keySets")
+  }
 }

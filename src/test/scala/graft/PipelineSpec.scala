@@ -283,7 +283,7 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     check("no-duplicates", _.dropRight(2), identity,
       PipelineSummary(10, 10, 0, 4, 0, Map("personal_data" -> 6, "contract_data" -> 6), false),
       customErrors)
-    // no key sets: the removed frame is Dedup's empty-RDD frame
+    // no key sets: the removed frame is an always-false filter
     check("no-unique-composite", identity,
       _.replaceAll("unique_composite:\\n(\\s+-.*\\n)+", "unique_composite: []\n"),
       PipelineSummary(12, 12, 0, 5, 0, Map("personal_data" -> 7, "contract_data" -> 7), false),
@@ -291,6 +291,35 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     check("header-only", _.take(1), identity,
       PipelineSummary(0, 0, 0, 0, 0, Map("personal_data" -> 0, "contract_data" -> 0), false),
       Set.empty)
+  }
+
+  test("two key sets and two rules persist only the validated frame, the dedup frame and the stage") {
+    val dir = tmpDir("pipeline-caches")
+    val (cfg, _) = goldenCopy(dir, yamlEdit = _
+      .replace("      - - employee_id\n        - company_id\n",
+        "      - - employee_id\n        - company_id\n      - - email\n")
+      .replace("        - field: birthday_on\n",
+        "        - field: starts_on\n          validation: age_gte\n          params:\n" +
+          "            min_age: 1\n        - field: birthday_on\n"))
+    val entity = cfg.entity("employees")
+    assert(entity.settings.uniqueComposite.size == 2 && entity.rules.size == 2)
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val r = Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf)
+    try {
+      val tables = r.projections.filter(_.spec.projType == "table").map(_.df)
+      assert(tables.nonEmpty)
+      val caches = r.intermediateCaches
+      assert(caches.size == 3 + tables.size, caches.map(_.columns.length))
+      val Seq(validated, dedup, stage) = caches.take(3)
+      assert(validated.columns.contains(graft.validate.SchemaValidator.ErrorsCol))
+      // the dedup frame flags every valid row; it is not filtered to the survivors
+      assert(dedup.count() == r.summary.validRows)
+      assert(stage eq r.stage.get)
+      assert(caches.drop(3) == tables)
+      assert(caches.forall(_.storageLevel.useMemory))
+    } finally r.unpersist()
+    assert(cacheManager.isEmpty, "the run left a cache behind")
   }
 
   test("a warm golden employees import runs a pinned number of Spark jobs") {
@@ -310,7 +339,7 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf).unpersist()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    val Pinned = 21
+    val Pinned = 20
     assert(jobs.get == Pinned,
       s"a warm golden employees Pipeline.run ran ${jobs.get} Spark jobs, pinned at $Pinned: " +
         "an eager action was added or removed. Update this pin and CHANGES.md together.")

@@ -62,4 +62,102 @@ class RulesSpec extends SparkSpec {
     assert(res.survivors.select("doc_id").as[Long].collect().toSeq == Seq(1L))
     assert(res.issues.head.validation == "quality_gte" && res.totalInvalidRows == 1)
   }
+
+  // Differential check: CustomRules against a sequential plain-Scala
+  // fold over the collected rows. Each known rule sees the rows the
+  // earlier rules left: `stop` raises on the first rule with a failing
+  // row, `skip` drops a rule's failing rows, any other mode only
+  // reports them. A null date neither fails nor is dropped. Days stay
+  // in 1..28 and the as-of day is the 15th, where Spark's
+  // floor(months_between / 12) equals java.time's completed years.
+  private val modelAsOf = LocalDate.parse("2025-06-15")
+  private type Dated = (Long, Option[String], Option[String])
+
+  private def ruleModel(rows: Seq[Dated], rules: Seq[RuleSpec],
+      mode: String): Either[String, (Seq[Long], Seq[(String, String, Seq[Long])])] = {
+    val start: Either[String, (Seq[Dated], Seq[(String, String, Seq[Long])])] = Right((rows, Nil))
+    rules.filter(_.validation == "age_gte").foldLeft(start) {
+      case (Right((alive, issues)), spec) =>
+        val minAge = spec.params("min_age").toString.toInt
+        val date = (r: Dated) => if (spec.field == "d1") r._2 else r._3
+        val failing = alive.filter(r => date(r).exists(d =>
+          java.time.Period.between(LocalDate.parse(d), modelAsOf).getYears < minAge))
+        if (failing.isEmpty) Right((alive, issues))
+        else if (mode == "stop") Left(spec.field)
+        else Right((if (mode == "skip") alive.filterNot(failing.contains) else alive,
+          issues :+ ((spec.field, spec.validation, failing.map(_._1)))))
+      case (stopped, _) => stopped
+    }.map { case (alive, issues) => (alive.map(_._1), issues) }
+  }
+
+  test("rules match the sequential model in skip, stop and report-only modes") {
+    val pool = Seq(
+      RuleSpec("d1", "age_gte", Map("min_age" -> 18)),
+      RuleSpec("d2", "age_gte", Map("min_age" -> 30)),
+      RuleSpec("d1", "no_such_rule"),
+      RuleSpec("d2", "age_gte", Map("min_age" -> 10)))
+    for (seed <- 1 to 5; n <- 1 to 3; mode <- Seq("skip", "stop", "report")) {
+      val rnd = new scala.util.Random(seed * 10 + n)
+      def date(): Option[String] =
+        if (rnd.nextInt(7) == 0) None
+        else Some(f"${1985 + rnd.nextInt(40)}%04d-${1 + rnd.nextInt(12)}%02d-${1 + rnd.nextInt(28)}%02d")
+      val rows = (1L to 40L).map(id => (id, date(), date()))
+      val rules = rnd.shuffle(pool).take(n)
+      val clue = s"seed=$seed mode=$mode rules=$rules"
+      val df = rows.toDF("id", "d1", "d2").repartition(3)
+      ruleModel(rows, rules, mode) match {
+        case Left(field) =>
+          val ex = intercept[ValidationStopException](
+            CustomRules.execute(df, rules, mode, modelAsOf))
+          assert(ex.getMessage.contains(s"for field '$field'"), clue)
+        case Right((survivors, issues)) =>
+          val r = CustomRules.execute(df, rules, mode, modelAsOf)
+          assert(r.survivors.select("id").as[Long].collect().sorted.toSeq == survivors.sorted, clue)
+          assert(r.issues.map(i => (i.field, i.validation,
+            i.invalidRows.select("id").as[Long].collect().sorted.toSeq)) ==
+            issues.map { case (f, v, ids) => (f, v, ids.sorted) }, clue)
+          assert(r.issues.map(_.invalidCount) == issues.map(_._3.size.toLong), clue)
+          assert(r.totalInvalidRows == issues.map(_._3.size).sum, clue)
+          assert(r.survivors.columns.toSeq == Seq("id", "d1", "d2"), clue)
+      }
+    }
+  }
+
+  test("all rule counts come from one aggregate job") {
+    val df = Seq((1L, "2000-01-01", "2020-01-01"), (2L, "2015-01-01", "1980-01-01"),
+      (3L, null, "1970-01-01"), (4L, "1990-01-01", "1990-01-01")).toDF("id", "d1", "d2")
+    val rules = Seq(
+      RuleSpec("d1", "age_gte", Map("min_age" -> 18)),
+      RuleSpec("d2", "age_gte", Map("min_age" -> 18)),
+      RuleSpec("d1", "age_gte", Map("min_age" -> 40)))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    }
+    // warm-up: codegen and first-use class loading stay out of the count
+    CustomRules.execute(df, rules, "skip", asOf)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // one global aggregate over the input: an exchange under AQE adds
+      // its map stage as a job of its own
+      val oneAggregate = jobsOf(df.agg(org.apache.spark.sql.functions.count("id")).collect())
+      for (mode <- Seq("skip", "report")) {
+        var r: CustomRules.RulesResult = null
+        assert(jobsOf { r = CustomRules.execute(df, rules, mode, asOf) } == oneAggregate, mode)
+        assert(r.issues.map(_.invalidCount) ==
+          (if (mode == "skip") Seq(1L, 1L, 1L) else Seq(1L, 1L, 3L)), mode)
+      }
+      // stop raises on the first failing rule before any other job
+      assert(jobsOf(intercept[ValidationStopException](
+        CustomRules.execute(df, rules, "stop", asOf))) == oneAggregate)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -42,6 +42,40 @@ class StreamingIngestSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("micro-batches with two key sets leave no cached frame behind") {
+    val dir = tmpDir("stream-cache")
+    val srcDir = s"$dir/incoming"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    val (cfgPath, _) = Fixtures.materialize(dir)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(cfgPath),
+      java.nio.file.Files.readString(java.nio.file.Paths.get(cfgPath)).replace(
+        """- ["employee_id", "company_id"]""",
+        """- ["employee_id", "company_id"]
+          |        - ["email"]""".stripMargin))
+    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+    assert(spec.settings.uniqueComposite.size == 2)
+    val header = "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country"
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+
+    val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    try {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/b1.csv"),
+        s"$header\n1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES" +
+          s"\n1,1,Ada,Smith,ada2@example.com,female,1980-03-01,ES" +
+          s"\n1,2,Ben,Jones,ada2@example.com,male,1985-07-15,ES")
+      query.processAllAvailable()
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/b2.csv"),
+        s"$header\n1,3,Cai,Brown,cai@example.com,male,1990-12-31,FR" +
+          s"\n1,4,Dot,White,cai@example.com,female,1970-01-20,PT")
+      query.processAllAvailable()
+    } finally query.stop()
+    // keep-last on (employee_id, company_id), then on email
+    assert(spark.read.parquet(s"$dir/out/stage").select("employee_id").as[String]
+      .collect().sorted.toSeq == Seq("2", "4"))
+    assert(cacheManager.isEmpty, "a micro-batch left a cached frame behind")
+  }
+
   test("checkpoint restart resumes without reprocessing or loss") {
     val dir = tmpDir("stream-restart")
     val srcDir = s"$dir/incoming"
