@@ -31,8 +31,11 @@ final case class Settings(
     duplicateResolution: String, // first | last | exclude_all
     customValidationMode: String, // stop | skip
     uniqueComposite: Seq[Seq[String]] = Seq.empty,
-    /** extension (not in reference config): multi-file layout-independent
-      * `_row_id` assignment — see CsvIngest.readPathFileAware */
+    /** `file_aware`: accepted and ignored, since every read mints ids in
+      * (file, position) order (see CsvIngest). Kept only so configs that
+      * set the key, and `perfbench.Driver`, which reads this field, stay
+      * valid. */
+    @deprecated("ignored: every read mints ids in (file, position) order", "0.1.0")
     fileAware: Boolean = false,
     /** `duplicate_resolution_compat` — which `last` semantics to run:
       *   - "documented" (default): keep the FINAL occurrence, per the

@@ -95,7 +95,7 @@ object Pipeline {
       // persisted for both splits and built by a no-op write that counts
       // the input rows: one job over every input partition in parallel,
       // not inside the single task of the error file's write.
-      val input = CsvIngest.read(spark, spec, fileAware = spec.settings.fileAware)
+      val input = CsvIngest.read(spark, spec)
       val vr = SchemaValidator.validate(input, spec.fields)
       val inputRows = Observation()
       hold(vr.flagged).observe(inputRows, count(lit(1)).as("rows"))

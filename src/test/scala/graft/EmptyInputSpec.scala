@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators._
-import graft.sinks.{Sinks, ZOrder}
+import graft.sinks.Sinks
 import org.apache.spark.sql.functions._
 
 /** Empty-input robustness: every operator must return an empty (or
@@ -147,7 +147,6 @@ class EmptyInputSpec extends SparkSpec {
     val e = Seq.empty[(Long, String)].toDF("id", "split")
     // empty partitioned write: no partition dirs, readable as empty via schema
     Sinks.writePartitioned(e, s"$dir/p", Seq("split"), filesPerPartition = 4)
-    ZOrder.writeZOrdered(Seq.empty[(Long, Double)].toDF("a", "b"), s"$dir/z", Seq("a", "b"), 4)
-    assert(spark.read.parquet(s"$dir/z").count() == 0)
+    assert(spark.read.schema(e.schema).parquet(s"$dir/p").count() == 0)
   }
 }

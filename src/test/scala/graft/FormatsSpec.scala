@@ -1,5 +1,4 @@
 package graft
-// (schema-evolution cases live at the bottom of this suite)
 
 import graft.config.PipelineConfig
 import graft.ingest.CsvIngest
@@ -84,28 +83,6 @@ class FormatsSpec extends SparkSpec {
       asOf = LocalDate.parse("2026-01-01"))
     val back = spark.read.parquet(s"$dir/out/exports/personal_data.parquet")
     assert(back.count() == r.summary.projectionRows("personal_data"))
-  }
-
-  test("schema evolution: drifted parquet batches merge; unionByName fills nulls") {
-    import graft.ingest.SchemaEvolution
-    val dir = tmpDir("fmt-evolve")
-    // batch 1: (id, name); batch 2 adds a column and drops nothing
-    Seq((1L, "a"), (2L, "b")).toDF("id", "name")
-      .write.parquet(s"$dir/b1")
-    Seq((3L, "c", "web")).toDF("id", "name", "source")
-      .write.parquet(s"$dir/b2")
-
-    val merged = SchemaEvolution.readMergedParquet(spark, s"$dir/b1", s"$dir/b2")
-    assert(merged.columns.sorted.toSeq == Seq("id", "name", "source"))
-    assert(merged.count() == 3)
-    assert(merged.filter(col("source").isNull).count() == 2)
-
-    // frame-level union by NAME, not position (b2 reordered on purpose)
-    val u = SchemaEvolution.unionEvolved(Seq(
-      spark.read.parquet(s"$dir/b1"),
-      spark.read.parquet(s"$dir/b2").select(col("source"), col("id"), col("name"))))
-    assert(u.columns.sorted.toSeq == Seq("id", "name", "source"))
-    assert(u.filter(col("id") === 3).select("name").as[String].head() == "c")
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)

@@ -126,28 +126,20 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       (lines.head +: lines.tail.take(7)).mkString("\n").getBytes)
     Files.write(Paths.get(srcDir, "part-00001.csv"),
       (lines.head +: lines.tail.drop(7)).mkString("\n").getBytes)
+    // the key is still accepted; it no longer changes the read
     val yaml = new String(Files.readAllBytes(Paths.get(cfgPath)), "UTF-8")
       .replace("settings:", "settings:\n      file_aware: true")
     Files.writeString(Paths.get(cfgPath), yaml)
     val cfg = PipelineConfig.load(cfgPath)
-    assert(cfg.entity("employees").settings.fileAware)
     val r = Pipeline.run(spark, cfg, "employees", s"$dir/out",
       asOf = LocalDate.parse("2026-01-01"), sourceOverride = Some(srcDir))
     // same summary as the single-file fixture run
     assert(r.summary.totalRows == 14 && r.summary.validRows == 12)
     assert(r.summary.duplicateRowsRemoved == 2)
 
-    // file_aware with a non-csv format is rejected, not silently ignored
-    val badSpec = cfg.entity("employees").copy(format = "parquet")
-    val ex = intercept[IllegalArgumentException] {
-      graft.ingest.CsvIngest.read(spark, badSpec, fileAware = true)
-    }
-    assert(ex.getMessage.contains("only supported for csv"))
-
-    // a header-only csv has no rows to mint ids for: plain and
-    // file-aware reads both yield an empty frame, not an exception.
-    // Input columns named like the mint's helper columns pass through
-    // as data.
+    // a header-only csv has no rows to mint ids for: the read yields an
+    // empty frame, not an exception. Input columns named like the mint's
+    // helper columns pass through as data.
     val headerOnlyDir = s"$dir/headeronly"
     Files.createDirectories(Paths.get(headerOnlyDir))
     Files.write(Paths.get(headerOnlyDir, "part-00000.csv"), s"${lines.head},_g,_seq".getBytes)
@@ -156,15 +148,13 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     Files.createDirectories(Paths.get(clashDir))
     Files.write(Paths.get(clashDir, "part-00000.csv"), "id,_g,_SEQ,_offset\na,x,y,z\nb,u,v,w".getBytes)
     val clash = cfg.entity("employees").copy(source = clashDir)
-    for (fileAware <- Seq(false, true)) {
-      val df = graft.ingest.CsvIngest.read(spark, headerOnly, fileAware = fileAware)
-      assert(df.columns.toSeq.takeRight(3) == Seq("_g", "_seq", "_row_id"), s"fileAware=$fileAware")
-      assert(df.count() == 0, s"fileAware=$fileAware")
-      val ids = graft.ingest.CsvIngest.read(spark, clash, fileAware = fileAware)
-      assert(ids.columns.toSeq == Seq("id", "_g", "_SEQ", "_offset", "_row_id"))
-      assert(ids.orderBy("_row_id").collect().map(_.toSeq).toSeq ==
-        Seq(Seq("a", "x", "y", "z", 1L), Seq("b", "u", "v", "w", 2L)), s"fileAware=$fileAware")
-    }
+    val df = graft.ingest.CsvIngest.read(spark, headerOnly)
+    assert(df.columns.toSeq.takeRight(4) == Seq("_g", "_seq", "_corrupt_record", "_row_id"))
+    assert(df.count() == 0)
+    val ids = graft.ingest.CsvIngest.read(spark, clash)
+    assert(ids.columns.toSeq == Seq("id", "_g", "_SEQ", "_offset", "_corrupt_record", "_row_id"))
+    assert(ids.orderBy("_row_id").collect().map(_.toSeq).toSeq ==
+      Seq(Seq("a", "x", "y", "z", null, 1L), Seq("b", "u", "v", "w", null, 2L)))
   }
 
   test("alias referencing unknown field skips that projection only") {
@@ -339,7 +329,7 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf).unpersist()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    val Pinned = 20
+    val Pinned = 19
     assert(jobs.get == Pinned,
       s"a warm golden employees Pipeline.run ran ${jobs.get} Spark jobs, pinned at $Pinned: " +
         "an eager action was added or removed. Update this pin and CHANGES.md together.")

@@ -3,7 +3,9 @@ package graft
 import graft.config.PipelineConfig
 import graft.sinks.BucketedSink
 import graft.streaming.StreamingIngest
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 class StreamingIngestSpec extends SparkSpec {
 
@@ -145,15 +147,16 @@ class StreamingIngestSpec extends SparkSpec {
     assert(byEmp("2") == (("2", "bea@example.com", 2L)))
   }
 
-  test("non-file source: rate stream drives the same ingest pipeline") {
-    val dir = tmpDir("stream-rate")
+  test("non-file source: a memory stream drives the same ingest pipeline") {
+    val dir = tmpDir("stream-memory")
     val (cfgPath, _) = Fixtures.materialize(dir)
     val spec = PipelineConfig.load(cfgPath).entity("employees")
 
     // a Kafka deployment would swap this select for a value-parsing one;
     // the ingest stages don't change
-    val rate = spark.readStream.format("rate").option("rowsPerSecond", "100").load()
-    val source = rate.select(
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Long]
+    val source = input.toDF().select(
       lit("1").as("company_id"),
       ($"value" % 5).cast("string").as("employee_id"), // repeats → in-batch dups
       lit("Rate").as("first_name"),
@@ -165,27 +168,65 @@ class StreamingIngestSpec extends SparkSpec {
 
     val query = StreamingIngest.startFromSource(source, spec, s"$dir/out", s"$dir/ckpt")
     try {
-      val deadline = System.currentTimeMillis() + 30000
-      var rows = 0L
-      while (rows == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500)
-        query.processAllAvailable()
-        rows = try spark.read.parquet(s"$dir/out/stage").count() catch { case _: Throwable => 0L }
-      }
-      assert(rows > 0, "rate source produced no staged rows in 30s")
-      // per micro-batch, survivors are unique on the composite key
-      val stage = spark.read.parquet(s"$dir/out/stage")
-      val maxPerKey = stage.groupBy("_batch_id", "employee_id", "company_id")
-        .count().agg(max("count")).as[Long].head()
-      assert(maxPerKey == 1)
+      // two fixed micro-batches of ten values: every key repeats twice in each
+      input.addData(0L until 10L)
+      query.processAllAvailable()
+      input.addData(10L until 20L)
+      query.processAllAvailable()
     } finally query.stop()
+    val stage = spark.read.parquet(s"$dir/out/stage")
+    assert(stage.count() > 0, "the memory source produced no staged rows")
+    // per micro-batch, survivors are unique on the composite key
+    val maxPerKey = stage.groupBy("_batch_id", "employee_id", "company_id")
+      .count().agg(max("count")).as[Long].head()
+    assert(maxPerKey == 1)
 
     // a source missing entity fields is rejected up front
-    val bad = spark.readStream.format("rate").load()
+    val bad = MemoryStream[Long].toDF()
     val ex = intercept[IllegalArgumentException] {
       StreamingIngest.startFromSource(bad, spec, s"$dir/out2", s"$dir/ckpt2")
     }
     assert(ex.getMessage.contains("missing entity fields"))
+  }
+
+  test("a watched file whose columns differ from the config's order stops the query") {
+    val dir = tmpDir("stream-drift")
+    val srcDir = s"$dir/incoming"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    val (cfgPath, _) = Fixtures.materialize(dir)
+    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+    // employee_id and company_id swapped against the config's declaration
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/swapped.csv"),
+      "employee_id,company_id,first_name,last_name,email,gender,birthday_on,country\n" +
+        "7,1,Ada,Smith,ada@example.com,female,1980-03-01,ES")
+    val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    val ex = try intercept[StreamingQueryException](query.processAllAvailable())
+      finally query.stop()
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(messages.contains("swapped.csv"), messages)
+    assert(messages.contains("employee_id"), messages)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/out/stage")))
+  }
+
+  test("a ragged record in a watched file becomes an error row") {
+    val dir = tmpDir("stream-ragged")
+    val srcDir = s"$dir/incoming"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    val (cfgPath, _) = Fixtures.materialize(dir)
+    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/b1.csv"),
+      "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country\n" +
+        "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES,EXTRA\n" +
+        "1,2,\"Ben\nJr\",Jones,ben@example.com,male,1985-07-15,ES")
+    val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    try query.processAllAvailable() finally query.stop()
+    assert(spark.read.parquet(s"$dir/out/stage").select("first_name", "_row_id")
+      .as[(String, Long)].collect().toSeq == Seq(("Ben\nJr", 2L)))
+    val errors = spark.read.parquet(s"$dir/out/errors").select("row", "errors")
+      .as[(Long, String)].collect().toSeq
+    assert(errors.map(_._1) == Seq(1L))
+    assert(errors.head._2.contains("expected 8 fields: 1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES,EXTRA"))
   }
 
   test("bucketed tables join without exchanges") {

@@ -5,9 +5,9 @@ import graft.pipeline.Pipeline
 import java.time.LocalDate
 
 /** Volume soak: the full reference pipeline over a generated 2M-row
-  * employees corpus SHARDED ACROSS 8 CSV FILES, ingested through the
-  * file-aware row-id path (`file_aware: true`) — the multi-file
-  * analogue of the r1 single-file volume run in BENCH_NOTES.md.
+  * employees corpus SHARDED ACROSS 8 CSV FILES, ingested with (file,
+  * position) row ids — the multi-file analogue of the r1 single-file
+  * volume run in BENCH_NOTES.md.
   *
   * Skipped unless SPARK_GRAFT_VOLUME=1 (runs ~2 min): it's a
   * reproducible measurement harness, not a CI gate.
@@ -45,10 +45,6 @@ class VolumeSpec extends SparkSpec {
     }
 
     val (cfgPath, _) = Fixtures.materialize(dir)
-    val yaml = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(cfgPath)), "UTF-8")
-      .replace("settings:", "settings:\n      file_aware: true")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(cfgPath), yaml)
 
     val t0 = System.nanoTime()
     val r = Pipeline.run(spark, PipelineConfig.load(cfgPath), "employees",
