@@ -1,18 +1,10 @@
 package graft
+import graft.Verify.jsonString
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // Warm codegen/JIT per query on the smallest scale first: the
     // generated-code compilation for the complex operators costs ~10s
     // per JVM regardless of data size, which would otherwise dominate
@@ -25,18 +17,8 @@ object Bench {
       fn(spark, dir).write.format("noop").mode("overwrite").save()
     // SPARK_GRAFT_ONLY=q54_contamination,q55_tfidf restricts the run —
     // a per-query iteration loop, not part of the driver contract
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        // a silent typo would bench zero queries and report a
-        // plausible-looking 0.00 total
-        if (unknown.nonEmpty)
-          System.err.println(s"[bench] WARNING: unknown SPARK_GRAFT_ONLY names: ${unknown.mkString(", ")}")
-        SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
+    val only = SparkEntry.only
+    val selected = SparkEntry.select(only)
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       selected.foreach { case (_, fn) =>
         try execute(fn, warmDir) catch { case _: Throwable => () }
@@ -98,17 +80,8 @@ object Bench {
       .mkString("{", ",", "}")
     val guard =
       s""""reps":$reps,"load_avg":[${fmt(loadStart)},${fmt(loadEnd)}]"""
-    // JSON-escape env-supplied strings (detail path, sf dir): a value
-    // containing a quote or backslash must not emit a malformed
-    // summary line to downstream JSON consumers
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val detail =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"failed":$failed,"n_queries":${results.size},$guard,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"failed":$failed,"n_queries":${results.size},$guard,"sf":${jsonString(sfDir)}}"""
     // SPARK_GRAFT_DETAIL_PATH redirects the per-query record so a
     // third-party bench (judge, CI) never clobbers the repo's official
     // BENCH_DETAIL.json — round 15's independent judge run did exactly
@@ -121,8 +94,8 @@ object Bench {
           detailPath.getOrElse("/root/repo/BENCH_DETAIL.json"))
         java.nio.file.Files.write(out, detail.getBytes("UTF-8"))
       } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
-    val detailLabel = jstr(detailPath.getOrElse("BENCH_DETAIL.json"))
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$topQs,"failed":$failed,"n_queries":${results.size},$guard,"detail":$detailLabel,"sf":${jstr(sfDir)}}""")
+    val detailLabel = jsonString(detailPath.getOrElse("BENCH_DETAIL.json"))
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$topQs,"failed":$failed,"n_queries":${results.size},$guard,"detail":$detailLabel,"sf":${jsonString(sfDir)}}""")
     spark.stop()
   }
 }

@@ -1,30 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection CLI: prints the formatted physical plan of one or
   * all SparkEntry queries — the loop used to audit pushdown, pruning,
   * broadcast choices, and codegen coverage.
   *
-  *   runMain graft.Explain <queryName|all> [sfDir]
+  *   runMain graft.Explain <query[,query...]|all> [sfDir]
+  *
+  * `all` honours SPARK_GRAFT_ONLY, like Bench and Verify.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("all")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val targets =
-      if (name == "all") SparkEntry.queries.toSeq.sortBy(_._1)
-      else Seq(name -> SparkEntry.queries(name))
-    for ((n, fn) <- targets) {
+    val spark = Session()
+    val targets = SparkEntry.select(if (name == "all") SparkEntry.only else Some(name))
+    for ((n, fn) <- targets.toSeq.sortBy(_._1)) {
       println(s"\n========== $n ==========")
       try fn(spark, sfDir).explain("formatted")
       catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }

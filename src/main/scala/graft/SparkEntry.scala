@@ -32,4 +32,23 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allQs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** `SPARK_GRAFT_ONLY=a,b,c`: the iteration filter of Bench, Verify and
+    * Explain. The driver never sets it, so its runs cover every query.
+    */
+  def only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")
+
+  /** The queries named in the comma-separated `names`, or every query
+    * when there are none. Unknown names are reported on stderr: a silent
+    * typo would run zero queries and report a plausible-looking 0.00
+    * total.
+    */
+  def select(names: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    names.fold(queries) { list =>
+      val wanted = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = wanted -- queries.keySet
+      if (unknown.nonEmpty)
+        System.err.println(s"[graft] WARNING: unknown query names: ${unknown.mkString(", ")}")
+      queries.filter { case (n, _) => wanted(n) }
+    }
 }

@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // earlier testdata generations shipped events.ts as
-      // TIMESTAMP(NANOS), which Spark 4 rejects unless read as raw
-      // longs; harmless for the current naive-micros shape —
-      // Tables.events normalizes every shape either way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // start from a clean slate: a leftover dump from a renamed or
     // removed query must not survive into this round's compare
     val outPath = Paths.get(outDir)
@@ -39,12 +25,7 @@ object Verify {
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
     // SPARK_GRAFT_ONLY=a,b,c — builder-side iteration filter, same as
     // Bench; the driver never sets it, so the gate always runs all
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.select(SparkEntry.only)
     try {
       val tasks = selected.toSeq.map { case (name, fn) =>
         pool.submit(new Runnable {
@@ -58,21 +39,25 @@ object Verify {
       }
       tasks.foreach(_.get())
     } finally pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** A JSON string literal: backslash, quote and ALL control chars
+    * (< 0x20) escaped. A tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness, and an env-supplied path in Bench's summary
+    * line would make it malformed.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

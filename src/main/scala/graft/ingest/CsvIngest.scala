@@ -99,7 +99,13 @@ object CsvIngest {
     mintRowIds(raw, sourceKey, raw.columns.map(c => col(SqlIdent.quote(c))))
   }
 
-  private val RecordOptions = Map("header" -> "true", "multiLine" -> "true", "escape" -> "\"")
+  /** The csv dialect of every read and write: a header line, and RFC
+    * 4180 quoting, where a quote inside a quoted field is doubled (as
+    * pandas writes it), not backslash-escaped (Spark's default).
+    */
+  val Dialect = Map("header" -> "true", "escape" -> "\"")
+
+  private val RecordOptions = Dialect + ("multiLine" -> "true")
 
   /** The reader options of every csv read, batch and streaming. */
   def csvOptions(corrupt: String, enforceSchema: Boolean = false): Map[String, String] =

@@ -1015,27 +1015,16 @@ object TextDedup {
   /** The scrub step of substring dedup: drop every token covered by a
     * duplicated n-gram window and stitch the survivors back together
     * in position order. Documents losing all tokens disappear.
-    * Returns (idCol, n_kept, clean_text).
+    * Returns (idCol, n_kept, clean_text), ordered by idCol.
+    *
+    * The survivor filter runs on the arithmetic [[keptCount]] (no token
+    * pass) BELOW the sort, and the per-token scrub + stitch runs ONCE
+    * above it: a terminal sort's range-sampling pass re-executes
+    * everything between the last materialization point and the
+    * exchange, which for a scrub below the sort meant the whole
+    * O(tokens × spans) scrub twice.
     */
   def removeDuplicateSpans(
-      df: DataFrame, idCol: String, textCol: String, n: Int = 8): DataFrame =
-    spansJoined(df, idCol, textCol, n)
-      .select(col(idCol), keptTokens.as("_kept"))
-      .filter(size(col("_kept")) >= 1)
-      .select(col(idCol), size(col("_kept")).cast("long").as("n_kept"),
-        concat_ws(" ", col("_kept")).as("clean_text"))
-
-  /** [[removeDuplicateSpans]] pre-sorted by idCol, for consumers whose
-    * final output is id-ordered: the survivor filter runs on the
-    * arithmetic [[keptCount]] (no token pass) BELOW the sort, and the
-    * per-token scrub + stitch runs ONCE above it — a terminal sort's
-    * range-sampling pass re-executes everything between the last
-    * materialization point and the exchange, which for the old shape
-    * meant the whole O(tokens × spans) scrub twice (round 18, guide
-    * §1.4/§7.2; the round-17 final-projection sweep, extended to a
-    * filter-carrying segment by splitting the filter from the scrub).
-    */
-  def removeDuplicateSpansSorted(
       df: DataFrame, idCol: String, textCol: String, n: Int = 8): DataFrame =
     spansJoined(df, idCol, textCol, n)
       .filter(keptCount >= 1)

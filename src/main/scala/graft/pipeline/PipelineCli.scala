@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.config.PipelineConfig
 import graft.rules.ValidationStopException
-import org.apache.spark.sql.SparkSession
 import java.time.LocalDate
 
 /** CLI entry with the reference's surface (main.py:401-505):
@@ -40,15 +39,8 @@ object PipelineCli {
       sys.exit(2)
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName(s"graft-pipeline-$entityName")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points the run at a cluster; default local[cpus]
+    val spark = graft.Session(master = sys.env.get("SPARK_MASTER"))
 
     try {
       val result = Pipeline.run(spark, PipelineConfig.load(config), entityName, outputDir, asOf)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 /** SparkSessionExtensions installer for the graft native functions —
   * the registration path for sessions built outside our code
   * (spark-submit `--conf spark.sql.extensions=graft.plans.GraftExtensions`,
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * or a session builder's `.withExtensions(new GraftExtensions)`).
   * In-library operators register the same builders imperatively via
   * GraftFunctions.register, so both entry styles see identical
   * functions.

@@ -402,10 +402,10 @@ object DedupQueries {
         |ORDER BY doc_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      // the sorted variant supplies the terminal doc_id order with the
+      // the scrub supplies the terminal doc_id order with the
       // O(tokens × spans) scrub above the sort (computed once); this
       // projection — md5 of the stitched text — rides above it too
-      TextDedup.removeDuplicateSpansSorted(Tables.documents(s, d), "doc_id", "text", n = 8)
+      TextDedup.removeDuplicateSpans(Tables.documents(s, d), "doc_id", "text", n = 8)
         .select($"doc_id", $"n_kept",
           substring(md5($"clean_text"), 1, 12).as("clean_sig"))
     },

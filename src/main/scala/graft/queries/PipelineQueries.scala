@@ -274,8 +274,9 @@ object PipelineQueries {
           array(lit("acctbal_negative"), lit("needs_review")).as("errors"))
       graft.sinks.Sinks.saveErrors(errs, "balance", "customer", out)
 
-      val expRead = s.read.option("header", "true").csv(s"$out/exports/customer_rt.csv")
-      val errRead = s.read.option("header", "true").csv(s"$out/errors/customer_balance_errors.csv")
+      val dialect = graft.ingest.CsvIngest.Dialect
+      val expRead = s.read.options(dialect).csv(s"$out/exports/customer_rt.csv")
+      val errRead = s.read.options(dialect).csv(s"$out/errors/customer_balance_errors.csv")
       val expLine = concat_ws("|",
         $"c_custkey", $"c_name", $"c_nationkey", $"c_mktsegment", $"quoted_note")
       val errLine = concat_ws("|", $"row", $"errors")

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.ingest.CsvIngest
 import graft.ingest.CsvIngest.RowId
 import graft.plans.SqlIdent
 import org.apache.spark.sql.{DataFrame, Observation}
@@ -151,7 +152,7 @@ object Sinks {
     val out = if (singleFile) Paths.get(dir, s".tmp_$fileName") else target
     val written = Observation()
     val w = df.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").format(format)
-    (if (format == "csv") w.option("header", "true") else w).save(out.toString)
+    (if (format == "csv") w.options(CsvIngest.Dialect) else w).save(out.toString)
     val rows = written.get("rows").asInstanceOf[Long]
     if (singleFile && (rows > 0 || keepEmpty)) {
       val part = Files.list(out).iterator().asScala

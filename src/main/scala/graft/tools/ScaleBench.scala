@@ -63,27 +63,20 @@ object ScaleBench {
     val baseDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(2).getOrElse(s"/tmp/graft_scale_x$factor")
     // SPARK_GRAFT_SHUFFLE_PARTITIONS sizes the shuffle for the replica
-    // being probed — the dial a cluster turns with the data. The
-    // pinned 32 is right through the fourth decade; a fifth-decade
-    // window/sort (1B rows / 32 partitions = 31M-row per-task sorts)
-    // needs more partitions exactly as it would on a real cluster.
-    // Warn-and-fallback parsing, like the streaming partitions dial.
+    // being probed — the dial a cluster turns with the data. One
+    // partition per core is right through the fourth decade; a
+    // fifth-decade window/sort (1B rows / 32 partitions = 31M-row
+    // per-task sorts) needs more partitions exactly as it would on a
+    // real cluster. Warn-and-fallback parsing, like the streaming
+    // partitions dial.
     val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .flatMap { v =>
         val p = v.trim.toIntOption.filter(_ > 0)
         if (p.isEmpty) System.err.println(
           s"[scale] ignoring malformed SPARK_GRAFT_SHUFFLE_PARTITIONS='$v'")
         p
-      }.getOrElse(32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      }
+    val spark = graft.Session(shufflePartitions = shufflePartitions)
 
     if (!Files.exists(Paths.get(s"$outDir/_SCALE_DONE"))) {
       generate(spark, baseDir, outDir, factor)

@@ -243,7 +243,7 @@ class GoldenFuzzSpec extends SparkSpec {
 
   /** row-id -> failing-field set from a schema-error CSV. */
   private def flaggedFields(path: String): Map[String, Set[String]] = {
-    val df = spark.read.option("header", "true").csv(path)
+    val df = spark.read.options(graft.ingest.CsvIngest.Dialect).csv(path)
     df.select("row", "errors").collect().iterator.map { r =>
       r.getString(0) -> Option(r.getString(1)).getOrElse("")
         .split("; ").iterator.map(_.takeWhile(_ != ':').trim).filter(_.nonEmpty).toSet

@@ -66,4 +66,25 @@ class SinksProjectionsSpec extends SparkSpec {
     assert(Sinks.exportProjection(df, "j", dir, format = "json") == 2)
     assert(spark.read.json(s"$dir/exports/j.json").count() == 2)
   }
+
+  test("csv exports and error files quote the RFC 4180 way and read back unchanged") {
+    val dir = tmpDir("sink-quotes")
+    val value = "say \"hi\", then\nbye"
+    val quoted = "\"say \"\"hi\"\", then\nbye\""
+    def bytes(p: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8)
+    def readBack(p: String) = graft.ingest.CsvIngest.readPath(spark, p)
+      .select("v").as[String].collect().toSeq
+
+    assert(Sinks.exportProjection(Seq((1L, value)).toDF("id", "v"), "q", dir) == 1)
+    val export = s"$dir/exports/q.csv"
+    assert(bytes(export) == s"id,v\n1,$quoted\n")
+    assert(readBack(export) == Seq(value))
+
+    val errors = Seq((1L, 1L, Seq("bad"), value)).toDF("_row_id", "row", "errors", "v")
+    assert(Sinks.saveErrors(errors, "schema", "ent", dir) == 1)
+    val errorFile = s"$dir/errors/ent_schema_errors.csv"
+    assert(bytes(errorFile) == s"row,errors,v\n1,bad,$quoted\n")
+    assert(readBack(errorFile) == Seq(value))
+  }
 }

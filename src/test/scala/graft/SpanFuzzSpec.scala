@@ -95,21 +95,9 @@ class SpanFuzzSpec extends SparkSpec {
       val rnd = new Random(seed)
       val (docs, n) = randomCorpus(rnd)
       val got = TextDedup.removeDuplicateSpans(docs.toDF("doc_id", "text"), "doc_id", "text", n)
-        .as[(Long, Long, String)].collect().sorted.toSeq
-      val want = refScrub(docs, n).sorted
-      assert(got == want, s"seed=$seed n=$n docs=$docs")
-    }
-  }
-
-  test("removeDuplicateSpansSorted equals removeDuplicateSpans ordered (round 18)") {
-    for (seed <- 201 to 210) {
-      val rnd = new Random(seed)
-      val (docs, n) = randomCorpus(rnd)
-      val plain = TextDedup.removeDuplicateSpans(docs.toDF("doc_id", "text"), "doc_id", "text", n)
-        .orderBy("doc_id").as[(Long, Long, String)].collect().toSeq
-      val sorted = TextDedup.removeDuplicateSpansSorted(docs.toDF("doc_id", "text"), "doc_id", "text", n)
         .as[(Long, Long, String)].collect().toSeq
-      assert(sorted == plain, s"seed=$seed n=$n docs=$docs")
+      val want = refScrub(docs, n).sortBy(_._1)
+      assert(got == want, s"seed=$seed n=$n docs=$docs")
     }
   }
 
