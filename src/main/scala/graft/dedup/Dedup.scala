@@ -26,7 +26,8 @@ import org.apache.spark.sql.expressions.Window
   * [[graft.pipeline.Pipeline]] does. The capture frame spans all key
   * sets, possibly overlapping, like the reference (main.py:106-158);
   * for first/last it keeps `rn`, the rank at the key set that removed
-  * the row, like the reference's dup frame (main.py:132-139).
+  * the row, like the reference's dup frame (main.py:132-139), so an
+  * input column named `rn` (in any case) is then rejected.
   *
   * `last` follows the reference's *documented* semantics (keep the
   * final occurrence, readme.md:92-94) rather than its executed bug
@@ -55,6 +56,9 @@ object Dedup {
     require(Seq("first", "last", "exclude_all").contains(resolution),
       s"unknown duplicate_resolution '$resolution'")
     val ranked = resolution != "exclude_all"
+    for (c <- df.columns.find(_.equalsIgnoreCase(RnCol)) if ranked && uniqueComposite.nonEmpty)
+      throw new IllegalArgumentException(s"source column '$c' clashes with the '$RnCol' column " +
+        "(the dedup rank) that the duplicates error file writes; rename the source column")
     val order = if (resolution == "last") col(RowId).desc else col(RowId).asc
     // helper columns: fresh against the input, distinct by their index
     val names = uniqueComposite.indices.map(i => SqlIdent.freshName(s"_dedup_$i", df.columns))

@@ -53,6 +53,14 @@ object CsvIngest {
     */
   val MalformedRecord = "graft.malformedRecord"
 
+  /** Metadata key on a read's `_row_id` column: the number of rows the
+    * mint numbered, so the ids are exactly `1..n`.
+    */
+  val RowCount = "graft.rowCount"
+
+  /** The row count a read's mint took, from [[RowCount]]. */
+  def rowCount(df: DataFrame): Long = df.schema(RowId).metadata.getLong(RowCount)
+
   /** The mint's group key: a row's source file and the start of the
     * read block holding it. A csv file is one block (start 0); a
     * json/parquet/orc split is one contiguous, in-order chunk of its
@@ -130,7 +138,9 @@ object CsvIngest {
     *
     * One small aggregate job collects each group's count and first id;
     * the key-ordered counts sum into bases, broadcast-joined back on the
-    * key (one hash lookup per row).
+    * key (one hash lookup per row). Their total, the row count, tags
+    * `_row_id` as [[RowCount]], so no caller needs a job to count the
+    * rows.
     *
     * The offsets are computed eagerly against the scan's partition
     * layout, which is a function of the input files, the
@@ -144,11 +154,13 @@ object CsvIngest {
     // (file paths byte-wise, then block start)
     val groups = keyed.groupBy(g).agg(count(lit(1)), min(seq))
       .coalesce(1).sortWithinPartitions(g).collect()
-    val offsets = groups.zip(groups.scanLeft(0L)(_ + _.getLong(1)))
+    val bases = groups.scanLeft(0L)(_ + _.getLong(1))
+    val offsets = groups.zip(bases)
       .map { case (r, base) => Row(r.get(0), base - r.getLong(2) + 1) }
     val table = df.sparkSession.createDataFrame(java.util.Arrays.asList(offsets: _*),
       StructType(Seq(keyed.schema(g), StructField(off, LongType))))
+    val rows = new MetadataBuilder().putLong(RowCount, bases.last).build()
     keyed.join(broadcast(table), Seq(g), "left")
-      .select(data :+ (col(seq) + col(off)).as(RowId): _*)
+      .select(data :+ (col(seq) + col(off)).as(RowId, rows): _*)
   }
 }

@@ -7,8 +7,7 @@ import graft.project.Projections
 import graft.rules.CustomRules
 import graft.sinks.Sinks
 import graft.validate.SchemaValidator
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import java.time.LocalDate
 
@@ -20,14 +19,17 @@ import java.time.LocalDate
   * Each stage runs once. The reference materializes raw/stage as
   * DuckDB tables (CTAS, main.py:90-95); here only this module persists
   * (besides a `table` projection's CTAS cache), three frames:
-  *   - the validated input, read by the error and valid splits and
-  *     built by one parallel job that counts the input rows;
-  *   - the flagged dedup frame, built by the duplicates write and read
-  *     by the rule counts, the rule issue writes and the stage;
+  *   - the validated input, read by the error and valid splits;
+  *   - the flagged dedup frame, read by the rule counts, the rule issue
+  *     writes and the stage;
   *   - the stage, sorted by row id once for every projection.
-  * Every output is one write job (a single-file one runs in one task,
-  * see [[graft.sinks.Sinks]]), one aggregate job counts every rule, and
-  * the other summary counts are the row counts the writes observe.
+  * The first write over a held frame builds it, under AQE in a
+  * table-cache job of its own at the frame's partitioning (the scan's,
+  * or the dedup window's), so a single-file write's one task reads the
+  * cache rather than running ingest, validation or the window.
+  * The row id mint counts the input rows, every output is one write
+  * job, one aggregate job counts every rule, and the other summary
+  * counts are the row counts the writes observe.
   *
   * Quirks kept for parity:
   *   - `custom_validation_mode == "stop"` also gates *schema* errors
@@ -91,16 +93,16 @@ object Pipeline {
     }
 
     try {
-      // 1. ingest + 2. schema validation. The validated frame is
-      // persisted for both splits and built by a no-op write that counts
-      // the input rows: one job over every input partition in parallel,
-      // not inside the single task of the error file's write.
+      // 1. ingest + 2. schema validation. The id mint counts the input
+      // rows; the validated frame is held for both splits and built by
+      // its own table-cache job at the scan's partitioning, ahead of the
+      // error file's one-task write. The dedup plan is built before any
+      // write, so a reserved column name fails the run with no output.
       val input = CsvIngest.read(spark, spec)
+      val totalRows = CsvIngest.rowCount(input)
       val vr = SchemaValidator.validate(input, spec.fields)
-      val inputRows = Observation()
-      hold(vr.flagged).observe(inputRows, count(lit(1)).as("rows"))
-        .write.format("noop").mode("overwrite").save()
-      val totalRows = inputRows.get("rows").asInstanceOf[Long]
+      hold(vr.flagged)
+      val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
       val schemaErrorRows = Sinks.saveErrors(vr.errors, "schema_validation", entityName, outputDir)
       val validRows = totalRows - schemaErrorRows
 
@@ -114,7 +116,6 @@ object Pipeline {
         // 3. raw (the valid split) + 4. dedup raw → stage (main.py:97-159).
         // The duplicates write builds the held flagged frame; the
         // survivors are a filter over it.
-        val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
         hold(dd.flagged)
         val duplicateRowsRemoved = Sinks.saveErrors(dd.removed, "duplicates", entityName, outputDir)
 

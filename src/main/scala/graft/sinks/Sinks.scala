@@ -17,32 +17,26 @@ import scala.jdk.CollectionConverters._
   * wrote, counted on that job with an `Observation`, so callers need
   * no separate `count()`.
   *
-  * `singleFile=true` reproduces the reference's one-file-per-projection
-  * layout via coalesce(1) + rename — the right call for an export the
-  * size a config-driven import handles. A frame carrying the row id
-  * (or `row`) is sorted inside that one partition, so the write needs
-  * no range-partition sample job or exchange. The write then runs in
-  * one task, together with whatever part of `df`'s plan after its last
-  * exchange or cache is not yet computed: build an expensive input in
-  * parallel first (persist it and run a job over it, as
-  * [[graft.pipeline.Pipeline]] does for the validated input). At
-  * cluster scale flip it off: the writer then emits a standard sharded
-  * directory `{name}.csv/` with no single-node merge bottleneck,
-  * globally ordered by `orderBy`.
+  * csv and json exports and every error file are single files, as the
+  * reference writes them: `coalesce(1)` and a rename of the one part
+  * file. The write runs in one task over whatever part of its input's
+  * plan comes after the last exchange or cache; under AQE a held input
+  * not yet built is built first by its own table-cache job, in
+  * parallel. parquet and orc exports are standard sharded directories.
   */
 object Sinks {
 
-  /** Writes `{outputDir}/exports/{name}.{format}`; returns the rows
-    * written.
+  /** Writes `{outputDir}/exports/{name}.{format}` in the order of `df`'s
+    * rows (for the importer, the stage's row-id order); returns the
+    * rows written.
     */
   def exportProjection(df: DataFrame, name: String, outputDir: String,
-      singleFile: Boolean = true, format: String = "csv"): Long = format match {
+      format: String = "csv"): Long = format match {
     case "csv" | "json" =>
-      write(ordered(df, singleFile), s"$outputDir/exports", s"$name.$format", format,
-        singleFile, keepEmpty = true)
+      write(df.coalesce(1), s"$outputDir/exports", s"$name.$format", format,
+        singleFile = true, keepEmpty = true)
     case "parquet" | "orc" =>
-      // columnar exports are inherently sharded; no single-file contortion
-      write(ordered(df, singleFile = false), s"$outputDir/exports", s"$name.$format", format,
+      write(df, s"$outputDir/exports", s"$name.$format", format,
         singleFile = false, keepEmpty = true)
     case other =>
       throw new IllegalArgumentException(s"unsupported export format '$other'")
@@ -58,8 +52,7 @@ object Sinks {
     * Returns the rows written. An empty error set leaves no file, like
     * the reference, which writes only non-empty error lists.
     */
-  def saveErrors(df: DataFrame, errorType: String, entity: String, outputDir: String,
-      singleFile: Boolean = true): Long = {
+  def saveErrors(df: DataFrame, errorType: String, entity: String, outputDir: String): Long = {
     val flat = df.schema.find(_.name == "errors") match {
       case Some(f) if f.dataType.typeName == "array" =>
         df.withColumn("errors", concat_ws("; ", col("errors")))
@@ -67,9 +60,12 @@ object Sinks {
     }
     val lead = Seq("row", "errors").filter(flat.columns.contains)
     val rest = flat.columns.filterNot(c => lead.contains(c) || c == RowId)
-    val shaped = ordered(flat, singleFile).select((lead ++ rest).map(col): _*)
-    write(shaped, s"$outputDir/errors", s"${entity}_${errorType}_errors.csv", "csv",
-      singleFile, keepEmpty = false)
+    // sorted inside the one partition: no range sample job, no exchange
+    val one = flat.coalesce(1)
+    val sorted = Seq(RowId, "row").find(flat.columns.contains)
+      .fold(one)(key => one.sortWithinPartitions(col(key)))
+    write(sorted.select((lead ++ rest).map(col): _*), s"$outputDir/errors",
+      s"${entity}_${errorType}_errors.csv", "csv", singleFile = true, keepEmpty = false)
   }
 
   /** Hive-style partitioned dataset sink (the training-shard layout:
@@ -128,16 +124,6 @@ object Sinks {
       .format(format)
       .save(dir)
     dir
-  }
-
-  /** `df` in row-id (else `row`) order: sorted inside one partition
-    * for a single-file write, globally sorted otherwise.
-    */
-  private def ordered(df: DataFrame, singleFile: Boolean): DataFrame = {
-    val one = if (singleFile) df.coalesce(1) else df
-    Seq(RowId, "row").find(df.columns.contains).fold(one) { key =>
-      if (singleFile) one.sortWithinPartitions(col(key)) else one.orderBy(col(key))
-    }
   }
 
   /** Writes `df` to `dir/fileName` and returns the rows written. A

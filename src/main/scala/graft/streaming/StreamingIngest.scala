@@ -6,7 +6,6 @@ import graft.ingest.CsvIngest
 import graft.plans.SqlIdent
 import graft.validate.SchemaValidator
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -67,34 +66,30 @@ object StreamingIngest {
     * this with a CSV directory source; a log-bus deployment swaps the
     * source expression and nothing downstream changes.
     *
-    * `_row_id` minting, in preference order:
+    * `_row_id` minting:
     *   1. the source carries [[CsvIngest.FileTag]] (the file-watching
     *      [[start]] tags it) → the batch reader's (file, position)
     *      ids, layout-independent;
-    *   2. `orderCols` names a deterministic per-batch ordering (Kafka
-    *      `partition, offset`; an event id) → `row_number` over it.
-    *      The global window shuffles the micro-batch to one partition
-    *      — fine at micro-batch sizes; at very large batches prefer a
-    *      file/offset tag;
-    *   3. neither → `monotonically_increasing_id`, which is ordering-
+    *   2. otherwise → `monotonically_increasing_id`, which is ordering-
     *      only-within-a-partition: first/last dedup INSIDE a
     *      micro-batch then depends on partition layout. Documented
-    *      weaker guarantee — supply 1. or 2. when within-batch
-    *      duplicate resolution order matters.
+    *      weaker guarantee — tag the rows with their read unit as
+    *      [[CsvIngest.FileTag]] (see [[CsvIngest.mintRowIds]]) when
+    *      within-batch duplicate resolution order matters.
+    *
+    * A source column named like an error file's own column (`row`,
+    * `errors`, or `rn` under first/last dedup) fails the first batch
+    * before it writes anything, as in the batch pipeline.
     */
   def startFromSource(
       source: DataFrame,
       spec: EntitySpec,
       outDir: String,
-      checkpoint: String,
-      orderCols: Seq[String] = Nil): StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     require(source.isStreaming, "startFromSource needs a streaming DataFrame (readStream)")
     val missing = spec.fields.map(_.name).filterNot(source.columns.contains)
     require(missing.isEmpty,
       s"streaming source is missing entity fields: ${missing.mkString(", ")}")
-    val missingOrder = orderCols.filterNot(source.columns.contains)
-    require(missingOrder.isEmpty,
-      s"orderCols not present in streaming source: ${missingOrder.mkString(", ")}")
 
     source.writeStream
       .queryName(s"graft-ingest-${spec.name}")
@@ -105,9 +100,6 @@ object StreamingIngest {
           if (batch.columns.contains(CsvIngest.FileTag))
             CsvIngest.mintRowIds(batch, col(CsvIngest.FileTag),
               batch.columns.filterNot(_ == CsvIngest.FileTag).map(c => col(SqlIdent.quote(c))))
-          else if (orderCols.nonEmpty)
-            batch.withColumn(CsvIngest.RowId,
-              row_number().over(Window.orderBy(orderCols.map(col): _*)).cast("long"))
           else
             batch.withColumn(CsvIngest.RowId, monotonically_increasing_id())
         val vr = SchemaValidator.validate(withIds, spec.fields)

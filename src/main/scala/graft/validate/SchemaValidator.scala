@@ -25,6 +25,9 @@ import scala.collection.immutable.VectorMap
   * one more schema error on that row, carrying the expected field count
   * and the raw text. The corrupt-record column is in `flagged` only,
   * never in either split.
+  *
+  * A source column named `row` or `errors` (in any case) is rejected:
+  * the error split writes its own columns under those names.
   */
 object SchemaValidator {
 
@@ -97,7 +100,15 @@ object SchemaValidator {
     checks.result()
   }
 
+  /** The error split's own columns, which the error files write: a
+    * source column of the same name (in any case) would clash with it.
+    */
+  private val ReservedNames = Seq("row", "errors")
+
   def validate(input: DataFrame, fields: Seq[FieldSpec]): ValidationResult = {
+    for (c <- input.columns; r <- ReservedNames.find(_.equalsIgnoreCase(c)))
+      throw new IllegalArgumentException(s"source column '$c' clashes with the '$r' column " +
+        "that the schema_validation error file writes; rename the source column")
     // Fields declared but absent from the CSV behave as all-null
     // (Pydantic sees a missing key); extra CSV columns pass through
     // untouched (SURVEY.md §1.2 — Pydantic ignores extras).

@@ -312,6 +312,52 @@ class PipelineSpec extends SparkSpec with TimeLimits {
     assert(cacheManager.isEmpty, "the run left a cache behind")
   }
 
+  test("a multi-file import builds the held validated frame with one task per scan partition") {
+    val dir = tmpDir("pipeline-parallel-build")
+    val (cfg, csv) = goldenCopy(dir)
+    val lines = Files.readAllLines(csv).asScala.toSeq
+    val parts = Paths.get(dir, "parts")
+    Files.createDirectories(parts)
+    for ((rows, i) <- lines.tail.grouped(3).zipWithIndex)
+      writeLines(parts.resolve(s"part-$i.csv"), lines.head +: rows)
+    val scanPartitions = graft.ingest.CsvIngest.read(
+      spark, cfg.entity("employees").copy(source = parts.toString)).rdd.getNumPartitions
+    assert(scanPartitions >= 2)
+    // (stage id, tasks) of every stage that builds or reads a persisted RDD
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (s.stageInfo.rddInfos.exists(_.storageLevel.isValid))
+          stages.add(s.stageInfo.stageId -> s.stageInfo.numTasks)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf,
+        sourceOverride = Some(parts.toString)).unpersist()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the run's first cache is the validated frame: the first stage over
+    // a persisted RDD builds it, not the error file's one-task write
+    assert(stages.asScala.minBy(_._1)._2 == scanPartitions, stages.asScala.toSeq.sorted)
+  }
+
+  for ((name, file) <- Seq("row" -> "schema_validation", "errors" -> "schema_validation",
+      "rn" -> "duplicates"))
+    test(s"a source column named $name fails the run before any output, naming the $file file") {
+      val dir = tmpDir(s"pipeline-reserved-$name")
+      val (cfg, _) = goldenCopy(dir, lines => (lines.head + s",$name") +: lines.tail.map(_ + ",x"))
+      val out = Paths.get(dir, "out")
+      spark.catalog.clearCache()
+      val e = intercept[IllegalArgumentException] {
+        Pipeline.run(spark, cfg, "employees", out.toString, goldenAsOf)
+      }
+      assert(e.getMessage.contains(s"source column '$name'") && e.getMessage.contains(file),
+        e.getMessage)
+      assert(Files.notExists(out))
+      assert(spark.sharedState.cacheManager.isEmpty, "the failed run left a cache behind")
+    }
+
   test("a warm golden employees import runs a pinned number of Spark jobs") {
     val dir = tmpDir("pipeline-jobs")
     val (cfg, _) = goldenCopy(dir)
@@ -329,7 +375,7 @@ class PipelineSpec extends SparkSpec with TimeLimits {
       Pipeline.run(spark, cfg, "employees", s"$dir/out", goldenAsOf).unpersist()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    val Pinned = 19
+    val Pinned = 18
     assert(jobs.get == Pinned,
       s"a warm golden employees Pipeline.run ran ${jobs.get} Spark jobs, pinned at $Pinned: " +
         "an eager action was added or removed. Update this pin and CHANGES.md together.")

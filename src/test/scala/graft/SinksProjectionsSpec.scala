@@ -39,15 +39,25 @@ class SinksProjectionsSpec extends SparkSpec {
     assert(warnings.size == 2)
   }
 
-  test("sharded (singleFile=false) export writes a standard csv directory") {
+  test("parquet export writes a sharded directory") {
     val dir = tmpDir("sink-sharded")
     val df = (1L to 100L).toDF("n").repartition(4)
-    assert(Sinks.exportProjection(df, "big", dir, singleFile = false) == 100)
-    val path = s"$dir/exports/big.csv"
+    assert(Sinks.exportProjection(df, "big", dir, format = "parquet") == 100)
+    val path = s"$dir/exports/big.parquet"
     val parts = java.nio.file.Files.list(java.nio.file.Paths.get(path))
       .iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
     assert(parts > 1) // no single-node merge bottleneck
-    assert(spark.read.option("header", "true").csv(path).count() == 100)
+    assert(spark.read.parquet(path).count() == 100)
+  }
+
+  test("a csv export keeps its frame's row order, also with a column named row") {
+    val dir = tmpDir("sink-row-order")
+    // three rows over three partitions, in an order that is not the
+    // `row` column's
+    val df = Seq(("c", 1L), ("a", 2L), ("b", 3L)).toDF("row", "seat")
+    assert(Sinks.exportProjection(df, "seats", dir) == 3)
+    assert(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$dir/exports/seats.csv"))
+      .asScala.toSeq == Seq("row,seat", "c,1", "a,2", "b,3"))
   }
 
   test("salted partitioned write keeps an input column whose name differs from the salt's only in case") {

@@ -189,6 +189,27 @@ class StreamingIngestSpec extends SparkSpec {
     assert(ex.getMessage.contains("missing entity fields"))
   }
 
+  test("a source column named like an error file's own column fails the first batch, writing nothing") {
+    val dir = tmpDir("stream-reserved")
+    val (cfgPath, _) = Fixtures.materialize(dir)
+    val spec = PipelineConfig.load(cfgPath).entity("employees")
+    implicit val sqlCtx = spark.sqlContext
+    for ((name, file) <- Seq("row" -> "schema_validation", "rn" -> "duplicates")) {
+      val input = MemoryStream[Long]
+      val source = input.toDF().select(
+        spec.fields.map(f => lit("1").as(f.name)) :+ $"value".cast("string").as(name): _*)
+      val out = java.nio.file.Paths.get(dir, s"out-$name")
+      val query = StreamingIngest.startFromSource(source, spec, out.toString, s"$dir/ckpt-$name")
+      val ex = try {
+        input.addData(0L until 3L)
+        intercept[StreamingQueryException](query.processAllAvailable())
+      } finally query.stop()
+      assert(ex.getMessage.contains(s"source column '$name'") && ex.getMessage.contains(file),
+        ex.getMessage)
+      assert(java.nio.file.Files.notExists(out))
+    }
+  }
+
   test("a watched file whose columns differ from the config's order stops the query") {
     val dir = tmpDir("stream-drift")
     val srcDir = s"$dir/incoming"
