@@ -56,9 +56,11 @@ object Dedup {
     require(Seq("first", "last", "exclude_all").contains(resolution),
       s"unknown duplicate_resolution '$resolution'")
     val ranked = resolution != "exclude_all"
-    for (c <- df.columns.find(_.equalsIgnoreCase(RnCol)) if ranked && uniqueComposite.nonEmpty)
-      throw new IllegalArgumentException(s"source column '$c' clashes with the '$RnCol' column " +
-        "(the dedup rank) that the duplicates error file writes; rename the source column")
+    if (ranked && uniqueComposite.nonEmpty)
+      df.columns.find(_.equalsIgnoreCase(RnCol)).foreach { c =>
+        throw new IllegalArgumentException(s"source column '$c' clashes with the '$RnCol' column " +
+          "(the dedup rank) that the duplicates error file writes; rename the source column")
+      }
     val order = if (resolution == "last") col(RowId).desc else col(RowId).asc
     // helper columns: fresh against the input, distinct by their index
     val names = uniqueComposite.indices.map(i => SqlIdent.freshName(s"_dedup_$i", df.columns))

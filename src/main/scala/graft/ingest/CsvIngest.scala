@@ -56,7 +56,7 @@ object CsvIngest {
   /** Metadata key on a read's `_row_id` column: the number of rows the
     * mint numbered, so the ids are exactly `1..n`.
     */
-  val RowCount = "graft.rowCount"
+  private val RowCount = "graft.rowCount"
 
   /** The row count a read's mint took, from [[RowCount]]. */
   def rowCount(df: DataFrame): Long = df.schema(RowId).metadata.getLong(RowCount)
