@@ -29,9 +29,9 @@ object SparkEntry {
     allQs.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    allQs.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    allQs.map(q => q.name -> q.oracle).toMap
 
   /** `SPARK_GRAFT_ONLY=a,b,c`: the iteration filter of Bench, Verify and
     * Explain. The driver never sets it, so its runs cover every query.

@@ -10,13 +10,11 @@ import org.apache.spark.storage.StorageLevel
   * document survives per near-dup cluster needs connected components
   * over the pair graph.
   *
-  * Implementation is iterative min-label propagation in pure DataFrame
-  * ops (the standard large-scale CC shape: each round, every node
-  * takes the min label among itself and its neighbors; converges in
-  * O(graph diameter) rounds — near-dup clusters are shallow, so a few
-  * rounds suffice). Each round is one shuffle join + aggregate;
-  * intermediate label frames are persisted and released, and lineage
-  * is kept flat so 100 TB inputs don't accumulate a mile-long plan.
+  * Components have one distributed implementation, large-star /
+  * small-star contraction in pure DataFrame ops: O(log n) rounds
+  * whatever the graph's diameter, each round's edge frame
+  * localCheckpoint'ed so lineage stays flat at any scale. Edge lists
+  * under the size guard are solved exactly on the driver instead.
   */
 object DupGraph {
 
@@ -33,8 +31,9 @@ object DupGraph {
     * as a broadcast join ships a small side instead of shuffling it.
     * Near-dup pair graphs are tiny relative to their corpus (pairs ≈
     * dup rate × n), so even 100 TB corpora often land here; above the
-    * threshold the distributed min-label rounds run unchanged. Both
-    * paths produce the identical (node, min-reachable-id) labeling.
+    * threshold the star contraction of [[connectedComponentsStars]]
+    * runs on the same checkpointed edges. Both paths produce the
+    * identical (node, min-reachable-id) labeling.
     *
     * @param edges DataFrame with two node-id columns (`idA`, `idB`)
     * @return (node, component) — component = min node id reachable;
@@ -45,87 +44,26 @@ object DupGraph {
       edges: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxIter: Int = 20,
       localEdgeThreshold: Long = 1L << 20): DataFrame = {
-    // materialize the pair list ONCE — the symmetrization union scans
-    // it twice and an expensive upstream (the MinHash pair pipeline)
-    // would re-execute per scan. Null ids (failed casts) are dropped
-    // explicitly: the distributed rounds below drop them implicitly
-    // (null join keys never match), so both paths see the same edges.
-    val raw = edges
+    val raw = edgeList(edges, idA, idB)
+    if (raw.count() <= localEdgeThreshold) localComponents(raw)
+    else starComponents(raw, maxRounds = 30)
+  }
+
+  /** The (u, v) long edge list both component paths read, materialized
+    * ONCE: the star rounds, the node set and the certificates each scan
+    * it, and an expensive upstream (the MinHash pair pipeline) would
+    * re-execute per scan — measured 3x the whole operator's cost before
+    * this cut. Null ids (failed casts) are dropped: a null is no node.
+    */
+  private def edgeList(edges: DataFrame, idA: String, idB: String): DataFrame =
+    edges
       .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull)
       .localCheckpoint(true)
-    if (raw.count() <= localEdgeThreshold) return localComponents(raw)
-    val sym = raw.select(col("u").as("src"), col("v").as("dst"))
-      .union(raw.select(col("v").as("src"), col("u").as("dst")))
-    // self-loops make one round = a single join+min over (self ∪
-    // neighbors), so each round references the label frame exactly
-    // ONCE — chained rounds stay a linear plan, not an exponential one
-    val symSelf = sym
-      .union(sym.select(col("src"), col("src").as("dst")).distinct())
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var labels = symSelf.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    labels.count() // materialize labels AND the symSelf cache it scans
-
-    // BATCH propagation rounds lazily — `batch` chained joins run as
-    // ONE Spark job, then a single action materializes the batch and
-    // tests convergence. Near-dup clusters have tiny diameters, so
-    // most inputs finish in one batch; the persist between batches
-    // keeps lineage flat for high-diameter graphs.
-    //
-    // Convergence test = edge consistency: no edge may span two
-    // labels. Unlike comparing against the batch-start labels (which
-    // needs one extra all-quiet batch to notice), consistency holds
-    // the moment propagation completes — a diameter-≤4 graph finishes
-    // in a single batch — and it certifies the RESULT, not just the
-    // fixpoint: labels only decrease and stay within their component,
-    // so one label per component must be that component's min id.
-    val batch = 4
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      var next = labels
-      for (_ <- 0 until math.min(batch, maxIter - iter)) {
-        next = symSelf
-          .join(next.withColumnRenamed("node", "dst"), "dst")
-          .groupBy(col("src").as("node"))
-          .agg(min("label").as("label"))
-      }
-      val persisted = next.persist(StorageLevel.MEMORY_AND_DISK)
-      persisted.count() // materialize once; the check below scans the cache twice
-      val inconsistent = symSelf.filter(col("src") =!= col("dst"))
-        .join(persisted.withColumnRenamed("node", "src").withColumnRenamed("label", "l_src"), "src")
-        .join(persisted.withColumnRenamed("node", "dst").withColumnRenamed("label", "l_dst"), "dst")
-        .filter(col("l_src") =!= col("l_dst")).limit(1).count()
-      labels.unpersist()
-      labels = persisted
-      converged = inconsistent == 0
-      iter += batch
-    }
-    symSelf.unpersist()
-    // A silent partial result would hand wrong clusters to dedup —
-    // fail loudly instead when the diameter exceeds the iteration cap
-    // (releasing the loop's cache first, so a caught-and-retried
-    // failure doesn't pin one node-sized frame per attempt).
-    if (!converged) {
-      labels.unpersist()
-      throw new IllegalArgumentException(
-        s"requirement failed: connectedComponents did not converge within $maxIter " +
-          "iterations (graph diameter exceeds the cap); raise maxIter")
-    }
-    // hand back a lineage-severed copy and release the loop's cache —
-    // otherwise every call leaks one node-sized persisted frame
-    val out = labels.localCheckpoint(true)
-    labels.unpersist()
-    out.select(col("node"), col("label").as("component"))
-  }
 
   /** Driver-side union-find for edge lists under the size guard —
-    * same contract as the distributed rounds: every node appearing in
+    * same contract as the star contraction: every node appearing in
     * an edge (self-loops included) labeled with the min reachable id.
     * Exact, deterministic, no iteration cap to certify.
     *
@@ -193,70 +131,66 @@ object DupGraph {
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce
     * and Beyond", SoCC'14) — converges in O(log n) rounds regardless
-    * of graph DIAMETER, where [[connectedComponents]]' min-label
-    * propagation needs O(diameter) rounds. Near-dup clusters are
-    * shallow, so label propagation wins there; this is the operator
-    * for deep graphs (web-link chains, citation paths, long
-    * co-occurrence strings) where diameter ~ n would make propagation
-    * unusable at 100 TB.
-    *
-    * Each round is two star operations; a star op is one hash
-    * aggregate (per-node min over the symmetric neighborhood) plus one
-    * shuffle join back on the same key — Catalyst reuses the exchange —
-    * and a distinct to keep the edge set bounded by the input size
-    * (the paper's Lemma: neither op grows the edge count).
+    * of graph DIAMETER, where min-label propagation needs O(diameter)
+    * rounds: deep graphs (web-link chains, citation paths, long
+    * co-occurrence strings) cost no more rounds than shallow near-dup
+    * clusters. This is always the distributed path; unlike
+    * [[connectedComponents]] it never takes the driver union-find.
     *
     * Same output contract as [[connectedComponents]]: (node,
     * component = min reachable id), only nodes appearing in an edge.
-    * The result is certified before returning: no original edge may
-    * span two components (fail-loud, never a silent partial answer).
     */
   def connectedComponentsStars(
       edges: DataFrame,
       idA: String = "id_a",
       idB: String = "id_b",
-      maxRounds: Int = 30): DataFrame = {
-    // materialize the input edge list ONCE: the star pass, the node
-    // set, the label-cardinality certificates, and the edge-consistency
-    // certificate each scan it, and an un-checkpointed upstream (e.g.
-    // the full MinHash LSH pair pipeline) would re-execute per scan —
-    // measured 3x the whole operator's cost before this cut
-    val raw = edges
-      .select(col(idA).cast("long").as("u"), col(idB).cast("long").as("v"))
-      .localCheckpoint(true)
+      maxRounds: Int = 30): DataFrame =
+    starComponents(edgeList(edges, idA, idB), maxRounds)
+
+  /** Star contraction over a materialized [[edgeList]].
+    *
+    * Each round is two star operations; a star op is one hash shuffle
+    * on the node (a window takes the per-node min over its
+    * neighborhood) and a distinct to keep the edge set bounded by the
+    * input size (the paper's Lemma: neither op grows the edge count).
+    *
+    * The result is certified before returning: one label per node, and
+    * no original edge spans two components (fail-loud, never a silent
+    * partial answer).
+    */
+  private def starComponents(raw: DataFrame, maxRounds: Int): DataFrame = {
     // self-loops carry no connectivity but their nodes still count as
-    // "appearing in an edge" (same contract as [[connectedComponents]])
+    // "appearing in an edge"
     val input = raw.filter(col("u") =!= col("v"))
+
+    // every edge row emits its new edges itself next to the window min,
+    // with no join back to a separate min aggregate: the aggregate-and-
+    // join form took 2.6x as long per round (1.6M edges in 5-node
+    // clusters, local[4])
+    val byU = Window.partitionBy(col("u"))
+    def emit(e: DataFrame, edges: org.apache.spark.sql.Column*): DataFrame =
+      e.select(explode(array(edges: _*)).as("e")).select(col("e.u"), col("e.v"))
 
     // large-star: every node u links its LARGER neighbors to
     // m = min(neighborhood ∪ self); emitted edges are (bigger, smaller)
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      sym.filter(col("v") > col("u"))
-        .join(mins, "u")
+    def largeStar(e: DataFrame): DataFrame =
+      emit(e, struct(col("u"), col("v")), struct(col("v").as("u"), col("u").as("v")))
+        .withColumn("m", least(col("u"), min(col("v")).over(byU)))
+        .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
         .distinct()
-    }
 
     // small-star: on a (bigger → smaller)-directed edge set, every
     // node u re-links its smaller neighbors AND itself to the min
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("u").agg(min("v").as("m"))
-      e.join(mins, "u").select(col("v").as("u"), col("m").as("v"))
-        .union(mins.select(col("u"), col("m").as("v")))
+    def smallStar(e: DataFrame): DataFrame =
+      emit(e.withColumn("m", min(col("v")).over(byU)),
+        struct(col("v").as("u"), col("m").as("v")), struct(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct()
-    }
 
     // one orientation pass so round 1's small-star sees (big, small).
-    // localCheckpoint (NOT persist): a star op references its input
-    // 2-4 times, so chained rounds grow the LOGICAL plan exponentially
-    // — persist only dedupes physical execution, and plan analysis
-    // alone OOMs the driver after ~12 rounds. Eager checkpointing
-    // truncates lineage to the materialized blocks each round.
+    // Each round's edges are localCheckpoint'ed: the probe and the next
+    // round both read them, and lineage stays one round deep.
     var cur = largeStar(input).localCheckpoint(true)
     // convergence = the edge set IS a star forest: no node appears as
     // both a source and a target, and every source has exactly one
@@ -268,8 +202,9 @@ object DupGraph {
     // stability signature needs one extra all-quiet round to notice.
     // Both conditions fold into ONE aggregation pass over the node
     // roles (each edge contributes a source row and a target row):
-    // a violation is a node with >1 distinct target, or a node seen
-    // as both source and target — a single shuffle + job per round,
+    // a violation is a node with two different targets (min < max), or
+    // a node seen as both source and target — a single shuffle + job
+    // per round (a distinct count of targets took up to twice as long),
     // where probing the two conditions separately cost three.
     // The probe runs on the round's checkpointed blocks (cheap).
     def isStarForest(e: DataFrame): Boolean = {
@@ -278,10 +213,10 @@ object DupGraph {
           lit(0).as("is_src")))
       val violations = roles.groupBy("node")
         .agg(
-          countDistinct(col("v")).as("nv"),
+          min(col("v")).as("v_lo"), max(col("v")).as("v_hi"),
           max(col("is_src")).as("ever_src"),
           min(col("is_src")).as("never_tgt"))
-        .filter(col("nv") > 1 ||
+        .filter(col("v_lo") < col("v_hi") ||
           (col("ever_src") === 1 && col("never_tgt") === 0))
         .limit(1).count()
       violations == 0
@@ -295,8 +230,8 @@ object DupGraph {
     }
     if (!converged)
       throw new IllegalArgumentException(
-        s"requirement failed: connectedComponentsStars did not converge within $maxRounds " +
-          "rounds; raise maxRounds")
+        s"requirement failed: connected components did not converge within $maxRounds " +
+          "star-contraction rounds")
 
     // stars → labels: every edge is (node, root); roots label themselves
     val nodes = raw.select(col("u").as("node"))
@@ -313,7 +248,7 @@ object DupGraph {
     if (nLabels != nNodes) {
       labels.unpersist()
       throw new IllegalStateException(
-        s"connectedComponentsStars stopped on a non-star edge set ($nLabels labels for $nNodes nodes)")
+        s"connected components stopped on a non-star edge set ($nLabels labels for $nNodes nodes)")
     }
     // certify: no input edge spans two components
     val inconsistent = input
@@ -323,7 +258,7 @@ object DupGraph {
     if (inconsistent != 0) {
       labels.unpersist()
       throw new IllegalStateException(
-        "connectedComponentsStars produced an inconsistent labeling (internal error)")
+        "connected components produced an inconsistent labeling (internal error)")
     }
     val out = labels.localCheckpoint(true)
     labels.unpersist()
@@ -338,7 +273,7 @@ object DupGraph {
     * `n_members`. Rows in no pair are their own singleton clusters.
     *
     * Scale shape: components via [[connectedComponents]] (pair graphs
-    * are shallow), one broadcast-sized label frame joined to the
+    * are small), one broadcast-sized label frame joined to the
     * corpus, one window over component — the corpus shuffles once on
     * the component key and never self-joins.
     */
@@ -355,12 +290,10 @@ object DupGraph {
     val labeled = df
       .join(cc, Seq(idCol), "left")
       .withColumn("component", coalesce(col("component"), col(idCol).cast("long")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("component")).orderBy(ordering: _*)
+    val w = Window.partitionBy(col("component")).orderBy(ordering: _*)
     labeled
       .withColumn("_rn", row_number().over(w))
-      .withColumn("n_members", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("component"))))
+      .withColumn("n_members", count(lit(1)).over(Window.partitionBy(col("component"))))
       .filter(col("_rn") === 1)
       .drop("_rn")
   }

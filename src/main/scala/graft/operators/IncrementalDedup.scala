@@ -4,6 +4,7 @@ import graft.functions.TextFunctions.canonicalFingerprint
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Cross-batch exact dedup for incremental ingestion: a persistent
   * parquet LEDGER of canonical content fingerprints accumulates across
@@ -52,56 +53,28 @@ object IncrementalDedup {
       ledgerPath: String,
       outputDir: String): DataFrame = {
     val spark = batch.sparkSession
-    val batchId = graft.plans.Md5Util.hex(outputDir).take(16)
-    val outMarker = s"_commit_${batchId}_out"
-    val ledgerMarker = s"_commit_${batchId}_ledger"
-
-    def writtenFingerprints(written: DataFrame) =
-      written.select(canonicalFingerprint(col(textCol)).as("_fp"))
-
-    if (markerExists(spark, ledgerPath, ledgerMarker)) {
-      // fully committed: read-only replay
-      spark.read.parquet(outputDir)
-    } else if (markerExists(spark, ledgerPath, outMarker)) {
-      // output durable but the ledger append may not have committed:
-      // re-append from the written rows (duplicates are harmless to
-      // the anti-join), then seal. Never touches outputDir.
-      val written = spark.read.parquet(outputDir)
-      writtenFingerprints(written).write.mode("append").parquet(ledgerPath)
-      writeMarker(spark, ledgerPath, ledgerMarker)
-      written
-    } else {
+    commit(spark, ledgerPath, outputDir,
+      _.select(canonicalFingerprint(col(textCol)).as("_fp"))) {
       val hashed = batch.withColumn("_fp", canonicalFingerprint(col(textCol)))
       val unseen =
         if (ledgerExists(spark, ledgerPath))
           hashed.join(spark.read.parquet(ledgerPath), Seq("_fp"), "left_anti")
         else hashed
-
       // within-batch exact dedup: keep the smallest id per fingerprint
       val w = Window.partitionBy(col("_fp")).orderBy(col(idCol))
-      val survivors = unseen
+      unseen
         .withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1)
         .drop("_rn", "_fp")
-
-      // 1. durable output first (caller columns only) …
-      survivors.write.mode("overwrite").parquet(outputDir)
-      writeMarker(spark, ledgerPath, outMarker)
-      // 2. … ledger append second — fingerprints recomputed from the
-      // WRITTEN data, so the appended hashes exactly match what the
-      // output directory holds
-      val written = spark.read.parquet(outputDir)
-      writtenFingerprints(written).write.mode("append").parquet(ledgerPath)
-      writeMarker(spark, ledgerPath, ledgerMarker)
-      written
     }
   }
 
   /** Cross-batch NEAR-duplicate dedup: the ledger stores one 60-bit
     * simhash per admitted document, and a new batch drops any row
-    * within `maxHamming` of an already-admitted hash (then near-dedups
-    * within itself via pigeonhole pairs + connected components,
-    * keeping each cluster's smallest id).
+    * within `maxHamming` of an already-admitted hash, then near-dedups
+    * within itself: [[TextDedup.simhashPairsOf]] over the rows the
+    * probe kept, resolved by [[DupGraph.nearDedupSurvivors]], which
+    * keeps each cluster's smallest id.
     *
     * Scale shape: the batch↔ledger probe is the same pigeonhole
     * equi-join as [[TextDedup.simhashPairs]] — (maxHamming+1) block
@@ -124,26 +97,13 @@ object IncrementalDedup {
       maxHamming: Int = 10,
       shingleN: Int = 2): DataFrame = {
     val spark = batch.sparkSession
-    val batchId = graft.plans.Md5Util.hex(outputDir).take(16)
-    val outMarker = s"_commit_${batchId}_out"
-    val ledgerMarker = s"_commit_${batchId}_ledger"
-
-    def writtenHashes(written: DataFrame) =
-      TextDedup.simhashOf(written, idCol, textCol, shingleN).select(col("sh").as("_sh"))
-
-    if (markerExists(spark, ledgerPath, ledgerMarker)) {
-      spark.read.parquet(outputDir)
-    } else if (markerExists(spark, ledgerPath, outMarker)) {
-      val written = spark.read.parquet(outputDir)
-      writtenHashes(written).write.mode("append").parquet(ledgerPath)
-      writeMarker(spark, ledgerPath, ledgerMarker)
-      written
-    } else {
-      val sim = TextDedup.simhashOf(batch, idCol, textCol, shingleN)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-      val batchBlocks = TextDedup.simhashBlocks(sim, maxHamming)
-
+    // released in the finally, not on success only: a failed write
+    // must not strand the cached hashes for the session lifetime (retry
+    // loops would leak one copy per attempt)
+    val sim = TextDedup.simhashOf(batch, idCol, textCol, shingleN)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try commit(spark, ledgerPath, outputDir,
+      TextDedup.simhashOf(_, idCol, textCol, shingleN).select(col("sh").as("_sh"))) {
       // 1. cross-batch: drop batch rows near ANY ledgered hash
       val seenIds =
         if (ledgerExists(spark, ledgerPath)) {
@@ -151,39 +111,52 @@ object IncrementalDedup {
             spark.read.parquet(ledgerPath).select(col("_sh").as("doc_id"), col("_sh").as("sh")),
             maxHamming)
             .select(col("blk"), col("bits"), col("sh").as("sh_l"))
-          batchBlocks.join(ledgerBlocks, Seq("blk", "bits"))
+          TextDedup.simhashBlocks(sim, maxHamming).join(ledgerBlocks, Seq("blk", "bits"))
             .filter(graft.functions.TextFunctions.hamming(col("sh"), col("sh_l")) <= maxHamming)
             .select(col("doc_id")).distinct()
-        } else batchBlocks.select(col("doc_id")).limit(0) // keeps idCol's type
+        } else sim.select(col("doc_id")).limit(0) // keeps idCol's type
       val fresh = batch.join(
         seenIds.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-
-      // 2. within-batch, among the rows the probe kept: pigeonhole
-      // pairs → connected components → keep each cluster's min id
-      // (plus all unpaired rows)
-      val freshBlocks = TextDedup.simhashBlocks(
+      // 2. within-batch, among the rows the probe kept
+      val pairs = TextDedup.simhashPairsOf(
         sim.join(seenIds, Seq("doc_id"), "left_anti"), maxHamming)
-      val pairs = {
-        val a = freshBlocks.select(col("blk"), col("bits"), col("doc_id").as("id_a"), col("sh").as("sh_a"))
-        val b = freshBlocks.select(col("blk"), col("bits"), col("doc_id").as("id_b"), col("sh").as("sh_b"))
-        a.join(b, Seq("blk", "bits"))
-          .filter(col("id_a") < col("id_b"))
-          .dropDuplicates("id_a", "id_b")
-          .filter(graft.functions.TextFunctions.hamming(col("sh_a"), col("sh_b")) <= maxHamming)
-          .select(col("id_a"), col("id_b"))
-      }
-      val (survivors, _) = DupGraph.nearDedupSurvivors(fresh, idCol, pairs)
+      DupGraph.nearDedupSurvivors(fresh, idCol, pairs)._1
+    } finally sim.unpersist()
+  }
 
-      survivors.write.mode("overwrite").parquet(outputDir)
-      writeMarker(spark, ledgerPath, outMarker)
+  /** The two-marker commit protocol (see the object doc): replay a
+    * sealed batch, finish the ledger append of a written one, or write
+    * `survivors` and then append `ledgerRows` of the WRITTEN rows, so
+    * the appended keys exactly match what `outputDir` holds. Markers
+    * are keyed by the output path. Returns the batch's output.
+    */
+  private def commit(
+      spark: SparkSession,
+      ledgerPath: String,
+      outputDir: String,
+      ledgerRows: DataFrame => DataFrame)(survivors: => DataFrame): DataFrame = {
+    val batchId = graft.plans.Md5Util.hex(outputDir).take(16)
+    val outMarker = s"_commit_${batchId}_out"
+    val ledgerMarker = s"_commit_${batchId}_ledger"
+    def appendLedger(): DataFrame = {
       val written = spark.read.parquet(outputDir)
-      writtenHashes(written).write.mode("append").parquet(ledgerPath)
+      // duplicates from a replayed append are harmless to the anti-join
+      ledgerRows(written).write.mode("append").parquet(ledgerPath)
       writeMarker(spark, ledgerPath, ledgerMarker)
       written
-      // finally, not success-path only: a failed write must not strand
-      // the cached hashes for the session lifetime (retry loops would
-      // leak one copy per attempt)
-      } finally sim.unpersist()
+    }
+    if (markerExists(spark, ledgerPath, ledgerMarker)) {
+      // fully committed: read-only replay
+      spark.read.parquet(outputDir)
+    } else if (markerExists(spark, ledgerPath, outMarker)) {
+      // output durable but the ledger append may not have committed:
+      // re-append from the written rows, then seal. Never touches
+      // outputDir.
+      appendLedger()
+    } else {
+      survivors.write.mode("overwrite").parquet(outputDir)
+      writeMarker(spark, ledgerPath, outMarker)
+      appendLedger()
     }
   }
 

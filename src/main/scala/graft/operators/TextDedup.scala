@@ -782,7 +782,7 @@ object TextDedup {
       textCol: String,
       maxHamming: Int = 10,
       shingleN: Int = 2): DataFrame =
-    simhashPairsOf(simhashOf(df, idCol, textCol, shingleN).persist(), maxHamming)
+    simhashPairsOf(simhashOf(df, idCol, textCol, shingleN), maxHamming)
 
   /** Pairwise n-gram Jaccard over a bounded id range (the exhaustive
     * baseline the LSH paths approximate; at scale use minhashLshPairs

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing over `documents` (text bytes standing in
   * for media payloads): metadata extraction and frame sampling are
-  * oracle-matched (byte lengths + sha256 are engine-agnostic); the
-  * stubbed per-partition decode is rows-only (its determinism is
-  * asserted by MultimodalSpec instead).
+  * oracle-matched (byte lengths + sha256 are engine-agnostic), and so
+  * is the stubbed per-partition decode (its determinism is asserted by
+  * MultimodalSpec as well).
   */
 object MultimodalQueries {
 

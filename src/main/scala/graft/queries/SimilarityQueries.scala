@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   * The brute-force top-k is the exact baseline with a full DuckDB
-  * oracle; the LSH variant is the scale path — its oracle is the
-  * recall spec (SimilaritySpec) against the brute-force answer, so the
-  * driver records rows-only for it.
+  * oracle; the LSH variant is the scale path, oracle-matched too, and
+  * its recall against the brute-force answer is SimilaritySpec's.
   */
 object SimilarityQueries {
 

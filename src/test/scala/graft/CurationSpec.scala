@@ -205,28 +205,22 @@ class CurationSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/out2").count() == 1)
   }
 
-  test("connectedComponents throws on non-convergence instead of partial labels") {
+  test("connectedComponents labels a chain deeper than min-label propagation's old cap") {
     import graft.operators.DupGraph
-    // an 11-edge chain has diameter 11: four propagation rounds leave
-    // label-inconsistent edges, and silent partial labels would hand
-    // wrong clusters to dedup
-    // localEdgeThreshold=0 forces the DISTRIBUTED rounds — the default
-    // size guard would solve 11 edges on the driver exactly and never
-    // exercise the convergence certificate this test exists to pin
-    val chain = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      DupGraph.connectedComponents(chain, maxIter = 4, localEdgeThreshold = 0)
-    }
-    // the default cap converges it and labels the whole chain min=1
+    // a 200-node chain has diameter 199: min-label propagation needs a
+    // round per hop (it threw past 20); star contraction needs
+    // O(log n). localEdgeThreshold=0 forces the DISTRIBUTED path — the
+    // default size guard would solve 199 edges on the driver
+    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val cc = DupGraph.connectedComponents(chain, localEdgeThreshold = 0)
       .as[(Long, Long)].collect().toMap
-    assert(cc.values.toSet == Set(1L) && cc.size == 12)
+    assert(cc.size == 200 && cc.values.toSet == Set(1L))
   }
 
   test("connectedComponents local union-find matches the distributed labeling") {
     import graft.operators.DupGraph
     // two chains + a triangle + a self-loop: nontrivial component mix;
-    // the guarded driver path and the distributed min-label rounds
+    // the guarded driver path and the distributed star contraction
     // must produce identical (node, component) sets
     val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),          // chain -> comp 1

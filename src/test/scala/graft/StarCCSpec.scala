@@ -36,8 +36,8 @@ class StarCCSpec extends SparkSpec {
   }
 
   test("connectedComponentsStars handles a deep path in logarithmic rounds") {
-    // a 200-node path has diameter 199: label propagation would need
-    // ~200 rounds; star contraction must finish far inside 30 (its
+    // a 200-node path has diameter 199: min-label propagation would
+    // need ~200 rounds; star contraction must finish far inside 30 (its
     // default cap — non-convergence throws, so passing proves O(log n))
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val cc = DupGraph.connectedComponentsStars(chain).as[(Long, Long)].collect()
@@ -49,7 +49,7 @@ class StarCCSpec extends SparkSpec {
     assert(cc2.toMap == cc.toMap)
   }
 
-  test("connectedComponentsStars matches label propagation on the same edges") {
+  test("connectedComponentsStars matches the driver union-find on the same edges") {
     val rnd = new scala.util.Random(7)
     // keep self-loops in: both implementations must agree that a
     // self-loop node appears in the output as its own component

@@ -60,6 +60,18 @@ class TextOpsSpec extends SparkSpec {
     assert(banded == brute)
   }
 
+  test("simhashPairs leaves no cached frame behind") {
+    val cacheManager = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog every day"),
+      (2L, "the quick brown fox jumps over the lazy cat every day"),
+      (3L, "completely different content about spark shuffles and joins")
+    ).toDF("doc_id", "text")
+    assert(TextDedup.simhashPairs(docs, "doc_id", "text").collect().nonEmpty)
+    assert(cacheManager.isEmpty, "simhashPairs left a cached frame behind")
+  }
+
   test("cosine matches a hand-computed value") {
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f))).toDF("a", "b")
     val got = df.select(Similarity.cosine($"a", $"b").as("c")).as[Double].head()
