@@ -36,12 +36,26 @@ import org.apache.spark.sql.expressions.Window
 object Dedup {
 
   final case class DedupResult(
-      survivors: DataFrame,
-      removed: DataFrame,
       /** the input plus one window column per key set; both splits
         * filter it
         */
-      flagged: DataFrame) {
+      flagged: DataFrame,
+      /** TRUE for the rows of `flagged` that survive every key set */
+      survives: Column,
+      /** `rn`, the rank at the key set that removed a row, when ranked */
+      rank: Option[Column],
+      helpers: Seq[String]) {
+
+    lazy val survivors: DataFrame = flagged.filter(survives).drop(helpers: _*)
+    lazy val removed: DataFrame = removedFrom(flagged)
+
+    /** The removed split of `flagged`, or of a frame over it with the
+      * same columns (an observed one).
+      */
+    def removedFrom(df: DataFrame): DataFrame = {
+      val captured = df.filter(!survives)
+      rank.fold(captured)(captured.withColumn(RnCol, _)).drop(helpers: _*)
+    }
 
     /** Always empty: dedup persists nothing. Kept only so the
       * benchmark's `perfbench.Driver`, which releases it, compiles
@@ -77,12 +91,9 @@ object Dedup {
           if (ranked) row_number().over(w.orderBy(order)).cast("long") else count(lit(1)).over(w)),
           lost :+ removes)
     }
-    val captured = flagged.filter(!alive(lost))
     // a removed row ranks 1 at every key set before the one removing it
-    val removed =
-      if (ranked && names.nonEmpty)
-        captured.withColumn(RnCol, coalesce(names.map(n => when(col(n) > 1, col(n))): _*))
-      else captured
-    DedupResult(flagged.filter(alive(lost)).drop(names: _*), removed.drop(names: _*), flagged)
+    val rank = Option.when(ranked && names.nonEmpty)(
+      coalesce(names.map(n => when(col(n) > 1, col(n))): _*))
+    DedupResult(flagged, alive(lost), rank, names)
   }
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import graft.plans.{BestCentroid, CdcChunks, CosineSim, GramianAgg, Hash60Array, HashedShingles, HyperplaneBuckets, MinHashSig, SimHash60, SquaredDist, VecMeanAgg, VecWeightedSumAgg, WinnowFingerprints}
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{ArrayBinarySearch, Expression, Literal}
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /** Session registration + Column builders for the native Catalyst
@@ -46,7 +46,8 @@ object GraftFunctions {
       es(0), intArg(es(1), "graft_cdc_chunks"), longArg(es(2), "graft_cdc_chunks"))),
     "graft_gramian" -> (es => GramianAgg(es(0))),
     "graft_vec_mean" -> (es => VecMeanAgg(es(0))),
-    "graft_vec_wsum" -> (es => VecWeightedSumAgg(es(0), es(1))))
+    "graft_vec_wsum" -> (es => VecWeightedSumAgg(es(0), es(1))),
+    "graft_binary_search" -> (es => ArrayBinarySearch(es(0), es(1))))
 
   def register(spark: SparkSession): Unit =
     functions.foreach { case (name, builder) =>
@@ -138,4 +139,13 @@ object GraftFunctions {
     */
   def vecWeightedSum(vec: Column, weight: Column): Column =
     call_function("graft_vec_wsum", vec, weight)
+
+  /** Spark's own binary search (not reachable from the public Column
+    * API): the index of `value` in the ascending array `sorted`, else
+    * `-(insertion point) - 1`, as `java.util.Arrays.binarySearch`.
+    * Over a literal array the search runs on one array built at
+    * planning, in generated code.
+    */
+  def binarySearch(sorted: Column, value: Column): Column =
+    call_function("graft_binary_search", sorted, value)
 }

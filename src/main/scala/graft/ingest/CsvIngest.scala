@@ -2,13 +2,14 @@ package graft.ingest
 
 import com.univocity.parsers.csv.CsvParser
 import graft.config.EntitySpec
+import graft.functions.GraftFunctions
 import graft.plans.SqlIdent
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructField, StructType}
 
 /** Source reader (reference main.py:432 pd.read_csv).
   *
@@ -53,14 +54,6 @@ object CsvIngest {
     */
   val MalformedRecord = "graft.malformedRecord"
 
-  /** Metadata key on a read's `_row_id` column: the number of rows the
-    * mint numbered, so the ids are exactly `1..n`.
-    */
-  private val RowCount = "graft.rowCount"
-
-  /** The row count a read's mint took, from [[RowCount]]. */
-  def rowCount(df: DataFrame): Long = df.schema(RowId).metadata.getLong(RowCount)
-
   /** The mint's group key: a row's source file and the start of the
     * read block holding it. A csv file is one block (start 0); a
     * json/parquet/orc split is one contiguous, in-order chunk of its
@@ -72,6 +65,13 @@ object CsvIngest {
     * surface): csv is the reference's path; json/parquet/orc sources are
     * normalized to all-string columns so the same lexical validation
     * pipeline applies regardless of the wire format.
+    *
+    * A query on a csv read that needs only its corrupt-record column
+    * (say, counting the malformed rows straight off the read) fails
+    * with Spark's UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN:
+    * cache the frame first, or select a data column too.
+    * [[graft.pipeline.Pipeline]] persists the whole validated frame, so
+    * it is not affected.
     */
   def read(spark: SparkSession, spec: EntitySpec): DataFrame =
     spec.format match {
@@ -93,7 +93,8 @@ object CsvIngest {
       RecordOptions, false, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
     // the first record of the lexically first file with a non-empty line
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val header = spark.read.text(path).inputFiles.sorted.iterator
+    val files = spark.read.text(path).inputFiles.sorted
+    val header = files.iterator
       .flatMap(f => CSVUtils.readHeaderLine(new Path(f), options, hadoopConf))
       .nextOption()
       .fold(Array.empty[String])(line =>
@@ -104,7 +105,8 @@ object CsvIngest {
     // a header it had to rename can only be mapped by position
     val raw = spark.read.options(csvOptions(corrupt, enforceSchema = names != header.toSeq))
       .schema(csvSchema(names, corrupt)).csv(path)
-    mintRowIds(raw, sourceKey, raw.columns.map(c => col(SqlIdent.quote(c))))
+    // a lone file is one group, read by scan partition 0: no job
+    mint(raw, Option.when(files.length > 1)(sourceKey), raw.columns.map(c => col(SqlIdent.quote(c))))
   }
 
   /** The csv dialect of every read and write: a header line, and RFC
@@ -134,33 +136,50 @@ object CsvIngest {
     * (group key order, position within group), returned over
     * `data :+ _row_id`. Each `key` group's rows must be contiguous, in
     * input order, in one partition, so `monotonically_increasing_id`
-    * minus the group's first id is the in-group offset.
+    * (`seq`) runs densely through each group, and
+    * `_row_id = seq + offset(group)`.
     *
-    * One small aggregate job collects each group's count and first id;
-    * the key-ordered counts sum into bases, broadcast-joined back on the
-    * key (one hash lookup per row). Their total, the row count, tags
-    * `_row_id` as [[RowCount]], so no caller needs a job to count the
-    * rows.
+    * One small aggregate job collects each group's count and first
+    * `seq`; the key-ordered counts sum into bases, and each group's
+    * offset is its base minus its first `seq`, plus 1. The offsets go
+    * into the plan as a literal lookup on `seq`: a row's group is the
+    * one whose first `seq` is the greatest not above the row's own,
+    * found by a binary search over the groups' sorted first `seq`s, two
+    * literal arrays (generated code, O(log groups) per row, no join and
+    * no broadcast).
     *
     * The offsets are computed eagerly against the scan's partition
     * layout, which is a function of the input files, the
     * `spark.sql.files.*` split settings and the default parallelism;
     * keep those fixed until the frame's last action (or persist it).
     */
-  def mintRowIds(df: DataFrame, key: Column, data: Seq[Column]): DataFrame = {
-    val Seq(g, seq, off) = Seq("_g", "_seq", "_offset").map(SqlIdent.freshName(_, df.columns))
-    val keyed = df.select(col("*"), key.as(g), monotonically_increasing_id().as(seq))
-    // one row per group, sorted in one task in Spark's own key order
-    // (file paths byte-wise, then block start)
-    val groups = keyed.groupBy(g).agg(count(lit(1)), min(seq))
-      .coalesce(1).sortWithinPartitions(g).collect()
-    val bases = groups.scanLeft(0L)(_ + _.getLong(1))
-    val offsets = groups.zip(bases)
-      .map { case (r, base) => Row(r.get(0), base - r.getLong(2) + 1) }
-    val table = df.sparkSession.createDataFrame(java.util.Arrays.asList(offsets: _*),
-      StructType(Seq(keyed.schema(g), StructField(off, LongType))))
-    val rows = new MetadataBuilder().putLong(RowCount, bases.last).build()
-    keyed.join(broadcast(table), Seq(g), "left")
-      .select(data :+ (col(seq) + col(off)).as(RowId, rows): _*)
+  def mintRowIds(df: DataFrame, key: Column, data: Seq[Column]): DataFrame =
+    mint(df, Some(key), data)
+
+  /** [[mintRowIds]], where no `key` means the rows are one group that
+    * starts scan partition 0 (a single csv file is never split): its
+    * first `seq` is 0 and its offset 1, known without the job.
+    */
+  private def mint(df: DataFrame, key: Option[Column], data: Seq[Column]): DataFrame = {
+    val Seq(g, seq) = Seq("_g", "_seq").map(SqlIdent.freshName(_, df.columns))
+    val sequenced = df.select(col("*"), monotonically_increasing_id().as(seq))
+    // (first seq, offset) of each group
+    val runs = key.fold(Seq(0L -> 1L)) { k =>
+      // one row per group, sorted in one task in Spark's own key order
+      // (file paths byte-wise, then block start)
+      val groups = df.select(k.as(g), monotonically_increasing_id().as(seq))
+        .groupBy(g).agg(count(lit(1)), min(seq))
+        .coalesce(1).sortWithinPartitions(g).collect().toSeq
+      groups.zip(groups.scanLeft(0L)(_ + _.getLong(1)))
+        .map { case (r, base) => r.getLong(2) -> (base - r.getLong(2) + 1) }
+    }
+    // a row's group is the one whose first seq is the greatest not above
+    // the row's own: a binary search over the sorted first seqs, which
+    // gives -(insertion point) - 1 for a seq that starts no group
+    val (firsts, offsets) = runs.sortBy(_._1).unzip
+    GraftFunctions.register(df.sparkSession)
+    val i = GraftFunctions.binarySearch(lit(firsts.toArray), col(seq))
+    val offset = lit(offsets.toArray)(greatest(i, -i - 2))
+    sequenced.select(data :+ (col(seq) + offset).as(RowId): _*)
   }
 }

@@ -7,7 +7,8 @@ import graft.project.Projections
 import graft.rules.CustomRules
 import graft.sinks.Sinks
 import graft.validate.SchemaValidator
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, count_if, lit}
 import org.apache.spark.storage.StorageLevel
 import java.time.LocalDate
 
@@ -20,16 +21,26 @@ import java.time.LocalDate
   * DuckDB tables (CTAS, main.py:90-95); here only this module persists
   * (besides a `table` projection's CTAS cache), three frames:
   *   - the validated input, read by the error and valid splits;
-  *   - the flagged dedup frame, read by the rule counts, the rule issue
-  *     writes and the stage;
+  *   - the flagged dedup frame, read by the duplicates write, the rule
+  *     issue writes and the stage;
   *   - the stage, sorted by row id once for every projection.
-  * The first write over a held frame builds it, under AQE in a
-  * table-cache job of its own at the frame's partitioning (the scan's,
-  * or the dedup window's), so a single-file write's one task reads the
-  * cache rather than running ingest, validation or the window.
-  * The row id mint counts the input rows, every output is one write
-  * job, one aggregate job counts every rule, and the other summary
-  * counts are the row counts the writes observe.
+  * The first write over a held frame builds it. Under AQE a frame whose
+  * plan shuffles (the dedup window, the stage's sort) is built by a
+  * table-cache job of its own at its partitioning, so a single-file
+  * write's one task reads the cache rather than running the window.
+  * The validated frame's plan does not shuffle, so the error file's
+  * one-task write would build it in that one task: when it spans more
+  * than one scan partition, a no-op write builds it first, one task
+  * per partition.
+  *
+  * Every output is one write job, and every summary count is a row
+  * count a write observes: the schema-error write also counts the
+  * held validated frame below its error filter (the total), and the
+  * duplicates write counts each rule's invalid survivors below its
+  * own, so only a rule with failing rows is written. No job only
+  * counts. The other jobs are the row-id mint's aggregate for a
+  * multi-file or non-csv source, the multi-partition build above, and
+  * the rules' one aggregate when the config has rules but no key set.
   *
   * Quirks kept for parity:
   *   - `custom_validation_mode == "stop"` also gates *schema* errors
@@ -93,17 +104,22 @@ object Pipeline {
     }
 
     try {
-      // 1. ingest + 2. schema validation. The id mint counts the input
-      // rows; the validated frame is held for both splits and built by
-      // its own table-cache job at the scan's partitioning, ahead of the
-      // error file's one-task write. The dedup plan is built before any
-      // write, so a reserved column name fails the run with no output.
+      // 1. ingest + 2. schema validation, held for both splits. The dedup
+      // plan is built before any write, so a reserved column name fails
+      // the run with no output. The error file's one-task write counts
+      // every row read, below its error filter.
       val input = CsvIngest.read(spark, spec)
-      val totalRows = CsvIngest.rowCount(input)
       val vr = SchemaValidator.validate(input, spec.fields)
       hold(vr.flagged)
       val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
-      val schemaErrorRows = Sinks.saveErrors(vr.errors, "schema_validation", entityName, outputDir)
+      // the held frame's own plan, a scan of the cache, has one partition
+      // per scan partition
+      if (vr.flagged.queryExecution.toRdd.getNumPartitions > 1)
+        vr.flagged.write.format("noop").mode("overwrite").save()
+      val read = Observation()
+      val schemaErrors = SchemaValidator.errorRows(vr.flagged.observe(read, count(lit(1)).as("rows")))
+      val schemaErrorRows = Sinks.saveErrors(schemaErrors, "schema_validation", entityName, outputDir)
+      val totalRows = read.get("rows").asInstanceOf[Long]
       val validRows = totalRows - schemaErrorRows
 
       // the stop gate needs only the counts taken so far
@@ -111,19 +127,32 @@ object Pipeline {
         PipelineResult(
           PipelineSummary(totalRows, validRows, schemaErrorRows, 0, 0,
             Map.empty, stoppedAtSchemaErrors = true),
-          None, vr.errors, None, Seq.empty, Seq.empty, cached.result())
+          None, schemaErrors, None, Seq.empty, Seq.empty, cached.result())
       else {
-        // 3. raw (the valid split) + 4. dedup raw → stage (main.py:97-159).
-        // The duplicates write builds the held flagged frame; the
-        // survivors are a filter over it.
+        // 3. raw (the valid split) + 4. dedup raw → stage (main.py:97-159)
+        // + 5. custom rules (main.py:161-197). The duplicates write builds
+        // the held flagged frame and, below its filter, counts each
+        // rule's invalid rows among the survivors. With no key set that
+        // filter is a constant false, which the optimizer prunes with
+        // anything under it, so the rules' one aggregate counts them.
         hold(dd.flagged)
-        val duplicateRowsRemoved = Sinks.saveErrors(dd.removed, "duplicates", entityName, outputDir)
-
-        // 5. custom rules (main.py:161-197); stop mode raises out of here
-        // after the one counting job, like the reference's ValueError.
-        val rr = CustomRules.execute(
+        val rr = CustomRules.compile(
           dd.survivors, spec.rules, spec.settings.customValidationMode, asOf)
-        for (issue <- rr.issues)
+        val ruleCounts = rr.invalid.zipWithIndex.map { case (inv, i) =>
+          count_if(dd.survives && inv).as(s"rule_$i")
+        }
+        val observed = spec.settings.uniqueComposite.nonEmpty && ruleCounts.nonEmpty
+        val counted = Observation()
+        val duplicateRowsRemoved = Sinks.saveErrors(
+          if (observed) dd.removedFrom(dd.flagged.observe(counted, ruleCounts.head, ruleCounts.tail: _*))
+          else dd.removed,
+          "duplicates", entityName, outputDir)
+        // stop mode raises here, before any rule issue write, like the
+        // reference's ValueError
+        val ruleIssues =
+          if (observed) rr.issuesOf(ruleCounts.indices.map(i => counted.get(s"rule_$i").asInstanceOf[Long]))
+          else rr.issues
+        for (issue <- ruleIssues)
           Sinks.saveErrors(issue.invalidRows, s"custom_${issue.field}", entityName, outputDir)
 
         // 6. projections (user SQL over the stage view). The stage is
@@ -148,11 +177,11 @@ object Pipeline {
             totalRows = totalRows,
             validRows = validRows,
             schemaErrorRows = schemaErrorRows,
-            customInvalidRows = rr.totalInvalidRows,
+            customInvalidRows = ruleIssues.map(_.invalidCount).sum,
             duplicateRowsRemoved = duplicateRowsRemoved,
             projectionRows = projectionRows,
             stoppedAtSchemaErrors = false),
-          Some(stage), vr.errors, Some(dd.removed), rr.issues, projections, cached.result())
+          Some(stage), schemaErrors, Some(dd.removed), ruleIssues, projections, cached.result())
       }
     } catch {
       case t: Throwable =>

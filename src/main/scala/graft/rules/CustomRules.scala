@@ -65,10 +65,39 @@ object CustomRules {
       invalidRows: DataFrame,
       invalidCount: Long)
 
-  final case class RulesResult(
-      survivors: DataFrame,
-      issues: Seq[RuleIssue],
-      totalInvalidRows: Long) {
+  /** Compiled rules over an input: `survivors` and, per known rule in
+    * config order, `invalid`, the predicate its invalid rows fail.
+    */
+  final class RulesResult private[CustomRules] (
+      val survivors: DataFrame,
+      val invalid: Seq[Column],
+      known: Seq[RuleSpec],
+      input: DataFrame,
+      mode: String) {
+
+    /** The rules whose invalid sets hold rows, given each set's row
+      * count (one per `invalid`, in order), the rows a filter over the
+      * input; in `stop` mode the first such rule raises instead.
+      */
+    def issuesOf(counts: Seq[Long]): Seq[RuleIssue] = {
+      val failing = known.zip(invalid).zip(counts).collect {
+        case ((spec, inv), n) if n > 0 => RuleIssue(spec.field, spec.validation, input.filter(inv), n)
+      }
+      if (mode == "stop") failing.headOption.foreach { i =>
+        throw new ValidationStopException(
+          s"Custom validation failed for field '${i.field}' with ${i.validation}.")
+      }
+      failing
+    }
+
+    /** [[issuesOf]] the counts of one aggregate job over the input, run
+      * on first use.
+      */
+    lazy val issues: Seq[RuleIssue] = issuesOf(
+      if (invalid.isEmpty) Seq.empty
+      else input.select(invalid.map(count_if): _*).head().toSeq.map(_.asInstanceOf[Long]))
+
+    def totalInvalidRows: Long = issues.map(_.invalidCount).sum
 
     /** Always empty: rules persist nothing. Kept only so the
       * benchmark's `perfbench.Driver`, which releases it, compiles
@@ -78,16 +107,17 @@ object CustomRules {
   }
 
   /** Sequential rule application with stop/skip modes
-    * (main.py:177-194), as one plan over `df`: rule i's invalid rows
-    * are the rows its predicate fails (a null verdict passes) and, in
-    * `skip` mode, every earlier rule passed — the rows the reference's
-    * earlier DELETEs leave. One aggregate job counts every rule; `stop`
-    * then raises on the first rule with a failing row, before any
-    * write; `skip` filters the failing rows out of the survivors. The
-    * issue sets and the survivors are filters over `df`; nothing is
-    * persisted. Unknown rule names are ignored, like the if-chain.
+    * (main.py:177-194), as one plan over `df`, running no job: rule i's
+    * invalid rows are the rows its predicate fails (a null verdict
+    * passes) and, in `skip` mode, every earlier rule passed — the rows
+    * the reference's earlier DELETEs leave. `skip` filters the failing
+    * rows out of the survivors. The counts are the caller's: the lazy
+    * [[RulesResult.issues]], or its own through
+    * [[RulesResult.issuesOf]], where `stop` raises on the first rule
+    * with a failing row. Nothing is persisted. Unknown rule names are
+    * ignored, like the if-chain.
     */
-  def execute(
+  def compile(
       df: DataFrame,
       rules: Seq[RuleSpec],
       mode: String,
@@ -98,17 +128,21 @@ object CustomRules {
     val invalid = fails.indices.map { i =>
       if (mode == "skip") fails.take(i).foldLeft(fails(i))(_ && !_) else fails(i)
     }
-    val counts = if (invalid.isEmpty) Seq.empty[Long]
-      else df.select(invalid.map(count_if): _*).head().toSeq.map(_.asInstanceOf[Long])
-    if (mode == "stop")
-      known.zip(counts).collectFirst { case ((spec, _), n) if n > 0 => spec }.foreach { spec =>
-        throw new ValidationStopException(
-          s"Custom validation failed for field '${spec.field}' with ${spec.validation}.")
-      }
-    val issues = known.zip(invalid).zip(counts).collect {
-      case (((spec, _), inv), n) if n > 0 => RuleIssue(spec.field, spec.validation, df.filter(inv), n)
-    }
     val survivors = if (mode == "skip" && fails.nonEmpty) df.filter(!fails.reduce(_ || _)) else df
-    RulesResult(survivors, issues, counts.sum)
+    new RulesResult(survivors, invalid, known.map(_._1), df, mode)
+  }
+
+  /** [[compile]], then in `stop` mode one aggregate job counts every
+    * rule and raises on the first with a failing row; `skip` and
+    * `report` run no job until their issues are read.
+    */
+  def execute(
+      df: DataFrame,
+      rules: Seq[RuleSpec],
+      mode: String,
+      asOf: LocalDate): RulesResult = {
+    val r = compile(df, rules, mode, asOf)
+    if (mode == "stop") r.issues
+    r
   }
 }

@@ -13,8 +13,10 @@ import scala.collection.immutable.VectorMap
   * The reference validates row-at-a-time with a dynamic Pydantic model
   * (reference main.py:35-88, loop at 68-78) — its scalability cliff.
   * Here every field rule compiles to a vectorized `Column` predicate;
-  * the whole validation is one whole-stage-codegen'd projection that
-  * appends an error-message array, then one filter each way to split
+  * the validation is one projection that appends an error-message
+  * array, a `concat` of one `when(fails, array(message))` per check
+  * (built-in expressions with generated code: no lambda, which Spark
+  * would evaluate row by row), then one filter each way to split
   * valid/invalid. No UDFs, no row loop — Catalyst sees everything.
   *
   * Error-message parity is by row-set and category, not byte-exact
@@ -117,27 +119,20 @@ object SchemaValidator {
       fields.filterNot(f => filled.columns.contains(f.name))
         .map(f => f.name -> lit(null).cast(StringType))))
     val malformed = input.schema.find(_.metadata.contains(MalformedRecord))
-    val msgs: Seq[Column] = malformed.map { f =>
+    val checks: Seq[(Column, Column)] = malformed.map { f =>
       val raw = col(SqlIdent.quote(f.name))
-      when(raw.isNotNull, concat(
+      (raw.isNotNull, concat(
         lit(s"record: expected ${f.metadata.getLong(MalformedRecord)} fields: "), raw))
-    }.toSeq ++ fields.flatMap(fieldChecks).map {
-      case (failPred, msg) => when(failPred, lit(msg))
-    }
-    // no declared checks → zero-arg array() would be array<null>; pin
-    // the empty-errors type explicitly so the split still works
+    }.toSeq ++ fields.flatMap(fieldChecks).map { case (failPred, msg) => (failPred, lit(msg)) }
+    // a null verdict passes; zero-arg array() would be array<null>, so
+    // the empty-errors type is pinned explicitly
+    val none = array().cast("array<string>")
     val errorsExpr =
-      if (msgs.isEmpty) array().cast("array<string>")
-      else filter(array(msgs: _*), m => m.isNotNull)
+      if (checks.isEmpty) none
+      else concat(checks.map { case (fails, msg) => when(fails, array(msg)).otherwise(none) }: _*)
     val flagged = withDeclared.withColumn(ErrorsCol, errorsExpr)
-    val data = malformed.fold(flagged)(f => flagged.drop(f.name))
 
-    val errors = data
-      .filter(size(col(ErrorsCol)) > 0)
-      .withColumnRenamed(RowId, "row")
-      .withColumnRenamed(ErrorsCol, "errors")
-
-    val valid = data
+    val valid = dataColumns(flagged)
       .filter(size(col(ErrorsCol)) === 0)
       .drop(ErrorsCol)
     val typed = valid.withColumns(fields.flatMap { f =>
@@ -157,6 +152,21 @@ object SchemaValidator {
           expr(s"try_cast(`${f.name}` AS DOUBLE)").cast(LongType)))
       else Some(f.name -> expr(s"try_cast(`${f.name}` AS DOUBLE)"))
     }.toMap)
-    ValidationResult(typed, errors, fields, flagged)
+    ValidationResult(typed, errorRows(flagged), fields, flagged)
   }
+
+  /** The error split of a validation's flagged frame, or of a frame
+    * over it with the same columns: the rows with at least one error,
+    * `_row_id` renamed `row` and the message array `errors`, without
+    * the corrupt-record column.
+    */
+  def errorRows(flagged: DataFrame): DataFrame =
+    dataColumns(flagged)
+      .filter(size(col(ErrorsCol)) > 0)
+      .withColumnRenamed(RowId, "row")
+      .withColumnRenamed(ErrorsCol, "errors")
+
+  /** `df` without its corrupt-record column, if it has one. */
+  private def dataColumns(df: DataFrame): DataFrame =
+    df.drop(df.schema.filter(_.metadata.contains(MalformedRecord)).map(_.name): _*)
 }

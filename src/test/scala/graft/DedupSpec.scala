@@ -151,6 +151,30 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("a single-file csv read mints its ids with no job; a 3-file read runs the offset aggregate") {
+    import graft.ingest.CsvIngest
+    import java.nio.file.{Files, Paths}
+    val lines = Fixtures.employeesCsv.split("\n").toSeq
+    val (header, rows) = (lines.head, lines.tail)
+    val single = tmpDir("mint-single")
+    Files.write(Paths.get(single, "all.csv"), (header +: rows).mkString("\n").getBytes)
+    val multi = tmpDir("mint-multi")
+    for ((chunk, i) <- rows.grouped(5).zipWithIndex)
+      Files.write(Paths.get(multi, s"part-$i.csv"), (header +: chunk).mkString("\n").getBytes)
+    assert(new java.io.File(multi).list().length == 3)
+
+    val (singleDf, singleJobs) = withJobCount(CsvIngest.readPath(spark, single))
+    val (multiDf, multiJobs) = withJobCount(CsvIngest.readPath(spark, multi))
+    assert(singleJobs == 0)
+    assert(multiJobs > 0)
+    // ids 1..n in (file, position) order either way
+    for (df <- Seq(singleDf, multiDf)) {
+      val ordered = df.orderBy(CsvIngest.RowId).collect().toSeq
+      assert(ordered.map(_.getAs[Long](CsvIngest.RowId)) == (1L to rows.size.toLong))
+      assert(ordered.map(_.toSeq.dropRight(2).mkString(",")) == rows)
+    }
+  }
+
   // Differential check: Dedup against a sequential plain-Scala fold over
   // the collected rows: each key set applies to the survivors of the previous one;
   // `first`/`last` keep the lowest/highest `_row_id` per key and capture

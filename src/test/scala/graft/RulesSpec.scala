@@ -110,6 +110,11 @@ class RulesSpec extends SparkSpec {
           val ex = intercept[ValidationStopException](
             CustomRules.execute(df, rules, mode, modelAsOf))
           assert(ex.getMessage.contains(s"for field '$field'"), clue)
+          // compiled with no job; a caller's own counts raise the same way
+          val own = CustomRules.compile(df, rules, mode, modelAsOf)
+          val ownEx = intercept[ValidationStopException](
+            own.issuesOf(own.invalid.map(df.filter(_).count())))
+          assert(ownEx.getMessage == ex.getMessage, clue)
         case Right((survivors, issues)) =>
           val r = CustomRules.execute(df, rules, mode, modelAsOf)
           assert(r.survivors.select("id").as[Long].collect().sorted.toSeq == survivors.sorted, clue)
@@ -117,12 +122,20 @@ class RulesSpec extends SparkSpec {
             i.invalidRows.select("id").as[Long].collect().sorted.toSeq)) ==
             issues.map { case (f, v, ids) => (f, v, ids.sorted) }, clue)
           assert(r.issues.map(_.invalidCount) == issues.map(_._3.size.toLong), clue)
+          // a caller's own counts of the `invalid` predicates give the same issues
+          val own = CustomRules.compile(df, rules, mode, modelAsOf)
+          assert(own.issuesOf(own.invalid.map(df.filter(_).count())).map(i => (i.field,
+            i.invalidRows.select("id").as[Long].collect().sorted.toSeq, i.invalidCount)) ==
+            issues.map { case (f, _, ids) => (f, ids.sorted, ids.size.toLong) }, clue)
           assert(r.totalInvalidRows == issues.map(_._3.size).sum, clue)
           assert(r.survivors.columns.toSeq == Seq("id", "d1", "d2"), clue)
       }
     }
   }
 
+  // `compile` runs no job; `execute` in `stop` mode counts before it
+  // raises; `skip` and `report` run no job until their counts are read,
+  // and then one
   test("all rule counts come from one aggregate job") {
     val df = Seq((1L, "2000-01-01", "2020-01-01"), (2L, "2015-01-01", "1980-01-01"),
       (3L, null, "1970-01-01"), (4L, "1990-01-01", "1990-01-01")).toDF("id", "d1", "d2")
@@ -130,34 +143,24 @@ class RulesSpec extends SparkSpec {
       RuleSpec("d1", "age_gte", Map("min_age" -> 18)),
       RuleSpec("d2", "age_gte", Map("min_age" -> 18)),
       RuleSpec("d1", "age_gte", Map("min_age" -> 40)))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      body
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      jobs.get
-    }
+    def jobsOf(body: => Any): Int = withJobCount(body)._2
     // warm-up: codegen and first-use class loading stay out of the count
-    CustomRules.execute(df, rules, "skip", asOf)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // one global aggregate over the input: an exchange under AQE adds
-      // its map stage as a job of its own
-      val oneAggregate = jobsOf(df.agg(org.apache.spark.sql.functions.count("id")).collect())
-      for (mode <- Seq("skip", "report")) {
-        var r: CustomRules.RulesResult = null
-        assert(jobsOf { r = CustomRules.execute(df, rules, mode, asOf) } == oneAggregate, mode)
-        assert(r.issues.map(_.invalidCount) ==
-          (if (mode == "skip") Seq(1L, 1L, 1L) else Seq(1L, 1L, 3L)), mode)
-      }
-      // stop raises on the first failing rule before any other job
-      assert(jobsOf(intercept[ValidationStopException](
-        CustomRules.execute(df, rules, "stop", asOf))) == oneAggregate)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    CustomRules.execute(df, rules, "skip", asOf).issues
+    // one global aggregate over the input: an exchange under AQE adds
+    // its map stage as a job of its own
+    val oneAggregate = jobsOf(df.agg(org.apache.spark.sql.functions.count("id")).collect())
+    for (mode <- Seq("skip", "report")) {
+      val (r, executeJobs) = withJobCount(CustomRules.execute(df, rules, mode, asOf))
+      assert(executeJobs == 0, mode)
+      assert(r.invalid.size == rules.size, mode)
+      assert(jobsOf(r.issues) == oneAggregate, mode)
+      assert(r.issues.map(_.invalidCount) ==
+        (if (mode == "skip") Seq(1L, 1L, 1L) else Seq(1L, 1L, 3L)), mode)
+      assert(jobsOf(r.totalInvalidRows) == 0, mode)
+    }
+    assert(jobsOf(CustomRules.compile(df, rules, "stop", asOf)) == 0)
+    // stop raises on the first failing rule before any other job
+    assert(jobsOf(intercept[ValidationStopException](
+      CustomRules.execute(df, rules, "stop", asOf))) == oneAggregate)
   }
 }

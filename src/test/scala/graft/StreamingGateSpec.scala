@@ -286,7 +286,7 @@ class StreamingGateSpec extends SparkSpec {
     } :+ Event(250L, ts("2024-03-01 11:50:00"), 5L, "view", 1.0)
     val sentinel = Seq(Event(-1L, ts("2030-01-01 00:00:00"), -1L, "__sentinel", 0.0))
 
-    val srcDir = java.nio.file.Files.createTempDirectory("gq_crash_src").toString
+    val srcDir = tmpDir("gq_crash_src")
     def append(rows: Seq[Event], stamp: Long): Unit = {
       val before = Option(new java.io.File(srcDir).listFiles())
         .map(_.map(_.getName).toSet).getOrElse(Set.empty[String])
@@ -317,8 +317,8 @@ class StreamingGateSpec extends SparkSpec {
       try q.processAllAvailable() finally q.stop()
     }
     // uninterrupted reference (default provider)
-    val refSink = java.nio.file.Files.createTempDirectory("gq_crash_ref").toString
-    val refCkpt = java.nio.file.Files.createTempDirectory("gq_crash_refck").toString
+    val refSink = tmpDir("gq_crash_ref")
+    val refCkpt = tmpDir("gq_crash_refck")
     drainAll(spark, refSink, refCkpt)
     val outSchema = chain(spark).schema
     val want = normalize(spark.read.schema(outSchema).parquet(refSink))
@@ -331,8 +331,8 @@ class StreamingGateSpec extends SparkSpec {
       if (provider == "rocksdb")
         ss.conf.set("spark.sql.streaming.stateStore.providerClass",
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val sink = java.nio.file.Files.createTempDirectory(s"gq_crash_$provider").toString
-      val ckpt = java.nio.file.Files.createTempDirectory(s"gq_crash_ck_$provider").toString
+      val sink = tmpDir(s"gq_crash_$provider")
+      val ckpt = tmpDir(s"gq_crash_ck_$provider")
       // run 1: kill after the first micro-batch commits
       val q1 = chain(ss).writeStream.format("parquet").option("path", sink)
         .option("checkpointLocation", ckpt).outputMode("append").start()

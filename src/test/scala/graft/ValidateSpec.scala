@@ -81,6 +81,32 @@ class ValidateSpec extends SparkSpec {
     assert(vr.errors.columns.contains("extra"))
   }
 
+  test("the error array is built in generated code, in check order, a null verdict passing") {
+    import spark.implicits._
+    val vr = SchemaValidator.validate(CsvIngest.readPath(spark, entityCsv), entity.fields)
+    // a lambda (`filter(array, m -> ...)`) is a HigherOrderFunction,
+    // which Spark evaluates row by row outside generated code
+    val plan = vr.flagged.queryExecution.optimizedPlan
+    assert(!plan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.HigherOrderFunction]))), plan)
+
+    val fields = Seq(
+      FieldSpec("a", "int", required = true),
+      FieldSpec("c", "bool"),
+      FieldSpec("d", "int", min = Some(10)))
+    val df = Seq((1L, "x", "maybe", "abc"), (2L, "3", null, "9"), (3L, "4", "1", "12"))
+      .toDF("_row_id", "a", "c", "d")
+    val errors = SchemaValidator.validate(df, fields).errors
+      .select("row", "errors").as[(Long, Seq[String])].collect().toMap
+    // row 1: 'abc' fails d's integer check; its min check's try_cast is
+    // null, a null verdict, which passes
+    assert(errors(1L) == Seq("a: value is not a valid integer", "c: value is not a valid boolean",
+      "d: value is not a valid integer"))
+    assert(errors(2L).map(_.takeWhile(_ != ':')) == Seq("d") &&
+      errors(2L).head.contains("greater than or equal to 10"))
+    assert(errors.keySet == Set(1L, 2L))
+  }
+
   private lazy val entityCsv: String = {
     val dir = tmpDir("validate-csv")
     val (_, csv) = Fixtures.materialize(dir)
