@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions.canonicalFingerprint
+import graft.sinks.Sinks.{markerExists, writeMarker}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,10 +14,9 @@ import org.apache.spark.storage.StorageLevel
   * its survivors, and only then appends their fingerprints.
   *
   * Scale shape: one anti-join of the batch against the ledger on the
-  * fingerprint (shuffle keyed by hash — or shuffle-free if both sides
-  * are bucketed on it, see [[graft.sinks.BucketedSink]]) plus one
-  * within-batch window. The ledger stores only (fingerprint) — bytes
-  * per document, not the document.
+  * fingerprint (shuffle keyed by hash) plus one within-batch window.
+  * The ledger stores only (fingerprint) — bytes per document, not the
+  * document.
   *
   * Failure semantics — a two-marker commit protocol per batch
   * (markers are `_`-prefixed files in the ledger directory, keyed by
@@ -158,22 +158,6 @@ object IncrementalDedup {
       writeMarker(spark, ledgerPath, outMarker)
       appendLedger()
     }
-  }
-
-  private def fs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def markerExists(spark: SparkSession, ledgerPath: String, name: String): Boolean = {
-    val (f, p) = fs(spark, ledgerPath)
-    f.exists(new org.apache.hadoop.fs.Path(p, name))
-  }
-
-  private def writeMarker(spark: SparkSession, ledgerPath: String, name: String): Unit = {
-    val (f, p) = fs(spark, ledgerPath)
-    f.mkdirs(p)
-    f.create(new org.apache.hadoop.fs.Path(p, name), true).close()
   }
 
   /** True only if the ledger holds committed data files (not just job

@@ -17,6 +17,9 @@ import java.time.LocalDate
   *   read CSV → schema validation (vectorized) → raw → dedup →
   *   custom rules → projections → CSV exports + error CSVs → summary
   *
+  * [[run]] is the read, then [[runMinted]], every later stage; the
+  * streaming import runs [[runMinted]] on each micro-batch.
+  *
   * Each stage runs once. The reference materializes raw/stage as
   * DuckDB tables (CTAS, main.py:90-95); here only this module persists
   * (besides a `table` projection's CTAS cache), three frames:
@@ -86,6 +89,9 @@ object Pipeline {
     def unpersist(): Unit = intermediateCaches.foreach(_.unpersist())
   }
 
+  /** Reads the entity's source ([[CsvIngest.read]]), then runs
+    * [[runMinted]] over it.
+    */
   def run(
       spark: SparkSession,
       config: PipelineConfig,
@@ -93,9 +99,23 @@ object Pipeline {
       outputDir: String,
       asOf: LocalDate = LocalDate.now(),
       sourceOverride: Option[String] = None): PipelineResult = {
-
     val spec0 = config.entity(entityName)
-    val spec: EntitySpec = sourceOverride.fold(spec0)(src => spec0.copy(source = src))
+    val spec = sourceOverride.fold(spec0)(src => spec0.copy(source = src))
+    runMinted(CsvIngest.read(spark, spec), spec, outputDir, asOf)
+  }
+
+  /** Every stage after the read, over `input`: the entity's fields as
+    * strings (plus a csv read's corrupt-record column) and a minted
+    * [[CsvIngest.RowId]]. Runs in `input`'s session, which is where the
+    * projections' temp views land.
+    */
+  def runMinted(
+      input: DataFrame,
+      spec: EntitySpec,
+      outputDir: String,
+      asOf: LocalDate = LocalDate.now()): PipelineResult = {
+    val spark = input.sparkSession
+    val entityName = spec.name
     // every frame this run persists; released here if the run fails
     val cached = Seq.newBuilder[DataFrame]
     def hold(df: DataFrame): DataFrame = {
@@ -104,11 +124,10 @@ object Pipeline {
     }
 
     try {
-      // 1. ingest + 2. schema validation, held for both splits. The dedup
-      // plan is built before any write, so a reserved column name fails
-      // the run with no output. The error file's one-task write counts
-      // every row read, below its error filter.
-      val input = CsvIngest.read(spark, spec)
+      // 2. schema validation, held for both splits. The dedup plan is
+      // built before any write, so a reserved column name fails the run
+      // with no output. The error file's one-task write counts every row
+      // read, below its error filter.
       val vr = SchemaValidator.validate(input, spec.fields)
       hold(vr.flagged)
       val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)

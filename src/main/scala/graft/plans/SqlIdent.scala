@@ -6,7 +6,7 @@ package graft.plans
 object SqlIdent {
 
   /** Backtick-quote a column name for embedding in SQL/`selectExpr`
-    * strings (DataProfiler, Quantiles, DataChecks, the ingest mint).
+    * strings (DataProfiler, Quantiles, the ingest mint).
     */
   def quote(name: String): String = s"`${name.replace("`", "``")}`"
 

@@ -262,31 +262,36 @@ object PipelineQueries {
         |       (SELECT md5(string_agg(line, '~' ORDER BY line)) FROM err) AS error_md5""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft_export_rt_").toString
-      val cust = Tables.customer(s, d)
-      // quoted_note forces the CSV writer through quote+escape: the
-      // value itself contains a comma and a double quote
-      val proj = cust.select($"c_custkey", $"c_name", $"c_nationkey", $"c_mktsegment",
-        concat($"c_name", lit(",\""), $"c_mktsegment", lit("\"")).as("quoted_note"))
-      graft.sinks.Sinks.exportProjection(proj, "customer_rt", out)
-      val errs = cust.filter($"c_acctbal" < 0)
-        .select($"c_custkey".as("row"),
-          array(lit("acctbal_negative"), lit("needs_review")).as("errors"))
-      graft.sinks.Sinks.saveErrors(errs, "balance", "customer", out)
+      val tmp = java.nio.file.Files.createTempDirectory("graft_export_rt_")
+      val out = tmp.toString
+      try {
+        val cust = Tables.customer(s, d)
+        // quoted_note forces the CSV writer through quote+escape: the
+        // value itself contains a comma and a double quote
+        val proj = cust.select($"c_custkey", $"c_name", $"c_nationkey", $"c_mktsegment",
+          concat($"c_name", lit(",\""), $"c_mktsegment", lit("\"")).as("quoted_note"))
+        graft.sinks.Sinks.exportProjection(proj, "customer_rt", out)
+        val errs = cust.filter($"c_acctbal" < 0)
+          .select($"c_custkey".as("row"),
+            array(lit("acctbal_negative"), lit("needs_review")).as("errors"))
+        graft.sinks.Sinks.saveErrors(errs, "balance", "customer", out)
 
-      val dialect = graft.ingest.CsvIngest.Dialect
-      val expRead = s.read.options(dialect).csv(s"$out/exports/customer_rt.csv")
-      val errRead = s.read.options(dialect).csv(s"$out/errors/customer_balance_errors.csv")
-      val expLine = concat_ws("|",
-        $"c_custkey", $"c_name", $"c_nationkey", $"c_mktsegment", $"quoted_note")
-      val errLine = concat_ws("|", $"row", $"errors")
-      val expAgg = expRead.agg(
-        count(lit(1)).as("export_rows"),
-        md5(concat_ws("~", array_sort(collect_list(expLine)))).as("export_md5"))
-      val errAgg = errRead.agg(
-        count(lit(1)).as("error_rows"),
-        md5(concat_ws("~", array_sort(collect_list(errLine)))).as("error_md5"))
-      expAgg.crossJoin(errAgg)
+        val dialect = graft.ingest.CsvIngest.Dialect
+        val expRead = s.read.options(dialect).csv(s"$out/exports/customer_rt.csv")
+        val errRead = s.read.options(dialect).csv(s"$out/errors/customer_balance_errors.csv")
+        val expLine = concat_ws("|",
+          $"c_custkey", $"c_name", $"c_nationkey", $"c_mktsegment", $"quoted_note")
+        val errLine = concat_ws("|", $"row", $"errors")
+        val expAgg = expRead.agg(
+          count(lit(1)).as("export_rows"),
+          md5(concat_ws("~", array_sort(collect_list(expLine)))).as("export_md5"))
+        val errAgg = errRead.agg(
+          count(lit(1)).as("error_rows"),
+          md5(concat_ws("~", array_sort(collect_list(errLine)))).as("error_md5"))
+        // the reads are lazy: collect before the files go
+        val agg = expAgg.crossJoin(errAgg)
+        s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
+      } finally graft.sinks.Sinks.deleteTree(tmp)
     }
   )
 }

@@ -3,7 +3,7 @@ package graft.sinks
 import graft.ingest.CsvIngest
 import graft.ingest.CsvIngest.RowId
 import graft.plans.SqlIdent
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -126,6 +126,21 @@ object Sinks {
     dir
   }
 
+  /** Commit markers: an empty `_`-prefixed file `dir/name`, written
+    * once the output it seals is durable, so a replay can tell finished
+    * output from a failed attempt's partial one. Readers of parquet and
+    * csv directories skip `_`-prefixed files.
+    */
+  def markerExists(spark: SparkSession, dir: String, name: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  def writeMarker(spark: SparkSession, dir: String, name: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true).close()
+  }
+
   /** Writes `df` to `dir/fileName` and returns the rows written. A
     * single-file write goes to a temp directory whose one part file is
     * then moved to the target; with `keepEmpty=false` a write of no
@@ -153,6 +168,8 @@ object Sinks {
     rows
   }
 
-  private def deleteTree(p: Path): Unit =
-    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+  /** Deletes `p` and everything under it, if it exists. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
 }

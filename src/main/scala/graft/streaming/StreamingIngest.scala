@@ -1,30 +1,33 @@
 package graft.streaming
 
 import graft.config.EntitySpec
-import graft.dedup.Dedup
 import graft.ingest.CsvIngest
+import graft.pipeline.Pipeline
 import graft.plans.SqlIdent
-import graft.validate.SchemaValidator
+import graft.sinks.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import java.nio.file.Paths
 
-/** Structured-Streaming form of the import pipeline: a file-source
-  * stream of CSVs flows through the same validation/dedup stages via
-  * foreachBatch, appending survivors and errors to parquet sinks.
+/** Structured-Streaming form of the import pipeline: each micro-batch
+  * of a stream is one [[Pipeline.runMinted]] into `outDir/batch_<id>`,
+  * which holds the batch import's layout (`errors/` and `exports/`).
   *
-  * foreachBatch is the right integration point here: the batch
-  * pipeline stages are pure DataFrame→DataFrame functions, so each
-  * micro-batch reuses them unchanged (one code path for batch and
-  * streaming), while cross-batch duplicate suppression composes via
+  * foreachBatch is at-least-once: a batch that fails, or whose commit
+  * Spark did not record, runs again on restart. A marker,
+  * `outDir/_committed/batch_<id>`, is written once the batch's pipeline
+  * has returned, and makes each batch exactly-once: a replay that finds
+  * it skips the batch, and one that does not clears `batch_<id>` and
+  * runs the batch again. Cross-batch duplicate suppression composes via
   * `EventStream.dedupWithinWatermark` upstream when the source has
   * event-time.
   */
 object StreamingIngest {
 
   /** Start the streaming import for an entity: watch `spec.source`
-    * (a directory) for new CSV files, validate + dedup each
-    * micro-batch, append to `outDir/stage` and `outDir/errors`.
+    * (a directory) for new CSV files and run the import on each
+    * micro-batch.
     *
     * Files are read with the batch reader's csv options
     * ([[CsvIngest.csvOptions]]): RFC 4180 records, each file one
@@ -59,12 +62,12 @@ object StreamingIngest {
     startFromSource(stream, spec, outDir, checkpoint)
   }
 
-  /** Run the validate + dedup ingest over ANY streaming source — a
-    * Kafka topic (`readStream.format("kafka")` + a value-parsing
-    * select), a rate source, a socket — whose columns carry the
-    * entity's fields as strings. The file-watching [[start]] is just
-    * this with a CSV directory source; a log-bus deployment swaps the
-    * source expression and nothing downstream changes.
+  /** Run the import over ANY streaming source — a Kafka topic
+    * (`readStream.format("kafka")` + a value-parsing select), a rate
+    * source, a socket — whose columns carry the entity's fields as
+    * strings. The file-watching [[start]] is just this with a CSV
+    * directory source; a log-bus deployment swaps the source expression
+    * and nothing downstream changes.
     *
     * `_row_id` minting:
     *   1. the source carries [[CsvIngest.FileTag]] (the file-watching
@@ -79,7 +82,8 @@ object StreamingIngest {
     *
     * A source column named like an error file's own column (`row`,
     * `errors`, or `rn` under first/last dedup) fails the first batch
-    * before it writes anything, as in the batch pipeline.
+    * before it writes anything, as in the batch import. Outputs are
+    * written to the local filesystem, as [[Sinks]] writes them.
     */
   def startFromSource(
       source: DataFrame,
@@ -90,28 +94,28 @@ object StreamingIngest {
     val missing = spec.fields.map(_.name).filterNot(source.columns.contains)
     require(missing.isEmpty,
       s"streaming source is missing entity fields: ${missing.mkString(", ")}")
+    val commits = s"$outDir/_committed"
 
     source.writeStream
       .queryName(s"graft-ingest-${spec.name}")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val withIds =
-          if (batch.columns.contains(CsvIngest.FileTag))
-            CsvIngest.mintRowIds(batch, col(CsvIngest.FileTag),
-              batch.columns.filterNot(_ == CsvIngest.FileTag).map(c => col(SqlIdent.quote(c))))
-          else
-            batch.withColumn(CsvIngest.RowId, monotonically_increasing_id())
-        val vr = SchemaValidator.validate(withIds, spec.fields)
-        val dd = Dedup(vr.valid, spec.settings.uniqueComposite, spec.settings.effectiveResolution)
-        dd.survivors
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("append").parquet(s"$outDir/stage")
-        val errs = vr.errors.select(col("row"), concat_ws("; ", col("errors")).as("errors"))
-        if (!errs.isEmpty)
-          errs.withColumn("_batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$outDir/errors")
-        ()
+        val marker = s"batch_$batchId"
+        if (!Sinks.markerExists(batch.sparkSession, commits, marker)) {
+          val dir = s"$outDir/batch_$batchId"
+          // a failed attempt's partial output
+          Sinks.deleteTree(Paths.get(dir))
+          val minted =
+            if (batch.columns.contains(CsvIngest.FileTag))
+              CsvIngest.mintRowIds(batch, col(CsvIngest.FileTag),
+                batch.columns.filterNot(_ == CsvIngest.FileTag).map(c => col(SqlIdent.quote(c))))
+            else
+              batch.withColumn(CsvIngest.RowId, monotonically_increasing_id())
+          val result = Pipeline.runMinted(minted, spec, dir)
+          try Sinks.writeMarker(batch.sparkSession, commits, marker)
+          finally result.unpersist()
+        }
       }
       .start()
   }

@@ -1,150 +1,223 @@
 package graft
 
-import graft.config.PipelineConfig
-import graft.sinks.BucketedSink
+import graft.config.{EntitySpec, PipelineConfig}
+import graft.ingest.CsvIngest
+import graft.pipeline.Pipeline
 import graft.streaming.StreamingIngest
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
+import scala.jdk.CollectionConverters._
 
 class StreamingIngestSpec extends SparkSpec {
 
   import spark.implicits._
 
+  private val header = "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country"
+
+  /** The fixture's employees entity, watching a fresh `dir/incoming`. */
+  private def watched(dir: String): EntitySpec = {
+    val srcDir = s"$dir/incoming"
+    Files.createDirectories(Paths.get(srcDir))
+    val (cfgPath, _) = Fixtures.materialize(dir)
+    PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+  }
+
+  private def drop(dir: String, file: String, rows: String*): Unit =
+    Files.writeString(Paths.get(s"$dir/incoming/$file"), (header +: rows).mkString("\n"))
+
+  /** The rows of one of a batch's csv outputs, by column. */
+  private def rows(file: String, cols: String*): Seq[Seq[String]] =
+    spark.read.options(CsvIngest.Dialect + ("multiLine" -> "true"))
+      .csv(file).select(cols.map(col): _*).collect().toSeq.map(r => cols.indices.map(r.getString))
+
+  /** `personal_data` export rows of micro-batch `id`, as (employee_id, email). */
+  private def personal(out: String, id: Long): Seq[(String, String)] =
+    rows(s"$out/batch_$id/exports/personal_data.csv", "employee_id", "email").map(r => (r(0), r(1)))
+
+  /** Every file under `root`, by relative path, with its bytes. */
+  private def files(root: String): Map[String, Seq[Byte]] = {
+    val base = Paths.get(root)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
   test("file-source streaming ingest validates and dedups arriving CSVs") {
     val dir = tmpDir("stream-ingest")
-    val srcDir = s"$dir/incoming"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    val (cfgPath, _) = Fixtures.materialize(dir)
-    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
-
-    val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    val out = s"$dir/out"
+    val query = StreamingIngest.start(spark, watched(dir), out, s"$dir/ckpt")
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$srcDir/batch1.csv"),
-        """company_id,employee_id,first_name,last_name,email,gender,birthday_on,country
-          |1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES
-          |1,1,Ada,Smith,ada2@example.com,female,1980-03-01,ES
-          |1,2,Bad,Row,not-an-email,male,1985-07-15,ES""".stripMargin)
+      drop(dir, "batch1.csv",
+        "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES",
+        "1,1,Ada,Smith,ada2@example.com,female,1980-03-01,ES",
+        "1,2,Bad,Row,not-an-email,male,1985-07-15,ES")
       query.processAllAvailable()
-      val stage = spark.read.parquet(s"$dir/out/stage")
       // dup on (employee_id, company_id) resolved keep-last; bad email rejected
-      assert(stage.count() == 1)
-      assert(stage.select("email").as[String].head() == "ada2@example.com")
-      val errors = spark.read.parquet(s"$dir/out/errors")
-      assert(errors.count() == 1)
+      assert(personal(out, 0) == Seq(("1", "ada2@example.com")))
+      assert(rows(s"$out/batch_0/errors/employees_schema_validation_errors.csv", "row")
+        == Seq(Seq("3")))
+      assert(rows(s"$out/batch_0/errors/employees_duplicates_errors.csv", "email")
+        == Seq(Seq("ada@example.com")))
 
       // a second file arrives: processed incrementally as its own batch
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$srcDir/batch2.csv"),
-        """company_id,employee_id,first_name,last_name,email,gender,birthday_on,country
-          |1,3,Cai,Brown,cai@example.com,male,1990-12-31,FR""".stripMargin)
+      drop(dir, "batch2.csv", "1,3,Cai,Brown,cai@example.com,male,1990-12-31,FR")
       query.processAllAvailable()
-      assert(spark.read.parquet(s"$dir/out/stage").count() == 2)
+      assert(personal(out, 1) == Seq(("3", "cai@example.com")))
+      assert(Files.notExists(Paths.get(s"$out/batch_1/errors")))
     } finally query.stop()
+  }
+
+  test("one micro-batch writes the batch import's error files and exports byte for byte") {
+    val dir = tmpDir("stream-parity")
+    val spec = watched(dir)
+    Files.writeString(Paths.get(s"${spec.source}/employees.csv"), Fixtures.employeesCsv)
+    val cfg = PipelineConfig.load(s"$dir/config.yaml")
+    Pipeline.run(spark, cfg, "employees", s"$dir/batch", sourceOverride = Some(spec.source))
+      .unpersist()
+    val query = StreamingIngest.start(spark, spec, s"$dir/stream", s"$dir/ckpt")
+    try query.processAllAvailable() finally query.stop()
+
+    val batch = files(s"$dir/batch")
+    // schema errors, duplicates, the age rule's issues and both exports
+    assert(batch.keySet.count(_.startsWith("errors")) == 3, batch.keySet)
+    assert(batch.keySet.count(_.startsWith("exports")) == 2, batch.keySet)
+    assert(files(s"$dir/stream/batch_0") == batch)
   }
 
   test("micro-batches with two key sets leave no cached frame behind") {
     val dir = tmpDir("stream-cache")
-    val srcDir = s"$dir/incoming"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
     val (cfgPath, _) = Fixtures.materialize(dir)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(cfgPath),
-      java.nio.file.Files.readString(java.nio.file.Paths.get(cfgPath)).replace(
-        """- ["employee_id", "company_id"]""",
-        """- ["employee_id", "company_id"]
-          |        - ["email"]""".stripMargin))
-    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+    Files.writeString(Paths.get(cfgPath), Files.readString(Paths.get(cfgPath)).replace(
+      """- ["employee_id", "company_id"]""",
+      """- ["employee_id", "company_id"]
+        |        - ["email"]""".stripMargin))
+    Files.createDirectories(Paths.get(s"$dir/incoming"))
+    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = s"$dir/incoming")
     assert(spec.settings.uniqueComposite.size == 2)
-    val header = "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country"
     val cacheManager = spark.sharedState.cacheManager
     spark.catalog.clearCache()
 
-    val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    val out = s"$dir/out"
+    val query = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
     try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/b1.csv"),
-        s"$header\n1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES" +
-          s"\n1,1,Ada,Smith,ada2@example.com,female,1980-03-01,ES" +
-          s"\n1,2,Ben,Jones,ada2@example.com,male,1985-07-15,ES")
+      drop(dir, "b1.csv",
+        "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES",
+        "1,1,Ada,Smith,ada2@example.com,female,1980-03-01,ES",
+        "1,2,Ben,Jones,ada2@example.com,male,1985-07-15,ES")
       query.processAllAvailable()
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/b2.csv"),
-        s"$header\n1,3,Cai,Brown,cai@example.com,male,1990-12-31,FR" +
-          s"\n1,4,Dot,White,cai@example.com,female,1970-01-20,PT")
+      drop(dir, "b2.csv",
+        "1,3,Cai,Brown,cai@example.com,male,1990-12-31,FR",
+        "1,4,Dot,White,cai@example.com,female,1970-01-20,PT")
       query.processAllAvailable()
     } finally query.stop()
     // keep-last on (employee_id, company_id), then on email
-    assert(spark.read.parquet(s"$dir/out/stage").select("employee_id").as[String]
-      .collect().sorted.toSeq == Seq("2", "4"))
+    assert((personal(out, 0) ++ personal(out, 1)).map(_._1) == Seq("2", "4"))
     assert(cacheManager.isEmpty, "a micro-batch left a cached frame behind")
   }
 
   test("checkpoint restart resumes without reprocessing or loss") {
     val dir = tmpDir("stream-restart")
-    val srcDir = s"$dir/incoming"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    val (cfgPath, _) = Fixtures.materialize(dir)
-    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
-    val header = "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country"
+    val spec = watched(dir)
+    val out = s"$dir/out"
 
-    val q1 = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    val q1 = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
     try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$srcDir/b1.csv"),
-        s"$header\n1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES")
+      drop(dir, "b1.csv", "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES")
       q1.processAllAvailable()
-      assert(spark.read.parquet(s"$dir/out/stage").count() == 1)
+      assert(personal(out, 0).map(_._1) == Seq("1"))
     } finally q1.stop()
 
     // new file lands while the query is DOWN; restart from checkpoint
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$srcDir/b2.csv"),
-      s"$header\n1,2,Ben,Jones,ben@example.com,male,1985-07-15,ES")
-    val q2 = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
-    try {
-      q2.processAllAvailable()
-      val stage = spark.read.parquet(s"$dir/out/stage")
-      // b1's row not reprocessed (no duplicate), b2's row not lost
-      assert(stage.count() == 2)
-      assert(stage.select("employee_id").as[String].collect().sorted.toSeq == Seq("1", "2"))
-    } finally q2.stop()
+    drop(dir, "b2.csv", "1,2,Ben,Jones,ben@example.com,male,1985-07-15,ES")
+    val q2 = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
+    try q2.processAllAvailable() finally q2.stop()
+    // b1's row not reprocessed (no duplicate), b2's row not lost
+    assert(personal(out, 0).map(_._1) == Seq("1"))
+    assert(personal(out, 1).map(_._1) == Seq("2"))
+    assert(Files.list(Paths.get(out)).iterator().asScala
+      .count(_.getFileName.toString.startsWith("batch_")) == 2)
+  }
+
+  test("a micro-batch that fails after its first write replays without duplicating rows") {
+    val dir = tmpDir("stream-replay")
+    val spec = watched(dir)
+    val out = s"$dir/out"
+    drop(dir, "b1.csv",
+      "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES",
+      "1,2,Bad,Row,not-an-email,male,1985-07-15,ES")
+    // a batch with no marker clears `batch_0` before it runs, so the
+    // blocker sits outside it, where the markers' directory goes: the
+    // batch fails after all its writes
+    Files.createDirectories(Paths.get(out))
+    val blocker = Paths.get(s"$out/_committed")
+    Files.writeString(blocker, "blocker")
+    val q1 = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
+    try intercept[StreamingQueryException](q1.processAllAvailable()) finally q1.stop()
+    assert(personal(out, 0).map(_._1) == Seq("1"))
+
+    // a partial write of the failed attempt, then a restart: the batch
+    // runs again from a cleared directory
+    Files.delete(blocker)
+    val stale = Paths.get(s"$out/batch_0/exports/stale.csv")
+    Files.writeString(stale, header)
+    val q2 = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
+    try q2.processAllAvailable() finally q2.stop()
+    assert(personal(out, 0).map(_._1) == Seq("1"))
+    assert(rows(s"$out/batch_0/errors/employees_schema_validation_errors.csv", "row")
+      == Seq(Seq("2")))
+    assert(Files.notExists(stale))
+    assert(Files.isRegularFile(blocker.resolve("batch_0")))
+  }
+
+  test("a replayed micro-batch whose marker exists is skipped") {
+    val dir = tmpDir("stream-skip")
+    val spec = watched(dir)
+    val out = s"$dir/out"
+    drop(dir, "b1.csv", "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES")
+    val q1 = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
+    try q1.processAllAvailable() finally q1.stop()
+    // Spark did not record the batch's commit: it runs batch 0 again
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(Paths.get(s"$dir/ckpt/commits/$f")))
+    val sentinel = Paths.get(s"$out/batch_0/exports/sentinel.csv")
+    Files.writeString(sentinel, header)
+    val (_, jobs) = withJobCount {
+      val q2 = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
+      try q2.processAllAvailable() finally q2.stop()
+    }
+    assert(Files.exists(sentinel), "the replay rewrote a committed batch")
+    assert(jobs == 0)
+    assert(Files.exists(Paths.get(s"$dir/ckpt/commits/0")))
   }
 
   test("micro-batch _row_id is file-aware: dedup order is repartition-invariant") {
-    val header = "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country"
     // same two-file batch processed under different shuffle-partition
     // settings must resolve the cross-file duplicate identically:
     // _row_id = (lexical file order, in-file position), never layout
-    val runs = Seq("1", "17").map { parts =>
+    val dirs = Seq("1", "17").map { parts =>
       val dir = tmpDir(s"stream-det-$parts")
-      val srcDir = s"$dir/incoming"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-      val (cfgPath, _) = Fixtures.materialize(dir)
-      val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+      val spec = watched(dir)
       // both files BEFORE the query starts → one micro-batch, two files;
       // key (1,1) duplicates across files, resolution "last" must keep
       // the row from the lexically-later file (b.csv)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$srcDir/a.csv"),
-        s"$header\n1,1,Ada,Smith,from-a@example.com,female,1980-03-01,ES" +
-          s"\n1,2,Bea,Jones,bea@example.com,female,1982-05-05,ES")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$srcDir/b.csv"),
-        s"$header\n1,1,Ada,Smith,from-b@example.com,female,1980-03-01,ES")
+      drop(dir, "a.csv",
+        "1,1,Ada,Smith,from-a@example.com,female,1980-03-01,ES",
+        "1,2,Bea,Jones,bea@example.com,female,1982-05-05,ES")
+      drop(dir, "b.csv", "1,1,Ada,Smith,from-b@example.com,female,1980-03-01,ES")
       val before = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try {
         val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
         try query.processAllAvailable() finally query.stop()
       } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-      spark.read.parquet(s"$dir/out/stage")
-        .select("employee_id", "email", "_row_id")
-        .as[(String, String, Long)].collect().sortBy(_._1).toSeq
+      s"$dir/out"
     }
-    assert(runs.head == runs(1)) // identical across layouts
-    val byEmp = runs.head.map(r => r._1 -> r).toMap
+    // identical across layouts
+    assert(files(s"${dirs.head}/batch_0") == files(s"${dirs(1)}/batch_0"))
     // a.csv's rows minted ids 1,2; b.csv's row id 3; keep-last kept id 3
-    assert(byEmp("1") == (("1", "from-b@example.com", 3L)))
-    assert(byEmp("2") == (("2", "bea@example.com", 2L)))
+    assert(personal(dirs.head, 0) == Seq(("2", "bea@example.com"), ("1", "from-b@example.com")))
+    assert(rows(s"${dirs.head}/batch_0/errors/employees_duplicates_errors.csv", "email")
+      == Seq(Seq("from-a@example.com")))
   }
 
   test("non-file source: a memory stream drives the same ingest pipeline") {
@@ -166,7 +239,8 @@ class StreamingIngestSpec extends SparkSpec {
       lit("1980-03-01").as("birthday_on"),
       lit("ES").as("country"))
 
-    val query = StreamingIngest.startFromSource(source, spec, s"$dir/out", s"$dir/ckpt")
+    val out = s"$dir/out"
+    val query = StreamingIngest.startFromSource(source, spec, out, s"$dir/ckpt")
     try {
       // two fixed micro-batches of ten values: every key repeats twice in each
       input.addData(0L until 10L)
@@ -174,12 +248,9 @@ class StreamingIngestSpec extends SparkSpec {
       input.addData(10L until 20L)
       query.processAllAvailable()
     } finally query.stop()
-    val stage = spark.read.parquet(s"$dir/out/stage")
-    assert(stage.count() > 0, "the memory source produced no staged rows")
     // per micro-batch, survivors are unique on the composite key
-    val maxPerKey = stage.groupBy("_batch_id", "employee_id", "company_id")
-      .count().agg(max("count")).as[Long].head()
-    assert(maxPerKey == 1)
+    for (id <- 0L to 1L)
+      assert(personal(out, id).map(_._1).sorted == Seq("0", "1", "2", "3", "4"))
 
     // a source missing entity fields is rejected up front
     val bad = MemoryStream[Long].toDF()
@@ -198,7 +269,7 @@ class StreamingIngestSpec extends SparkSpec {
       val input = MemoryStream[Long]
       val source = input.toDF().select(
         spec.fields.map(f => lit("1").as(f.name)) :+ $"value".cast("string").as(name): _*)
-      val out = java.nio.file.Paths.get(dir, s"out-$name")
+      val out = Paths.get(dir, s"out-$name")
       val query = StreamingIngest.startFromSource(source, spec, out.toString, s"$dir/ckpt-$name")
       val ex = try {
         input.addData(0L until 3L)
@@ -206,18 +277,15 @@ class StreamingIngestSpec extends SparkSpec {
       } finally query.stop()
       assert(ex.getMessage.contains(s"source column '$name'") && ex.getMessage.contains(file),
         ex.getMessage)
-      assert(java.nio.file.Files.notExists(out))
+      assert(Files.notExists(out))
     }
   }
 
   test("a watched file whose columns differ from the config's order stops the query") {
     val dir = tmpDir("stream-drift")
-    val srcDir = s"$dir/incoming"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    val (cfgPath, _) = Fixtures.materialize(dir)
-    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
+    val spec = watched(dir)
     // employee_id and company_id swapped against the config's declaration
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/swapped.csv"),
+    Files.writeString(Paths.get(s"${spec.source}/swapped.csv"),
       "employee_id,company_id,first_name,last_name,email,gender,birthday_on,country\n" +
         "7,1,Ada,Smith,ada@example.com,female,1980-03-01,ES")
     val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
@@ -227,43 +295,23 @@ class StreamingIngestSpec extends SparkSpec {
       .map(_.getMessage).mkString("\n")
     assert(messages.contains("swapped.csv"), messages)
     assert(messages.contains("employee_id"), messages)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/out/stage")))
+    assert(Files.notExists(Paths.get(s"$dir/out")))
   }
 
   test("a ragged record in a watched file becomes an error row") {
     val dir = tmpDir("stream-ragged")
-    val srcDir = s"$dir/incoming"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    val (cfgPath, _) = Fixtures.materialize(dir)
-    val spec = PipelineConfig.load(cfgPath).entity("employees").copy(source = srcDir)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$srcDir/b1.csv"),
-      "company_id,employee_id,first_name,last_name,email,gender,birthday_on,country\n" +
-        "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES,EXTRA\n" +
-        "1,2,\"Ben\nJr\",Jones,ben@example.com,male,1985-07-15,ES")
-    val query = StreamingIngest.start(spark, spec, s"$dir/out", s"$dir/ckpt")
+    val spec = watched(dir)
+    drop(dir, "b1.csv",
+      "1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES,EXTRA",
+      "1,2,\"Ben\nJr\",Jones,ben@example.com,male,1985-07-15,ES")
+    val out = s"$dir/out"
+    val query = StreamingIngest.start(spark, spec, out, s"$dir/ckpt")
     try query.processAllAvailable() finally query.stop()
-    assert(spark.read.parquet(s"$dir/out/stage").select("first_name", "_row_id")
-      .as[(String, Long)].collect().toSeq == Seq(("Ben\nJr", 2L)))
-    val errors = spark.read.parquet(s"$dir/out/errors").select("row", "errors")
-      .as[(Long, String)].collect().toSeq
-    assert(errors.map(_._1) == Seq(1L))
-    assert(errors.head._2.contains("expected 8 fields: 1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES,EXTRA"))
-  }
-
-  test("bucketed tables join without exchanges") {
-    // warehouse dir is a static conf — the default (./spark-warehouse) serves
-    val facts = (1L to 1000L).map(i => (i % 50, i.toDouble)).toDF("k", "v")
-    val dims = (0L until 50L).map(i => (i, s"dim$i")).toDF("k", "name")
-    BucketedSink.writeBucketed(facts, "b_facts", Seq("k"), 8, sortCols = Seq("k"))
-    BucketedSink.writeBucketed(dims, "b_dims", Seq("k"), 8, sortCols = Seq("k"))
-    try {
-      assert(BucketedSink.joinIsShuffleFree(spark, "b_facts", "b_dims", Seq("k")))
-      // and the join is still correct
-      val n = spark.table("b_facts").join(spark.table("b_dims"), Seq("k")).count()
-      assert(n == 1000)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS b_facts")
-      spark.sql("DROP TABLE IF EXISTS b_dims")
-    }
+    assert(rows(s"$out/batch_0/exports/personal_data.csv", "employee_id", "first_name")
+      == Seq(Seq("2", "Ben\nJr")))
+    val errors = rows(s"$out/batch_0/errors/employees_schema_validation_errors.csv", "row", "errors")
+    assert(errors.map(_.head) == Seq("1"))
+    assert(errors.head(1).contains(
+      "expected 8 fields: 1,1,Ada,Smith,ada@example.com,female,1980-03-01,ES,EXTRA"))
   }
 }
