@@ -26,9 +26,10 @@ import org.apache.spark.sql.types.{MetadataBuilder, StringType, StructField, Str
   * appended); a leading UTF-8 BOM is dropped. Every later file's header
   * must carry the same names in the same order, else the read fails
   * naming the file (a header Spark had to rename is mapped by position
-  * instead, unchecked). A record whose field count is not the header's is
-  * not dropped, split or padded: its raw text lands in a corrupt-record
-  * column, tagged [[MalformedRecord]], that
+  * instead, after each file's raw header is checked on the driver). A
+  * record whose field count is not the header's is not dropped, split or
+  * padded: its raw text lands in a corrupt-record column, tagged
+  * [[MalformedRecord]], that
   * [[graft.validate.SchemaValidator]] turns into a schema error on that
   * row (pandas instead fails the whole file on too many fields and pads
   * too few with NaN).
@@ -94,16 +95,21 @@ object CsvIngest {
     // the first record of the lexically first file with a non-empty line
     val hadoopConf = spark.sessionState.newHadoopConf()
     val files = spark.read.text(path).inputFiles.sorted
-    val header = files.iterator
-      .flatMap(f => CSVUtils.readHeaderLine(new Path(f), options, hadoopConf))
-      .nextOption()
-      .fold(Array.empty[String])(line =>
+    def headerOf(f: String): Option[Array[String]] =
+      CSVUtils.readHeaderLine(new Path(f), options, hadoopConf).map(line =>
         new CsvParser(options.asParserSettings).parseLine(line.stripPrefix("\uFEFF")))
+    val header = files.iterator.flatMap(headerOf).nextOption().getOrElse(Array.empty[String])
     val names = CSVUtils.makeSafeHeader(header, conf.caseSensitiveAnalysis, options).toSeq
     val corrupt = SqlIdent.freshName("_corrupt_record", names)
     // Spark checks each file's header against the schema by raw name, so
-    // a header it had to rename can only be mapped by position
-    val raw = spark.read.options(csvOptions(corrupt, enforceSchema = names != header.toSeq))
+    // a header it had to rename can only be mapped by position: check
+    // each file's raw header here instead
+    val renamed = names != header.toSeq
+    if (renamed) files.find(f => headerOf(f).exists(!_.sameElements(header))).foreach { f =>
+      throw new IllegalArgumentException(
+        s"csv header of $f differs from the first file's (${header.mkString(",")})")
+    }
+    val raw = spark.read.options(csvOptions(corrupt, enforceSchema = renamed))
       .schema(csvSchema(names, corrupt)).csv(path)
     // a lone file is one group, read by scan partition 0: no job
     mint(raw, Option.when(files.length > 1)(sourceKey), raw.columns.map(c => col(SqlIdent.quote(c))))

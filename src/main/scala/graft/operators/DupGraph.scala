@@ -154,9 +154,10 @@ object DupGraph {
     * neighborhood) and a distinct to keep the edge set bounded by the
     * input size (the paper's Lemma: neither op grows the edge count).
     *
-    * The result is certified before returning: one label per node, and
-    * no original edge spans two components (fail-loud, never a silent
-    * partial answer).
+    * The result is certified before returning: no original edge spans
+    * two components (fail-loud, never a silent partial answer). One
+    * label per node needs no check: it follows from the star forest the
+    * loop stops on.
     */
   private def starComponents(raw: DataFrame, maxRounds: Int): DataFrame = {
     // self-loops carry no connectivity but their nodes still count as
@@ -233,36 +234,24 @@ object DupGraph {
         s"requirement failed: connected components did not converge within $maxRounds " +
           "star-contraction rounds")
 
-    // stars → labels: every edge is (node, root); roots label themselves
-    val nodes = raw.select(col("u").as("node"))
+    // stars → labels: every edge is (node, root); roots label themselves.
+    // The loop exits only on a star forest, where every source has
+    // exactly one target (and `cur` is distinct), so the left join gives
+    // one row per node.
+    val labels = raw.select(col("u").as("node"))
       .union(raw.select(col("v").as("node"))).distinct()
-    val labels = nodes
       .join(cur.select(col("u").as("node"), col("v").as("component")), Seq("node"), "left")
       .select(col("node"), coalesce(col("component"), col("node")).as("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // a non-star edge set (possible only on a signature hash
-    // collision) would fan the left join out to >1 row per node —
-    // certify cardinality alongside edge consistency
-    val nLabels = labels.count()
-    val nNodes = nodes.count()
-    if (nLabels != nNodes) {
-      labels.unpersist()
-      throw new IllegalStateException(
-        s"connected components stopped on a non-star edge set ($nLabels labels for $nNodes nodes)")
-    }
+      .localCheckpoint(true)
     // certify: no input edge spans two components
     val inconsistent = input
       .join(labels.select(col("node").as("u"), col("component").as("l_u")), "u")
       .join(labels.select(col("node").as("v"), col("component").as("l_v")), "v")
       .filter(col("l_u") =!= col("l_v")).limit(1).count()
-    if (inconsistent != 0) {
-      labels.unpersist()
+    if (inconsistent != 0)
       throw new IllegalStateException(
         "connected components produced an inconsistent labeling (internal error)")
-    }
-    val out = labels.localCheckpoint(true)
-    labels.unpersist()
-    out
+    labels
   }
 
   /** One representative row per duplicate cluster: resolve the pair

@@ -142,7 +142,7 @@ object TextDedup {
 
     // candidate pairs on bare ids (distinct over two longs — cheap),
     // shingle sets joined back only for the surviving pairs
-    val banded = bandedKeys(sh, bands, rowsPerBand, carrySig = false)
+    val banded = bandedKeys(sh, (0 until bands).map(bd => (bd * rowsPerBand, rowsPerBand)))
     val a = banded.select(col("band"), col("bkey"), col("doc_id").as("id_a"))
     val b = banded.select(col("band"), col("bkey"), col("doc_id").as("id_b"))
     val candidates = a.join(b, Seq("band", "bkey"))
@@ -196,284 +196,177 @@ object TextDedup {
     * picks the banding before a 100 TB run (more bands = higher
     * recall, quadratically more candidates to verify).
     *
-    * One wave, not one per config: every config's band rows carry a
-    * config tag into a SINGLE self-join on (cfg, band, bkey), and the
-    * expensive jaccard verify runs once per DISTINCT candidate pair
-    * across configs (the per-config verdicts are then joined back) —
-    * a pair surfacing under 3 of 4 bandings costs one array
-    * intersection, not three. The verify is explicitly repartitioned:
-    * its input is few rows × big shingle arrays, exactly the
-    * small-byte/heavy-CPU shape AQE's byte-based coalescing collapses
-    * to one task.
+    * Every config reads the one flagged pair stream of
+    * [[tuningPairs]]: the shingle arrays attach to each distinct pair
+    * once, its jaccard verdict is computed in-row, and one global
+    * aggregate of conditional sums yields every config's counts — a
+    * pair surfacing under 3 of 4 bandings costs one array
+    * intersection, not three.
     */
   def lshTuningTable(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 2, threshold: Double = 0.8, numHashes: Int = 12,
       configs: Seq[(Int, Int)] = Seq((2, 6), (3, 4), (4, 3), (6, 2))): DataFrame = {
-    require(configs.nonEmpty && configs.forall { case (b, r) => b * r == numHashes },
-      s"every (bands, rowsPerBand) config must multiply to numHashes=$numHashes")
-    require(configs.map(_._1).distinct.size == configs.size,
-      "band counts must be distinct (bands is the config key)")
-    // Both heavy stages here break AQE's bytes≈cost assumption (the
-    // bucket join's output is quadratic per bucket; the verify is
-    // array-CPU-bound) and coalesce to one task under the default 1MB
-    // floor — scope a lower floor over a CLONED session (ConfScope
-    // re-binds the input there; a set/restore on the caller's session
-    // would leak into concurrently-planning queries, e.g. Verify's
-    // thread pool). The result is config-sized, so it re-binds to the
-    // caller's session by a plain collect.
-    // preferSortMergeJoin=false (scoped to the clone): where no
-    // broadcast applies, the verify joins pick SHUFFLED HASH instead of
-    // sort-merge — an SMJ there sorts the pair × shingle-array
-    // intermediate, which spilled past the thin disk at the 5M-doc
-    // replica. At small scale Spark still auto-broadcasts the
-    // signature side, so this costs nothing (a shuffle_hash HINT would
-    // defeat that broadcast and measurably slowed sf0.1 ~2x).
-    refiningBase(configs) match {
-      case Some(base) =>
-        lshTuningFusedExact(df, idCol, textCol, shingleN, threshold, configs, base, numHashes)
-      case None =>
-        lshTuningAllPairsExact(df, idCol, textCol, shingleN, threshold, configs, numHashes)
+    val n = configs.size
+    val counts = withTuningPairs(df, idCol, textCol, shingleN, numHashes, configs) {
+      (sh, pairs) => flagSums(verified(pairs, sh, threshold), n, withVerdict = true)
     }
+    df.sparkSession.createDataFrame(configs.zipWithIndex.map { case ((b, r), i) =>
+        (b.toLong, r.toLong, counts(i), counts(n + i))
+      })
+      .toDF("bands", "rows_per_band", "n_candidates", "n_verified")
+      .withColumn("precision",
+        round(col("n_verified").cast("double") /
+          greatest(col("n_candidates"), lit(1L)), 6))
   }
 
-  /** Pre-round-18 exact tuning path, kept as the fallback for config
-    * sets with no refining base (see [[refiningBase]]): the all-config
-    * banded self-join + per-config distinct.
-    */
-  private[graft] def lshTuningAllPairsExact(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, threshold: Double,
-      configs: Seq[(Int, Int)], numHashes: Int): DataFrame = {
-    graft.plans.ConfScope.withConfs(df, tuningConfs) { dfc =>
-      val sh = tuningSignatures(dfc, idCol, textCol, shingleN, numHashes)
-      // try/finally: any failing action below (the cloned session runs
-      // every action of this table) must still release the persisted
-      // signature blocks — a bare success-path unpersist leaks them
-      // for the JVM lifetime
-      try {
-      val shOnly = sh.select(col("doc_id"), col("sh"))
-      val cand = tuningCandidates(sh, configs)
-      // hash joins (via the scoped preferSortMergeJoin=false), never
-      // sort-merge: an SMJ here sorts the pair × shingle-array
-      // intermediate (each row carries an ~800 B array once sh_a is
-      // attached), and that sort spilled past the thin disk at the
-      // 5M-doc replica (SPILL_OUT_OF_MEMORY, round 15). A hash join
-      // builds on the row-linear signature side and STREAMS the wide
-      // pair rows — nothing pair-sized is ever sorted.
-      val verdicts = cand.select(col("id_a"), col("id_b")).distinct()
-        .join(shOnly.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(shOnly.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          (round(jaccard(col("sh_a"), col("sh_b")), 4) >= threshold).as("_ok"))
-      // join back only the VERIFIED pairs (near-dup-sized, orders of
-      // magnitude below the candidate stream) and count candidates
-      // from cand alone: the old cand ⋈ all-verdicts join processed
-      // the full candidate stream a second time — at the 5M-doc
-      // replica cfg (6,2) alone holds ~157M candidates. With the
-      // verified side this small it usually broadcasts; failing that
-      // the scoped preferSortMergeJoin=false keeps it a hash join.
-      val okPairs = verdicts.filter(col("_ok")).select(col("id_a"), col("id_b"))
-      val perCfg = cand.groupBy(col("cfg"))
-        .agg(count(lit(1)).as("n_candidates"))
-        .join(
-          cand.join(okPairs, Seq("id_a", "id_b"))
-            .groupBy(col("cfg"))
-            .agg(count(lit(1)).as("n_verified")),
-          Seq("cfg"), "left")
-        .select(col("cfg"), col("n_candidates"),
-          coalesce(col("n_verified"), lit(0L)).as("n_verified"))
-      // left join onto the literal config list so a zero-candidate
-      // config still emits its row
-      val cfgRows = configs.map { case (b, r) => (b, b.toLong, r.toLong) }
-      val cfgDf = dfc.sparkSession.createDataFrame(cfgRows)
-        .toDF("cfg", "bands", "rows_per_band")
-      val outRows = cfgDf.join(perCfg, Seq("cfg"), "left")
-        .select(col("bands"), col("rows_per_band"),
-          coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          coalesce(col("n_verified"), lit(0L)).as("n_verified"),
-          round(coalesce(col("n_verified"), lit(0L)).cast("double") /
-            greatest(coalesce(col("n_candidates"), lit(0L)), lit(1L)), 6).as("precision"))
-      // collect (one row per config) releases the clone and the
-      // persisted signature frame before returning
-      val schema = outRows.schema
-      val local = outRows.collect()
-      df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(local: _*), schema)
-      } finally sh.unpersist()
-    }
-  }
-
-  /** Shared AQE/join overrides for the tuning tables. Both heavy
-    * stages break AQE's bytes≈cost assumption (the bucket join's
-    * output is quadratic per bucket; the verify is array-CPU-bound)
-    * and coalesce to one task under the default 1MB floor;
-    * preferSortMergeJoin=false keeps the non-broadcast verify joins
-    * SHUFFLED HASH so nothing pair×array-sized is ever sorted (the
-    * sort spilled past the thin disk at the 5M-doc replica, round 15).
+  /** AQE/join overrides for the tuning tables. Both heavy stages break
+    * AQE's bytes≈cost assumption (the bucket join's output is
+    * quadratic per bucket; the verify is array-CPU-bound) and coalesce
+    * to one task under the default 1MB floor. preferSortMergeJoin=false
+    * keeps the non-broadcast verify joins SHUFFLED HASH: a sort-merge
+    * join there sorts the pair × shingle-array intermediate, which
+    * spilled past the thin disk at the 5M-doc replica (round 15). At
+    * small scale Spark still auto-broadcasts the signature side (a
+    * shuffle_hash HINT would defeat that broadcast, measured ~2x slower
+    * at sf0.1).
     */
   private val tuningConfs = Map(
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB",
     "spark.sql.join.preferSortMergeJoin" -> "false")
 
-  /** Persisted `(doc_id, sh, sig)` signature frame the tuning tables
-    * share — the caller owns the unpersist (try/finally).
+  /** Runs `body` on the persisted `(doc_id, sh, sig)` signature frame
+    * and its [[tuningPairs]], under [[tuningConfs]] scoped to a CLONED
+    * session (ConfScope re-binds the input there; a set/restore on the
+    * caller's session would leak into concurrently-planning queries,
+    * e.g. Verify's thread pool). `body` must return plain values, not
+    * frames bound to the clone. The signature frame is released on
+    * every exit, a failing action included.
     */
-  private def tuningSignatures(
-      dfc: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int): DataFrame = {
-    GraftFunctions.register(dfc.sparkSession)
-    dfc.select(
-      col(idCol).as("doc_id"),
-      GraftFunctions.hashedShingles(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", GraftFunctions.minhashSig(col("sh"), numHashes))
-      .persist()
+  private def withTuningPairs[T](
+      df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int, configs: Seq[(Int, Int)])(
+      body: (DataFrame, DataFrame) => T): T = {
+    require(configs.nonEmpty && configs.forall { case (b, r) => b * r == numHashes },
+      s"every (bands, rowsPerBand) config must multiply to numHashes=$numHashes")
+    require(configs.map(_._1).distinct.size == configs.size,
+      "band counts must be distinct (bands is the config key)")
+    graft.plans.ConfScope.withConfs(df, tuningConfs) { dfc =>
+      GraftFunctions.register(dfc.sparkSession)
+      val sh = dfc.select(
+        col(idCol).as("doc_id"),
+        GraftFunctions.hashedShingles(col(textCol), shingleN).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .withColumn("sig", GraftFunctions.minhashSig(col("sh"), numHashes))
+        .persist()
+      try body(sh, tuningPairs(sh, configs)) finally sh.unpersist()
+    }
   }
 
-  /** All-config candidate stream `(cfg, id_a, id_b)`: every config's
-    * band rows carry a config tag into ONE bucket self-join on
-    * (cfg, band, bkey); checkpointed because the per-config counts
-    * AND the verify pass both consume it.
-    */
-  private def tuningCandidates(
-      sh: DataFrame, configs: Seq[(Int, Int)]): DataFrame = {
-    // all configs' band rows in one explode: (doc_id, cfg, band, bkey)
-    val banded = sh.select(
-      col("doc_id"),
-      explode(array(configs.flatMap { case (b, r) =>
-        (0 until b).map { bd =>
-          struct(lit(b).as("cfg"), lit(bd).as("band"),
-            md5(concat_ws("_",
-              (0 until r).map(rr => element_at(col("sig"), bd * r + rr + 1)): _*))
-              .as("bkey"))
-        }
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.cfg"), col("bb.band"), col("bb.bkey"))
-    banded.select(col("cfg"), col("band"), col("bkey"), col("doc_id").as("id_a"))
-      .join(banded.select(col("cfg"), col("band"), col("bkey"), col("doc_id").as("id_b")),
-        Seq("cfg", "band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("cfg"), col("id_a"), col("id_b")).distinct()
-      .localCheckpoint(true)
-  }
-
-  /** The config whose candidate set provably CONTAINS every config's,
-    * if one exists: a pair matching some band B of config C also
-    * matches any band B' ⊆ B of another config, so when every band of
-    * every config contains at least one band of the finest config
-    * (the one with the most bands), the finest config's candidates
-    * are a superset of all. Holds for the default
+  /** The signature slices `(start, len)` the tuning tables self-join
+    * on. A pair is a candidate of config (b, r) iff it matches one of
+    * that config's b bands, so bucketing on every band of every config
+    * finds every config's candidates. Fewer slices do when one config
+    * REFINES all others: a pair matching band B also matches any band
+    * B' ⊆ B, so when every band of every config contains a band of the
+    * finest config (the one with the most bands), the finest config's
+    * bands alone are enough. That holds for the default
     * (2,6)/(3,4)/(4,3)/(6,2) split — and whenever the finest rows/band
-    * r0 satisfies r ≥ 2·r0 − 1 for every other config — and lets the
-    * tuning tables self-join ONE band set instead of all of them
-    * (round 18, guide §2.4): per-config candidacy is then decided
-    * in-row from the signature slices of the shared pair stream.
+    * r0 satisfies r ≥ 2·r0 − 1 for every other config — and cuts the
+    * self-join's band rows per doc from 15 to 6.
     */
-  private[graft] def refiningBase(configs: Seq[(Int, Int)]): Option[(Int, Int)] = {
-    val base @ (b0, r0) = configs.maxBy(_._1)
-    val covered = configs.forall { case (b, r) =>
-      (0 until b).forall { j =>
-        (0 until b0).exists(i => j * r <= i * r0 && (i + 1) * r0 <= (j + 1) * r)
+  private[graft] def tuningBands(configs: Seq[(Int, Int)]): Seq[(Int, Int)] = {
+    def bands(b: Int, r: Int) = (0 until b).map(bd => (bd * r, r))
+    val (b0, r0) = configs.maxBy(_._1)
+    val base = bands(b0, r0)
+    val refines = configs.forall { case (b, r) =>
+      bands(b, r).forall { case (s, len) =>
+        base.exists { case (s0, len0) => s <= s0 && s0 + len0 <= s + len }
       }
     }
-    if (covered) Some(base) else None
+    if (refines) base else configs.flatMap { case (b, r) => bands(b, r) }.distinct
   }
 
-  /** The fused paths' banded frame for ONE config: (doc_id[, sig],
-    * band, bkey) with an 8-byte `xxhash64` over the band's raw
-    * signature slice as the bucket key — 3× narrower through the
-    * self-join exchange than the legacy 32-char md5 string (round 18,
-    * guide §2.3: shuffle keys, not payloads). Slice-equal docs always
-    * share a key (hash of equal inputs); a hash COLLISION only ADDS a
-    * stream row, which the in-row [[bandMatch]] flags (now applied to
-    * EVERY config, base included) zero out of every count.
+  /** Banded bucket keys `(doc_id, sig, band, bkey)`, one row per doc
+    * and slice `(start, len)` of `slices`: `band` is the slice's index
+    * and `bkey` an 8-byte `xxhash64` over the slice's raw signature
+    * values — 3× narrower through the self-join exchange than a 32-char
+    * md5 string (round 18, guide §2.3: shuffle keys, not payloads).
+    * Slice-equal docs always share a key; a hash COLLISION only ADDS a
+    * pair, which every consumer's in-row [[bandMatch]] re-check drops.
+    * `sig` is pruned by the optimizer where the caller selects ids only.
     */
-  private def bandedKeys(sh: DataFrame, b0: Int, r0: Int, carrySig: Boolean): DataFrame = {
-    val cols = if (carrySig) Seq(col("doc_id"), col("sig")) else Seq(col("doc_id"))
-    sh.select(cols :+
-      explode(array((0 until b0).map { bd =>
-        struct(lit(bd).as("band"),
-          xxhash64(
-            (0 until r0).map(rr => element_at(col("sig"), bd * r0 + rr + 1)): _*)
+  private def bandedKeys(sh: DataFrame, slices: Seq[(Int, Int)]): DataFrame =
+    sh.select(col("doc_id"), col("sig"),
+      explode(array(slices.zipWithIndex.map { case ((start, len), i) =>
+        struct(lit(i).as("band"),
+          xxhash64((start until start + len).map(p => element_at(col("sig"), p + 1)): _*)
             .as("bkey"))
-      }: _*)).as("bb"): _*)
-      .select(cols ++ Seq(col("bb.band"), col("bb.bkey")): _*)
-  }
-
-  /** Distinct candidate pairs of ONE banding config — the base
-    * config's self-join in the fused exact tuning path, bare ids
-    * only. May contain hash-collision impostors (see [[bandedKeys]]);
-    * the caller's per-config [[bandMatch]] flags neutralize them.
-    */
-  private def baseCandidates(sh: DataFrame, b0: Int, r0: Int): DataFrame = {
-    val banded = bandedKeys(sh, b0, r0, carrySig = false)
-    banded.select(col("band"), col("bkey"), col("doc_id").as("id_a"))
-      .join(banded.select(col("band"), col("bkey"), col("doc_id").as("id_b")),
-        Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
+      }: _*)).as("bb"))
+      .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.bkey"))
 
   /** In-row candidacy of a pair under config (b, r): some band's
-    * signature slice matches exactly. Equality of the raw slices
-    * stands in for equality of the legacy path's md5 band keys —
+    * signature slice matches exactly, compared element by element
+    * (`slice` allocates two arrays per band, which on every raw
+    * self-join row of [[tuningPairs]] made q125 ~45% slower at sf0.1 on
+    * 4 cores; plans/lsh_tuning/one_pair_stream_ab.txt). Equality of the
+    * raw slices stands in for equality of the oracle's md5 band keys —
     * divergence needs an md5 collision between distinct slice strings
-    * (~2⁻¹²⁸, and no engine-visible input can exercise it). Applied
-    * to every config INCLUDING the base, so xxhash collisions in the
-    * fused pair stream count toward nothing.
+    * (~2⁻¹²⁸, and no engine-visible input can exercise it). Applied to
+    * the pairs of a banded self-join, it also rules out a pair that
+    * shares a bucket only through an xxhash collision.
     */
   private def bandMatch(b: Int, r: Int): org.apache.spark.sql.Column =
     (0 until b).map { bd =>
-      slice(col("sig_a"), bd * r + 1, r) === slice(col("sig_b"), bd * r + 1, r)
+      (bd * r until (bd + 1) * r).map(p => col("sig_a")(p) === col("sig_b")(p)).reduce(_ && _)
     }.reduce(_ || _)
 
-  /** Fused exact tuning table (round 18): ONE base-config self-join
-    * builds the shared distinct pair stream (bare ids through the
-    * quadratic stage — guide §8), the signature and shingle arrays
-    * attach once per side (row-linear hash joins), per-config
-    * candidacy and the jaccard verdict are computed in-row, and one
-    * global aggregate of conditional sums yields every config's
-    * counts — no per-config distinct, no checkpoint of the full
-    * (cfg, pair) stream, no verdict join-back.
+  /** The tuning tables' one pair stream: `(id_a, id_b, _f0 .. _f<n-1>)`
+    * with id_a < id_b, one row per pair sharing a bucket on some slice
+    * of [[tuningBands]], and `_f<i>` = 1 iff the pair is a candidate of
+    * config i. The signature rides the self-join, so every flag is
+    * decided in-row BEFORE the pair-identity distinct: the flags are
+    * deterministic per pair, so distinct over (ids, flags) has pair
+    * cardinality, and it shuffles ids and flag longs only — never a
+    * (cfg, pair)-tagged stream. The extra shuffle bytes, the signature
+    * through the self-join, are corpus-LINEAR (guide §2.3/§2.4/§8).
     */
-  private def lshTuningFusedExact(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, threshold: Double,
-      configs: Seq[(Int, Int)], base: (Int, Int), numHashes: Int): DataFrame = {
-    graft.plans.ConfScope.withConfs(df, tuningConfs) { dfc =>
-      val sh = tuningSignatures(dfc, idCol, textCol, shingleN, numHashes)
-      try {
-        val pairs = baseCandidates(sh, base._1, base._2)
-        val both = sh.select(col("doc_id"), col("sh"), col("sig"))
-        val sides = pairs
-          .join(both.select(col("doc_id").as("id_a"), col("sh").as("sh_a"),
-            col("sig").as("sig_a")), Seq("id_a"))
-          .join(both.select(col("doc_id").as("id_b"), col("sh").as("sh_b"),
-            col("sig").as("sig_b")), Seq("id_b"))
-          .withColumn("_ok",
-            round(jaccard(col("sh_a"), col("sh_b")), 4) >= threshold)
-        val flagged = sides.select(configs.zipWithIndex.flatMap { case ((b, r), i) =>
-          val m = bandMatch(b, r)
-          Seq(when(m, 1L).otherwise(0L).as(s"_m$i"),
-            when(m && col("_ok"), 1L).otherwise(0L).as(s"_v$i"))
-        }: _*)
-        val sums = configs.indices.flatMap(i =>
-          Seq(sum(col(s"_m$i")).as(s"_ms$i"), sum(col(s"_v$i")).as(s"_vs$i")))
-        // one row always (global aggregate); nulls = empty pair stream
-        val row = flagged.agg(sums.head, sums.tail: _*).head()
-        val outRows = configs.zipWithIndex.map { case ((b, r), i) =>
-          (b.toLong, r.toLong,
-            if (row.isNullAt(2 * i)) 0L else row.getLong(2 * i),
-            if (row.isNullAt(2 * i + 1)) 0L else row.getLong(2 * i + 1))
-        }
-        df.sparkSession.createDataFrame(outRows)
-          .toDF("bands", "rows_per_band", "n_candidates", "n_verified")
-          .withColumn("precision",
-            round(col("n_verified").cast("double") /
-              greatest(col("n_candidates"), lit(1L)), 6))
-      } finally sh.unpersist()
+  private def tuningPairs(sh: DataFrame, configs: Seq[(Int, Int)]): DataFrame = {
+    val banded = bandedKeys(sh, tuningBands(configs))
+    val flags = configs.zipWithIndex.map { case ((b, r), i) =>
+      when(bandMatch(b, r), 1L).otherwise(0L).as(s"_f$i")
     }
+    banded.select(col("band"), col("bkey"), col("doc_id").as("id_a"), col("sig").as("sig_a"))
+      .join(banded
+        .select(col("band"), col("bkey"), col("doc_id").as("id_b"), col("sig").as("sig_b")),
+        Seq("band", "bkey"))
+      .filter(col("id_a") < col("id_b"))
+      .select(Seq(col("id_a"), col("id_b")) ++ flags: _*)
+      .distinct()
+  }
+
+  /** `pairs` with both shingle arrays attached (row-linear hash joins
+    * that build on the shingle side and stream the pairs) and `_ok`
+    * = the pair's rounded jaccard reaches `threshold`.
+    */
+  private def verified(pairs: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
+    val shOnly = sh.select(col("doc_id"), col("sh"))
+    pairs
+      .join(shOnly.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(shOnly.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .withColumn("_ok", round(jaccard(col("sh_a"), col("sh_b")), 4) >= threshold)
+  }
+
+  /** One global aggregate over flagged pairs: Σ`_f<i>` for each of the
+    * `n` configs, then (`withVerdict`) Σ`_f<i>` over the `_ok` pairs.
+    * An empty input sums to zeros.
+    */
+  private def flagSums(pairs: DataFrame, n: Int, withVerdict: Boolean): IndexedSeq[Long] = {
+    val sums = (0 until n).map(i => sum(col(s"_f$i"))) ++
+      (if (withVerdict) (0 until n).map(i => sum(when(col("_ok"), col(s"_f$i")).otherwise(0L)))
+       else Nil)
+    val row = pairs.agg(sums.head, sums.tail: _*).head()
+    sums.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
   }
 
   /** [[lshTuningTable]] with a SAMPLED verify — the tuning table's
@@ -495,6 +388,11 @@ object TextDedup {
     * at the 5M-doc replica, rate 0.02 × ~157M pairs ≈ 3M verifies
     * (~7 GB of array traffic) where the exact table needed hundreds.
     *
+    * Both counts read the one [[tuningPairs]] stream, checkpointed
+    * because both consume it: the exact candidate counts are one
+    * conditional-sum aggregate over its flags, and the rate-bounded
+    * sample is the only branch that touches the shingle arrays.
+    *
     * Output per config: exact `n_candidates`, the sample size
     * `n_sampled`, `n_verified_sampled`, and
     * `precision_est = n_verified_sampled / max(n_sampled, 1)` —
@@ -506,170 +404,36 @@ object TextDedup {
       shingleN: Int = 2, threshold: Double = 0.8, numHashes: Int = 12,
       configs: Seq[(Int, Int)] = Seq((2, 6), (3, 4), (4, 3), (6, 2)),
       sampleRate: Double = 0.02, sampleSeed: String = "lts5"): DataFrame = {
-    require(configs.nonEmpty && configs.forall { case (b, r) => b * r == numHashes },
-      s"every (bands, rowsPerBand) config must multiply to numHashes=$numHashes")
-    require(configs.map(_._1).distinct.size == configs.size,
-      "band counts must be distinct (bands is the config key)")
     require(sampleRate > 0.0 && sampleRate <= 1.0,
       s"sampleRate must be in (0, 1], got $sampleRate")
-    refiningBase(configs) match {
-      case Some(base) =>
-        lshTuningFusedSampled(df, idCol, textCol, shingleN, threshold,
-          configs, base, numHashes, sampleRate, sampleSeed)
-      case None =>
-        lshTuningAllPairsSampled(df, idCol, textCol, shingleN, threshold,
-          configs, numHashes, sampleRate, sampleSeed)
-    }
-  }
-
-  /** Fused sampled tuning table (round 18): the banded self-join runs
-    * on the BASE config's 6 band rows/doc instead of all 15 and
-    * carries the 12-long signature through, so per-config candidacy
-    * is decided in-row BEFORE the pair-identity distinct — the
-    * distinct then shuffles (id_a, id_b, 4 flag longs) only, the
-    * checkpointed stream is flags+ids (no cfg-tagged 15-band stream,
-    * no second pair-identity distinct for the sample), the exact
-    * per-config candidate counts are one conditional-sum aggregate
-    * over the flags, and the rate-bounded sample branch is the only
-    * consumer that ever touches the shingle arrays. Extra shuffle
-    * bytes vs the all-pairs path: the signature through the self-join
-    * — 2 × bands × ~100 B per doc, corpus-LINEAR — in exchange for
-    * dropping the pair-QUADRATIC cfg-tagged distinct + checkpoint +
-    * verdict join-back (guide §2.3/§2.4/§8).
-    */
-  private def lshTuningFusedSampled(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, threshold: Double,
-      configs: Seq[(Int, Int)], base: (Int, Int), numHashes: Int,
-      sampleRate: Double, sampleSeed: String): DataFrame = {
-    graft.plans.ConfScope.withConfs(df, tuningConfs) { dfc =>
-      val sh = tuningSignatures(dfc, idCol, textCol, shingleN, numHashes)
-      try {
-        val banded = bandedKeys(sh, base._1, base._2, carrySig = true)
-        // flags computed on the raw (multiplicity-bearing) match stream,
-        // deterministic per pair, so distinct over (ids, flags) has pair
-        // cardinality; checkpointed because both count branches consume
-        // it. Every config's flag (base included) is the in-row slice
-        // equality, so an xxhash key collision contributes all-zero
-        // flags — present in the stream, absent from every count.
-        val flagCols = configs.zipWithIndex.map { case ((b, r), i) =>
-          when(bandMatch(b, r), 1L).otherwise(0L).as(s"_f$i")
-        }
-        val flagged = banded
-          .select(col("band"), col("bkey"), col("doc_id").as("id_a"), col("sig").as("sig_a"))
-          .join(banded
-            .select(col("band"), col("bkey"), col("doc_id").as("id_b"), col("sig").as("sig_b")),
-            Seq("band", "bkey"))
-          .filter(col("id_a") < col("id_b"))
-          .select(Seq(col("id_a"), col("id_b")) ++ flagCols: _*)
-          .distinct()
-          .localCheckpoint(true)
-        // exact per-config candidate counts: one global conditional-sum
-        val candDf = flagged.agg(
-          sum(col("_f0")).as("_c0"),
-          configs.indices.tail.map(i => sum(col(s"_f$i")).as(s"_c$i")): _*)
+    val n = configs.size
+    val (cand, samp) = withTuningPairs(df, idCol, textCol, shingleN, numHashes, configs) {
+      (sh, stream) =>
+        val pairs = stream.localCheckpoint(true)
         // deterministic pair sample on bare ids (rate-bounded), then the
         // shingle arrays attach to the SAMPLE only
         val u = hash60(concat(lit(sampleSeed), lit(":"),
           col("id_a").cast("string"), lit("_"), col("id_b").cast("string")))
           .cast("double") / lit(1152921504606846976.0) // 2^60
-        val shOnly = sh.select(col("doc_id"), col("sh"))
-        val sampled = flagged.filter(u < sampleRate)
-          .join(shOnly.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-          .join(shOnly.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-          .withColumn("_ok",
-            round(jaccard(col("sh_a"), col("sh_b")), 4) >= threshold)
-        val sampDf = sampled.agg(
-          sum(col("_f0")).as("_s0"),
-          (configs.indices.tail.map(i => sum(col(s"_f$i")).as(s"_s$i")) ++
-            configs.indices.map(i =>
-              sum(when(col("_ok"), col(s"_f$i")).otherwise(0L)).as(s"_v$i"))): _*)
+        val sampled = verified(pairs.filter(u < sampleRate), sh, threshold)
         // both branches read the checkpointed flags independently —
         // overlap the two actions (guide §2.6) instead of paying two
         // serial AQE job turnarounds
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
-        val fCand = Future(candDf.head())
-        val fSamp = Future(sampDf.head())
-        val candRow = Await.result(fCand, Duration.Inf)
-        val sampRow = Await.result(fSamp, Duration.Inf)
-        val n = configs.size
-        val outRows = configs.zipWithIndex.map { case ((b, r), i) =>
-          (b.toLong, r.toLong,
-            if (candRow.isNullAt(i)) 0L else candRow.getLong(i),
-            if (sampRow.isNullAt(i)) 0L else sampRow.getLong(i),
-            if (sampRow.isNullAt(n + i)) 0L else sampRow.getLong(n + i))
-        }
-        df.sparkSession.createDataFrame(outRows)
-          .toDF("bands", "rows_per_band", "n_candidates", "n_sampled",
-            "n_verified_sampled")
-          .withColumn("precision_est",
-            round(col("n_verified_sampled").cast("double") /
-              greatest(col("n_sampled"), lit(1L)), 6))
-      } finally sh.unpersist()
+        val fCand = Future(flagSums(pairs, n, withVerdict = false))
+        val fSamp = Future(flagSums(sampled, n, withVerdict = true))
+        (Await.result(fCand, Duration.Inf), Await.result(fSamp, Duration.Inf))
     }
-  }
-
-  /** Pre-round-18 sampled tuning path, kept as the fallback for config
-    * sets with no refining base (see [[refiningBase]]).
-    */
-  private[graft] def lshTuningAllPairsSampled(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, threshold: Double,
-      configs: Seq[(Int, Int)], numHashes: Int,
-      sampleRate: Double, sampleSeed: String): DataFrame = {
-    graft.plans.ConfScope.withConfs(df, tuningConfs) { dfc =>
-      val sh = tuningSignatures(dfc, idCol, textCol, shingleN, numHashes)
-      try {
-        val shOnly = sh.select(col("doc_id"), col("sh"))
-        val cand = tuningCandidates(sh, configs)
-        // deterministic pair sample BEFORE any shingle array attaches:
-        // the filter runs on narrow (id_a, id_b) rows, so the full
-        // candidate stream crosses this stage at ~24 B/row and only
-        // the rate-bounded survivors ever join the array side
-        val u = hash60(concat(lit(sampleSeed), lit(":"),
-          col("id_a").cast("string"), lit("_"), col("id_b").cast("string")))
-          .cast("double") / lit(1152921504606846976.0) // 2^60
-        val samp = cand.select(col("id_a"), col("id_b")).distinct()
-          .filter(u < sampleRate)
-        val verdicts = samp
-          .join(shOnly.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-          .join(shOnly.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            (round(jaccard(col("sh_a"), col("sh_b")), 4) >= threshold).as("_ok"))
-        // verdicts are sample-sized (rate × candidates): the join back
-        // onto the full candidate stream broadcasts at any measured
-        // scale, and the scoped preferSortMergeJoin=false keeps it a
-        // hash join beyond that
-        val sampledPerCfg = cand.join(verdicts, Seq("id_a", "id_b"))
-          .groupBy(col("cfg"))
-          .agg(count(lit(1)).as("n_sampled"),
-            sum(when(col("_ok"), 1L).otherwise(0L)).as("n_verified_sampled"))
-        val perCfg = cand.groupBy(col("cfg"))
-          .agg(count(lit(1)).as("n_candidates"))
-          .join(sampledPerCfg, Seq("cfg"), "left")
-        // left join onto the literal config list so a zero-candidate
-        // config still emits its row
-        val cfgRows = configs.map { case (b, r) => (b, b.toLong, r.toLong) }
-        val cfgDf = dfc.sparkSession.createDataFrame(cfgRows)
-          .toDF("cfg", "bands", "rows_per_band")
-        val outRows = cfgDf.join(perCfg, Seq("cfg"), "left")
-          .select(col("bands"), col("rows_per_band"),
-            coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-            coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
-            coalesce(col("n_verified_sampled"), lit(0L)).as("n_verified_sampled"),
-            round(coalesce(col("n_verified_sampled"), lit(0L)).cast("double") /
-              greatest(coalesce(col("n_sampled"), lit(0L)), lit(1L)), 6)
-              .as("precision_est"))
-        // collect (one row per config) releases the clone and the
-        // persisted signature frame before returning
-        val schema = outRows.schema
-        val local = outRows.collect()
-        df.sparkSession.createDataFrame(
-          java.util.Arrays.asList(local: _*), schema)
-      } finally sh.unpersist()
-    }
+    df.sparkSession.createDataFrame(configs.zipWithIndex.map { case ((b, r), i) =>
+        (b.toLong, r.toLong, cand(i), samp(i), samp(n + i))
+      })
+      .toDF("bands", "rows_per_band", "n_candidates", "n_sampled",
+        "n_verified_sampled")
+      .withColumn("precision_est",
+        round(col("n_verified_sampled").cast("double") /
+          greatest(col("n_sampled"), lit(1L)), 6))
   }
 
   /** Cross-group duplicate matrix: how many verified near-dup pairs

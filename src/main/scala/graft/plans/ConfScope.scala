@@ -19,26 +19,21 @@ import org.apache.spark.sql.DataFrame
   * (including this repo's Verify) run several queries concurrently on
   * one shared session — a set/restore on the caller's session would
   * leak the override into whatever else is planning during the block.
-  * `withMinPartitionSize` therefore runs the block on a CLONED
+  * `withConfs` therefore runs the block on a CLONED
   * session (`newSession()`: same SparkContext, cached blocks and
   * checkpoint store; its own SQLConf), with the input frame re-bound
   * through a global temp view so the full Catalyst lineage — scan
   * pruning included — re-resolves under the clone's conf. Frames the
   * body returns are bound to the clone; callers must materialize
-  * (collect/localCheckpoint) and re-bind anything they hand onward,
-  * which the sole current caller (lshTuningTable) does by collecting
-  * its config-sized result.
+  * (collect/localCheckpoint) and re-bind anything they hand onward.
+  * The LSH tuning tables (`TextDedup.lshTuningTable` and
+  * `lshTuningTableSampled`) run their body under `withConfs` and
+  * return only their collected, config-sized counts.
   */
 object ConfScope {
-  private val MinPartitionSizeKey =
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
-  def withMinPartitionSize[T](df: DataFrame, size: String)(
-      body: DataFrame => T): T =
-    withConfs(df, Map(MinPartitionSizeKey -> size))(body)
-
-  /** Run `body` over a cloned session carrying arbitrary SQLConf
-    * overrides — same re-binding contract as [[withMinPartitionSize]].
+  /** Run `body` over a cloned session carrying the SQLConf overrides
+    * `confs`, with `df` re-bound there.
     */
   def withConfs[T](df: DataFrame, confs: Map[String, String])(
       body: DataFrame => T): T = {

@@ -161,6 +161,22 @@ class CsvFuzzSpec extends SparkSpec {
     assert(messages.contains("b.csv"), messages)
   }
 
+  test("a renamed (duplicate-name) header that drifts fails naming the file") {
+    val dir = tmpDir("csvfuzz-drift-renamed")
+    writeSource(dir, Seq(
+      "a.csv" -> "rid,name,name,age\n1,x,y,2\n".getBytes(UTF_8),
+      "b.csv" -> "rid,name,age,name\n2,x,3,y\n".getBytes(UTF_8)))
+    val ex = intercept[IllegalArgumentException](graft.ingest.CsvIngest.readPath(spark, s"$dir/src"))
+    assert(ex.getMessage.contains("b.csv"), ex.getMessage)
+    // the same renamed header in every file still reads by position
+    val same = tmpDir("csvfuzz-renamed-same")
+    writeSource(same, Seq(
+      "a.csv" -> "rid,name,name\n1,x,y\n".getBytes(UTF_8),
+      "b.csv" -> "rid,name,name\n2,z,w\n".getBytes(UTF_8)))
+    assert(graft.ingest.CsvIngest.readPath(spark, s"$same/src").select("name1").as[String]
+      .collect().sorted.toSeq == Seq("x", "z"))
+  }
+
   test("header names match Spark's inference, duplicate and empty names included; a BOM is dropped") {
     val dir = tmpDir("csvfuzz-names")
     writeSource(dir, Seq("a.csv" -> "a,A,,b,_corrupt_record\n1,2,3,4,5\n".getBytes(UTF_8)))

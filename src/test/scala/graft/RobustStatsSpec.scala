@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.{GraftFunctions, TextFunctions}
 import graft.operators.{LanguageModel, Quantiles, SeriesStats, Similarity, TextDedup}
 import org.apache.spark.sql.functions._
 
@@ -151,39 +152,78 @@ class RobustStatsSpec extends SparkSpec {
   }
 
   test("lsh tuning: fused refining-base path equals the all-pairs path (round 18)") {
-    // refiningBase itself: default split has one, a non-nesting split doesn't
-    assert(TextDedup.refiningBase(Seq((2, 6), (3, 4), (4, 3), (6, 2))) == Some((6, 2)))
-    assert(TextDedup.refiningBase(Seq((3, 4), (4, 3))).isEmpty)
-    assert(TextDedup.refiningBase(Seq((4, 3))) == Some((4, 3)))
+    // both tuning tables against a brute-force all-pairs reference, for
+    // the default configs and a non-refining set. The default split
+    // self-joins its finest config's bands; a non-nesting split
+    // self-joins every band of every config
+    assert(TextDedup.tuningBands(Seq((2, 6), (3, 4), (4, 3), (6, 2))) ==
+      (0 until 6).map(i => (2 * i, 2)))
+    assert(TextDedup.tuningBands(Seq((3, 4), (4, 3))) ==
+      Seq((0, 4), (4, 4), (8, 4), (0, 3), (3, 3), (6, 3), (9, 3)))
+    assert(TextDedup.tuningBands(Seq((4, 3))) == Seq((0, 3), (3, 3), (6, 3), (9, 3)))
     // fixture with GRADED similarity so per-config candidacy genuinely
     // differs: pairs at every substitution distance 0..7 over a
-    // 12-token base, plus unrelated chaff
+    // 12-token base, unrelated chaff, and seeded families of 4 variants
+    // of a 30-token root (many mid-similarity pairs, so some pair
+    // matches a (3,4) band and no (4,3) band: asserted below)
     val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima".split(" ")
+    val rng = new scala.util.Random(7)
+    val families = (0 until 120).flatMap { f =>
+      val root = Array.fill(30)(s"w${rng.nextInt(5000)}")
+      (0 until 4).map { m =>
+        val doc = root.clone()
+        (0 to m).foreach(_ => doc(rng.nextInt(30)) = s"v${rng.nextInt(5000)}")
+        (2000L + f * 10 + m, doc.mkString(" "))
+      }
+    }
     val docs = ((0 until 8).flatMap { k =>
       val mutated = base.zipWithIndex.map { case (t, i) =>
         if (i < k) s"sub${k}x$i" else t
       }.mkString(" ")
       Seq((k * 10L, base.mkString(" ")), (k * 10L + 1L, mutated))
     } ++ (0 until 6).map(i =>
-      (900L + i, s"chaff$i totally unrelated words nr$i ${i * 7} end$i"))).toDF("doc_id", "text")
-    val cfgs = Seq((2, 6), (3, 4), (4, 3), (6, 2))
-    val exactFused = TextDedup.lshTuningTable(docs, "doc_id", "text")
-      .orderBy($"bands").collect().toSeq
-    val exactLegacy = TextDedup.lshTuningAllPairsExact(
-        docs, "doc_id", "text", 2, 0.8, cfgs, 12)
-      .orderBy($"bands").collect().toSeq
-    assert(exactFused == exactLegacy)
-    // sanity: the fixture exercises differing counts across configs
-    assert(exactFused.map(_.getLong(2)).distinct.size > 1)
-    val sampFused = TextDedup.lshTuningTableSampled(docs, "doc_id", "text",
-        sampleRate = 0.5)
-      .orderBy($"bands").collect().toSeq
-    val sampLegacy = TextDedup.lshTuningAllPairsSampled(
-        docs, "doc_id", "text", 2, 0.8, cfgs, 12, 0.5, "lts5")
-      .orderBy($"bands").collect().toSeq
-    assert(sampFused == sampLegacy)
-    // the half-rate sample must be a real subsample on this fixture
-    assert(sampFused.exists(r => r.getLong(3) < r.getLong(2)))
+      (900L + i, s"chaff$i totally unrelated words nr$i ${i * 7} end$i")) ++ families)
+      .toDF("doc_id", "text")
+    // driver-side reference: every pair of the collected signatures
+    GraftFunctions.register(spark)
+    val sigs = docs.select($"doc_id", GraftFunctions.hashedShingles($"text", 2).as("sh"))
+      .filter(size($"sh") > 0)
+      .select($"doc_id", $"sh", GraftFunctions.minhashSig($"sh", 12).as("sig"))
+      .as[(Long, Seq[Long], Seq[Long])].collect().toSeq
+      .map { case (id, sh, sig) => (id, sh.toSet, sig) }
+    def roundHalfUp(x: Double, scale: Int) =
+      BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val pairs = for ((a, shA, sigA) <- sigs; (b, shB, sigB) <- sigs if a < b) yield {
+      val jaccard = (shA & shB).size.toDouble / (shA | shB).size
+      val sampled = TextFunctions.hash60Scala(s"lts5:${a}_$b").toDouble /
+        1152921504606846976.0 < 0.5 // 2^60
+      (sigA, sigB, roundHalfUp(jaccard, 4) >= 0.8, sampled)
+    }
+    def candidate(pair: (Seq[Long], Seq[Long], Boolean, Boolean), b: Int, r: Int) =
+      (0 until b).exists(bd => pair._1.slice(bd * r, bd * r + r) == pair._2.slice(bd * r, bd * r + r))
+    assert(pairs.exists(p => candidate(p, 3, 4) && !candidate(p, 4, 3)))
+    for (cfgs <- Seq(Seq((2, 6), (3, 4), (4, 3), (6, 2)), Seq((3, 4), (4, 3)))) {
+      val expected = cfgs.sortBy(_._1).map { case (b, r) =>
+        val cand = pairs.filter(candidate(_, b, r))
+        val samp = cand.filter(_._4)
+        val (nc, nv) = (cand.size.toLong, cand.count(_._3).toLong)
+        val (ns, nvs) = (samp.size.toLong, samp.count(_._3).toLong)
+        ((b.toLong, r.toLong, nc, nv, roundHalfUp(nv.toDouble / math.max(nc, 1), 6)),
+          (b.toLong, r.toLong, nc, ns, nvs, roundHalfUp(nvs.toDouble / math.max(ns, 1), 6)))
+      }
+      val exact = TextDedup.lshTuningTable(docs, "doc_id", "text", configs = cfgs)
+        .orderBy($"bands").as[(Long, Long, Long, Long, Double)].collect().toSeq
+      assert(exact == expected.map(_._1), s"$cfgs")
+      val sampled = TextDedup.lshTuningTableSampled(docs, "doc_id", "text", configs = cfgs,
+          sampleRate = 0.5)
+        .orderBy($"bands").as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
+      assert(sampled == expected.map(_._2), s"$cfgs")
+      // the fixture exercises differing counts across configs, verified
+      // pairs, and a half-rate sample that is a real subsample
+      assert(exact.map(_._3).distinct.size > 1, s"$cfgs")
+      assert(exact.exists(_._4 > 0), s"$cfgs")
+      assert(sampled.exists(r => r._4 < r._3), s"$cfgs")
+    }
   }
 
   test("cross-group dup matrix and dup rate agree with a planted fixture") {
