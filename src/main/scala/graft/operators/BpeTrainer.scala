@@ -176,19 +176,21 @@ object BpeTrainer {
     (words, rows.result())
   }
 
-  /** Train `iterations` merges. Returns one row per iteration
-    * (it, l, r, cnt) PLUS a final row it = iterations + 1 holding the
-    * best pair of the post-merge state — so the last merge's
-    * application is certified by the output too, not just its
-    * selection.
+  /** Train `iterations` merges: the final word table (word, freq,
+    * syms) and the merge rows (it, l, r, cnt), run on the driver when
+    * the vocabulary fits ([[LocalVocabBound]]), else distributed. The
+    * merge rows hold one row per iteration PLUS a final row it =
+    * iterations + 1 with the best pair of the post-merge state.
     */
-  def merges(df: DataFrame, textCol: String, iterations: Int): DataFrame = {
-    require(iterations >= 1, "need at least one merge iteration")
+  private def train(df: DataFrame, textCol: String, iterations: Int): (DataFrame, DataFrame) =
     collectWords(df, textCol) match {
       case Some(w0) =>
         val spark = df.sparkSession
         import spark.implicits._
-        spark.createDataset(localTrain(w0, iterations)._2).toDF("it", "l", "r", "cnt")
+        val (words, rows) = localTrain(w0, iterations)
+        (spark.createDataset(words.toSeq.map { case (w, f, s) => (w, f, s.toSeq) })
+          .toDF("word", "freq", "syms"),
+          spark.createDataset(rows).toDF("it", "l", "r", "cnt"))
       case None =>
         var words = wordTable(df, textCol).localCheckpoint(true)
         var out = Vector.empty[DataFrame]
@@ -198,9 +200,19 @@ object BpeTrainer {
           words = applyMerge(words, best).localCheckpoint(true)
         }
         val fin = bestPair(pairCounts(words)).withColumn("it", lit((iterations + 1).toLong))
-        (out :+ fin).reduce(_ unionByName _)
-          .select(col("it"), col("l"), col("r"), col("cnt"))
+        (words, (out :+ fin).reduce(_ unionByName _)
+          .select(col("it"), col("l"), col("r"), col("cnt")))
     }
+
+  /** Train `iterations` merges. Returns one row per iteration
+    * (it, l, r, cnt) PLUS a final row it = iterations + 1 holding the
+    * best pair of the post-merge state — so the last merge's
+    * application is certified by the output too, not just its
+    * selection.
+    */
+  def merges(df: DataFrame, textCol: String, iterations: Int): DataFrame = {
+    require(iterations >= 1, "need at least one merge iteration")
+    train(df, textCol, iterations)._2
   }
 
   /** The word table after training `iterations` merges:
@@ -208,21 +220,7 @@ object BpeTrainer {
     * segmentation — the lookup table the ENCODE side uses.
     */
   def trainedWords(df: DataFrame, textCol: String, iterations: Int): DataFrame =
-    collectWords(df, textCol) match {
-      case Some(w0) =>
-        val spark = df.sparkSession
-        import spark.implicits._
-        spark.createDataset(
-          localTrain(w0, iterations)._1.toSeq.map { case (w, f, s) => (w, f, s.toSeq) })
-          .toDF("word", "freq", "syms")
-      case None =>
-        var words = wordTable(df, textCol).localCheckpoint(true)
-        for (_ <- 1 to iterations) {
-          val best = bestPair(pairCounts(words)).localCheckpoint(true)
-          words = applyMerge(words, best).localCheckpoint(true)
-        }
-        words
-    }
+    train(df, textCol, iterations)._1
 
   /** Post-merge symbol vocabulary: corpus frequency of every symbol
     * after `iterations` merges — (sym, freq), the table a tokenizer

@@ -414,80 +414,6 @@ object Curation {
       .filter(col("sample_bucket") < threshold)
   }
 
-  /** One-call corpus curation — the standard pretraining-data funnel
-    * composed from this library's operators, each stage feeding the
-    * next's survivors:
-    *
-    *   1. quality floor   ([[graft.functions.TextFunctions.qualityScore]] >= minQuality)
-    *   2. exact dedup     ([[TextDedup.exact]], canonical fingerprint keep-min-id)
-    *   3. near dedup      ([[TextDedup.minhashLshPairs]] → [[DupGraph.nearDedupSurvivors]])
-    *   4. stratified sample ([[stratifiedSample]]; default keeps everything)
-    *   5. split assignment ([[assignSplit]] — adds the `split` column)
-    *
-    * Returns (curated frame, report) where the report is one row per
-    * stage with rows_in/rows_out. Each stage's output is counted once
-    * (the next stage's rows_in is the previous rows_out — no
-    * recounts); the sample stage is SKIPPED (and absent from the
-    * report) when it would be a no-op (no fractions, defaultFraction
-    * 1.0), so corpora without the group column still curate. The final
-    * frame is checkpointed locally and EVERY intermediate cache —
-    * including the near-dedup shingle cache — is released before
-    * returning, so loop-driven callers don't accumulate pinned frames.
-    * `idCol` must be integral (the near-dedup cluster resolution keys
-    * components by long ids).
-    */
-  def curateCorpus(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      fractions: Map[String, Double] = Map.empty,
-      defaultFraction: Double = 1.0,
-      groupCol: String = "source",
-      minQuality: Double = 0.3,
-      jaccardThreshold: Double = 0.8): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val report = Seq.newBuilder[(String, Long, Long)]
-    var cached = List.empty[DataFrame]
-    var prevCount = docs.count()
-    def stage(name: String, in: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
-      val out = f(in).persist(MEMORY_AND_DISK)
-      cached ::= out
-      val n = out.count()
-      report += ((name, prevCount, n))
-      prevCount = n
-      out
-    }
-    val quality = stage("quality_floor", docs)(
-      _.filter(graft.functions.TextFunctions.qualityScore(col(textCol)) >= minQuality))
-    // doc ids are unique here (ingest contract), so exactSurvivors'
-    // least-full-row tie rule for duplicate ids can never engage
-    val exact = stage("exact_dedup", quality)(d => TextDedup.exactSurvivors(d, idCol, textCol))
-    var releaseShingles: () => Unit = () => ()
-    val near = stage("near_dedup", exact) { d =>
-      val (pairs, release) =
-        TextDedup.minhashLshPairsReleasable(d, idCol, textCol, threshold = jaccardThreshold)
-      releaseShingles = release
-      DupGraph.nearDedupSurvivors(d, idCol, pairs)._1
-    }
-    val samplingIsNoop = fractions.isEmpty && defaultFraction == 1.0
-    val sampled =
-      if (samplingIsNoop) near // skip: also tolerates a missing group column
-      else stage("stratified_sample", near)(
-        stratifiedSample(_, groupCol, idCol, fractions, defaultFraction).drop("sample_bucket"))
-    // sever lineage so every cache can be released, then release them
-    val finalFrame = sampled.localCheckpoint(true)
-    releaseShingles()
-    cached.foreach(_.unpersist())
-    val curated = assignSplit(finalFrame, idCol)
-    import spark.implicits._
-    (curated, report.result().toDF("stage", "rows_in", "rows_out"))
-  }
-
-  /** Global token vocabulary: top-k lowercased whitespace tokens by
-    * frequency (ties broken by token) — the counting shape of vocab /
-    * BPE-seed extraction.
-    */
   /** Deterministic weighted sampling without replacement (Efraimidis &
     * Spirakis 2006): each row gets key = ln(u)/w with u a hash-derived
     * uniform — the top-k keys ARE a weight-proportional sample, no RNG
@@ -540,6 +466,10 @@ object Curation {
         col("padded_arrival"), col("padded_sorted"))
   }
 
+  /** Global token vocabulary: top-k lowercased whitespace tokens by
+    * frequency (ties broken by token) — the counting shape of vocab /
+    * BPE-seed extraction.
+    */
   def vocabTopK(df: DataFrame, textCol: String, k: Int): DataFrame =
     df.select(explode(tokens(lower(col(textCol)))).as("token"))
       .groupBy(col("token"))

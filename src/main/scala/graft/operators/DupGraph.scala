@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster resolution: the dedup families (MinHash, SimHash,
   * cosine) emit PAIRS; collapsing pairs into groups so one canonical
@@ -508,6 +507,7 @@ object DupGraph {
     val sym = edges.select(col(srcCol).as("node"), col(dstCol).as("nbr"))
       .union(edges.select(col(dstCol).as("node"), col(srcCol).as("nbr")))
       .distinct()
+      .localCheckpoint(true)
     val localizable = {
       import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
       val ok = Seq[org.apache.spark.sql.types.DataType](
@@ -516,29 +516,24 @@ object DupGraph {
         seeds.schema(nodeCol).dataType == sym.schema("node").dataType &&
         ok.contains(seeds.schema(labelCol).dataType)
     }
-    if (!localizable)
-      return labelPropagateRounds(
-        sym.persist(StorageLevel.MEMORY_AND_DISK), seeds, nodeCol, labelCol,
-        iters, unpersistAfter = true)
-    // the symmetrized list is materialized up front either way, so the
-    // local-path probe is a free count plus one bounded seed collect
-    val symC = sym.localCheckpoint(true)
+    // the symmetrized list is materialized up front for either path,
+    // so the local-path probe is a free count plus one bounded seed
+    // collect
     val bound = math.min(localEdgeThreshold, (1L << 28) - 1)
-    if (symC.count() <= 2 * bound) {
+    if (localizable && sym.count() <= 2 * bound) {
       val seedRows = seeds
         .select(col(nodeCol).as("node"), col(labelCol).as("label"))
         .limit(bound.toInt + 1).collect()
       if (seedRows.length <= bound)
         return localLabelPropagate(
-          symC, seedRows, seeds.schema(labelCol).dataType, iters)
+          sym, seedRows, seeds.schema(labelCol).dataType, iters)
     }
-    labelPropagateRounds(symC, seeds, nodeCol, labelCol, iters,
-      unpersistAfter = false)
+    labelPropagateRounds(sym, seeds, nodeCol, labelCol, iters)
   }
 
   private def labelPropagateRounds(
       sym: DataFrame, seeds: DataFrame, nodeCol: String, labelCol: String,
-      iters: Int, unpersistAfter: Boolean): DataFrame = {
+      iters: Int): DataFrame = {
     var labels = seeds
       .select(col(nodeCol).as("node"), col(labelCol).as("label"), lit(0L).as("round"))
       .localCheckpoint(true)
@@ -556,7 +551,6 @@ object DupGraph {
         .select(col("node"), col("label"), lit(it.toLong).as("round"))
       labels = labels.unionByName(newly).localCheckpoint(true)
     }
-    if (unpersistAfter) sym.unpersist()
     labels
   }
 

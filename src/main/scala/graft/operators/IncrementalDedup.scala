@@ -5,7 +5,6 @@ import graft.sinks.Sinks.{markerExists, writeMarker}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Cross-batch exact dedup for incremental ingestion: a persistent
   * parquet LEDGER of canonical content fingerprints accumulates across
@@ -97,12 +96,10 @@ object IncrementalDedup {
       maxHamming: Int = 10,
       shingleN: Int = 2): DataFrame = {
     val spark = batch.sparkSession
-    // released in the finally, not on success only: a failed write
-    // must not strand the cached hashes for the session lifetime (retry
-    // loops would leak one copy per attempt)
+    // the probe and the within-batch pairs both read the hashes
     val sim = TextDedup.simhashOf(batch, idCol, textCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try commit(spark, ledgerPath, outputDir,
+      .localCheckpoint(eager = false)
+    commit(spark, ledgerPath, outputDir,
       TextDedup.simhashOf(_, idCol, textCol, shingleN).select(col("sh").as("_sh"))) {
       // 1. cross-batch: drop batch rows near ANY ledgered hash
       val seenIds =
@@ -121,7 +118,7 @@ object IncrementalDedup {
       val pairs = TextDedup.simhashPairsOf(
         sim.join(seenIds, Seq("doc_id"), "left_anti"), maxHamming)
       DupGraph.nearDedupSurvivors(fresh, idCol, pairs)._1
-    } finally sim.unpersist()
+    }
   }
 
   /** The two-marker commit protocol (see the object doc): replay a

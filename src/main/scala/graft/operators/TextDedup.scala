@@ -33,28 +33,6 @@ object TextDedup {
       ranked.filter(col("_fp_rn") > 1).drop("_fp_rn"))
   }
 
-  /** Survivors-only exact dedup: the same smallest-id-per-fingerprint
-    * row [[exact]]._1 returns, computed as ONE partial-aggregated min
-    * instead of a full per-group sort window — the window buffers
-    * every group's rows in the evaluator and sorts them; the min
-    * aggregate collapses each group to one candidate row map-side
-    * before the shuffle (round 17, guide §2.3). min over
-    * struct(id, row) replays the window's ASC NULLS FIRST id order
-    * (a null struct field compares first); a tie on id resolves to
-    * the lexicographically-least full row where row_number picked
-    * arbitrarily — both are "one row per group", and ids are unique
-    * in every caller. Use this when the removed side isn't needed.
-    */
-  def exactSurvivors(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val rowStruct = struct(df.columns.toIndexedSeq.map(c =>
-      col(graft.plans.SqlIdent.quote(c))): _*)
-    df.select(canonicalFingerprint(col(textCol)).as("_fp"),
-        struct(col(graft.plans.SqlIdent.quote(idCol)).as("_k"), rowStruct.as("_r")).as("_min"))
-      .groupBy(col("_fp"))
-      .agg(min(col("_min")).as("_m"))
-      .selectExpr("_m._r.*")
-  }
-
   /** MinHash-LSH near-duplicate pairs.
     *
     * @param numHashes signature length (bands * rowsPerBand)
@@ -63,7 +41,9 @@ object TextDedup {
     * @param threshold verified exact-Jaccard (on the distinct shingle
     *                  sets) at or above which a candidate is a dup pair
     * @return (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded
-    *         to 4 — the cross-engine comparison grain
+    *         to 4 — the cross-engine comparison grain. The pairs hold
+    *         nothing to release: the [[signatures]] they read are freed
+    *         with the frame.
     */
   def minhashLshPairs(
       df: DataFrame,
@@ -72,27 +52,10 @@ object TextDedup {
       numHashes: Int = 12,
       bands: Int = 4,
       shingleN: Int = 2,
-      threshold: Double = 0.8): DataFrame =
-    minhashLshPairsReleasable(df, idCol, textCol, numHashes, bands, shingleN, threshold)._1
-
-  /** [[minhashLshPairs]] plus a release handle that unpersists the
-    * internal shingle/signature cache — call it once the pairs frame
-    * has been fully consumed, so loop-driven callers (e.g.
-    * [[Curation.curateCorpus]]) don't accumulate a corpus-sized cached
-    * frame per invocation. Actions on the pairs frame after release
-    * still succeed (they recompute the lineage).
-    */
-  def minhashLshPairsReleasable(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = 12,
-      bands: Int = 4,
-      shingleN: Int = 2,
-      threshold: Double = 0.8): (DataFrame, () => Unit) = {
+      threshold: Double = 0.8): DataFrame = {
     val (sh, candidates) = lshCandidates(df, idCol, textCol, numHashes, bands, shingleN)
     val shOnly = sh.select(col("doc_id"), col("sh"), col("sig"))
-    val pairs = candidates
+    candidates
       .join(shOnly.select(col("doc_id").as("id_a"), col("sh").as("sh_a"),
         col("sig").as("sig_a")), Seq("id_a"))
       .join(shOnly.select(col("doc_id").as("id_b"), col("sh").as("sh_b"),
@@ -104,11 +67,10 @@ object TextDedup {
       .withColumn("jaccard", round(jaccard(col("sh_a"), col("sh_b")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    (pairs, () => { sh.unpersist(); () })
   }
 
-  /** Shared LSH front half: the persisted (doc_id, sh, sig) frame and
-    * the distinct banded candidate pairs (id_a < id_b, bare ids only).
+  /** Shared LSH front half: the [[signatures]] frame and the distinct
+    * banded candidate pairs (id_a < id_b, bare ids only).
     *
     * Round 18: the band bucket key is an 8-byte `xxhash64` over the
     * band's raw signature slice — 3× narrower through the self-join
@@ -129,16 +91,7 @@ object TextDedup {
       shingleN: Int): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
-    GraftFunctions.register(df.sparkSession)
-
-    // shingles are hashed to 60-bit longs ONCE (fused native pass);
-    // signatures, banding, and Jaccard verify all run on long arrays
-    val sh = df.select(
-      col(idCol).as("doc_id"),
-      GraftFunctions.hashedShingles(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", GraftFunctions.minhashSig(col("sh"), numHashes))
-      .persist()
+    val sh = signatures(df, idCol, textCol, shingleN, numHashes)
 
     // candidate pairs on bare ids (distinct over two longs — cheap),
     // shingle sets joined back only for the surviving pairs
@@ -150,6 +103,26 @@ object TextDedup {
       .select(col("id_a"), col("id_b"))
       .distinct()
     (sh, candidates)
+  }
+
+  /** `(doc_id, sh, sig)`: each doc's shingles hashed to 60-bit longs
+    * ONCE (fused native pass) and their MinHash signature; docs without
+    * a shingle are dropped. Banding and verify all run on these long
+    * arrays, and every consumer reads the frame more than once, so it
+    * is localCheckpoint'ed lazily: built by the first action over it,
+    * its blocks freed by the ContextCleaner with the frame, never
+    * pinned in the CacheManager.
+    */
+  private def signatures(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, numHashes: Int): DataFrame = {
+    GraftFunctions.register(df.sparkSession)
+    df.select(
+      col(idCol).as("doc_id"),
+      GraftFunctions.hashedShingles(col(textCol), shingleN).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .withColumn("sig", GraftFunctions.minhashSig(col("sh"), numHashes))
+      .localCheckpoint(eager = false)
   }
 
   /** Sketch-quality probe for the MinHash family: for every LSH
@@ -235,13 +208,12 @@ object TextDedup {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16KB",
     "spark.sql.join.preferSortMergeJoin" -> "false")
 
-  /** Runs `body` on the persisted `(doc_id, sh, sig)` signature frame
-    * and its [[tuningPairs]], under [[tuningConfs]] scoped to a CLONED
-    * session (ConfScope re-binds the input there; a set/restore on the
-    * caller's session would leak into concurrently-planning queries,
-    * e.g. Verify's thread pool). `body` must return plain values, not
-    * frames bound to the clone. The signature frame is released on
-    * every exit, a failing action included.
+  /** Runs `body` on the [[signatures]] frame and its [[tuningPairs]],
+    * under [[tuningConfs]] scoped to a CLONED session (ConfScope
+    * re-binds the input there; a set/restore on the caller's session
+    * would leak into concurrently-planning queries, e.g. Verify's
+    * thread pool). `body` must return plain values, not frames bound
+    * to the clone.
     */
   private def withTuningPairs[T](
       df: DataFrame, idCol: String, textCol: String,
@@ -252,14 +224,8 @@ object TextDedup {
     require(configs.map(_._1).distinct.size == configs.size,
       "band counts must be distinct (bands is the config key)")
     graft.plans.ConfScope.withConfs(df, tuningConfs) { dfc =>
-      GraftFunctions.register(dfc.sparkSession)
-      val sh = dfc.select(
-        col(idCol).as("doc_id"),
-        GraftFunctions.hashedShingles(col(textCol), shingleN).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .withColumn("sig", GraftFunctions.minhashSig(col("sh"), numHashes))
-        .persist()
-      try body(sh, tuningPairs(sh, configs)) finally sh.unpersist()
+      val sh = signatures(dfc, idCol, textCol, shingleN, numHashes)
+      body(sh, tuningPairs(sh, configs))
     }
   }
 

@@ -269,9 +269,10 @@ object MultimodalQueries {
         Tables.documents(s, d).filter($"doc_id" < 200), "doc_id", "text")
         .filter(length($"payload") >= 4) // sub-gram payloads: oracle excludes them too
       graft.operators.TextDedup.simhashPairsOf(
-        // persist: the pair join's a/b branches would otherwise each
-        // re-run the hex-gram md5 simhash, the dominant cost
-        Multimodal.payloadSimhash(payloads, "doc_id", "payload").persist(), maxHamming = 8)
+        // localCheckpoint: the pair join's a/b branches would otherwise
+        // each re-run the hex-gram md5 simhash, the dominant cost
+        Multimodal.payloadSimhash(payloads, "doc_id", "payload")
+          .localCheckpoint(eager = false), maxHamming = 8)
         .orderBy($"id_a", $"id_b")
     }
   )

@@ -148,14 +148,14 @@ object QualityQueries {
       graft.functions.GraftFunctions.register(s)
       // >= 11 (k + w - 1), not >= 8: an 8-10 char doc has k-grams but
       // no winnow window, so n_fps would be 0 and the containment
-      // division below would throw under ANSI. persist: the sketch
-      // roots THREE branches (bench, hits, n_fps) — unpersisted it
+      // division below would throw under ANSI. localCheckpoint: the
+      // sketch roots THREE branches (bench, hits, n_fps) — unshared it
       // would be recomputed for each
       val fps = Tables.documents(s, d)
         .filter(length($"text") >= 11)
         .select($"doc_id",
           graft.functions.GraftFunctions.winnowFingerprints($"text", 8, 4).as("fps"))
-        .persist()
+        .localCheckpoint(eager = false)
       val ex = fps.select($"doc_id", explode($"fps").as("fp"))
       val bench = ex.filter($"doc_id" % 97 === 0).select($"fp").distinct()
       val hits = ex.filter($"doc_id" % 97 =!= 0)

@@ -157,11 +157,8 @@ object StreamingQueries {
     s.readStream.schema(eventEnc.schema).parquet(dir).as[Event]
 
   private def rmdir(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    } catch { case _: Throwable => () }
+    try graft.sinks.Sinks.deleteTree(java.nio.file.Paths.get(dir))
+    catch { case _: Throwable => () }
 
   /** Fast scratch space for the replay's checkpoint (offset/commit
     * logs + state-store deltas are many small fsync-ed files — tmpfs

@@ -157,8 +157,7 @@ object TextQueries {
       // survivors-only, and the only surviving payload is doc_id
       // itself — so the keep-first window collapses to min(doc_id)
       // per fingerprint: a plain HashAggregate, partial map-side, no
-      // per-group sort buffer anywhere (round 17, guide §2.3; the
-      // full-row variant is TextDedup.exactSurvivors)
+      // per-group sort buffer anywhere (round 17, guide §2.3)
       Tables.documents(s, d)
         .select(canonicalFingerprint($"text").as("canonical_fp"), $"doc_id")
         .groupBy($"canonical_fp")

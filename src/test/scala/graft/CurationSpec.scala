@@ -343,29 +343,6 @@ class CurationSpec extends SparkSpec {
     assert(p("arr") == ((null, null))) // non-orderable → null, not an analysis error
   }
 
-  test("curateCorpus funnels quality -> exact -> near -> sample -> split coherently") {
-    val (curated, report) = Curation.curateCorpus(
-      docs, "doc_id", "text", fractions = Map("src0" -> 0.5), defaultFraction = 1.0)
-    val r = report.collect().map(x => x.getString(0) -> ((x.getLong(1), x.getLong(2)))).toMap
-    // the funnel only narrows, in order
-    assert(r("quality_floor")._1 == docs.count())
-    assert(r.values.forall { case (in, out) => out <= in })
-    assert(r("exact_dedup")._1 == r("quality_floor")._2)
-    assert(r("near_dedup")._1 == r("exact_dedup")._2)
-    assert(r("stratified_sample")._1 == r("near_dedup")._2)
-    // final frame matches the last stage and every row has a split
-    assert(curated.count() == r("stratified_sample")._2)
-    assert(curated.filter(!$"split".isin("train", "val", "test")).count() == 0)
-    // no exact duplicates survive
-    import graft.functions.TextFunctions.canonicalFingerprint
-    val n = curated.count()
-    assert(curated.select(canonicalFingerprint($"text")).distinct().count() == n)
-    // src0 was thinned (fraction 0.5 of a ~25-doc stratum)
-    val src0 = curated.filter($"source" === "src0").count()
-    val src0In = docs.filter($"source" === "src0").count()
-    assert(src0 < src0In)
-  }
-
   test("temperatureMixtureWeights: tau endpoints and normalization") {
     // fractions always sum to 1
     val t07 = Curation.temperatureMixtureWeights(docs, "source", tau = 0.7)

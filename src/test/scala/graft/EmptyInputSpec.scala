@@ -37,9 +37,6 @@ class EmptyInputSpec extends SparkSpec {
     assert(Curation.chunkTokens(emptyDocs, "doc_id", "text", 32).count() == 0)
     assert(Curation.vocabTopK(emptyDocs, "text", 5).count() == 0)
     assert(Curation.stratifiedSample(emptyDocs, "source", "doc_id", Map.empty, 1.0).count() == 0)
-    val (curated, report) = Curation.curateCorpus(emptyDocs, "doc_id", "text")
-    assert(curated.count() == 0)
-    assert(report.filter($"rows_in" =!= 0L || $"rows_out" =!= 0L).count() == 0)
   }
 
   test("profiling, quantiles, and winsorize handle empty frames") {

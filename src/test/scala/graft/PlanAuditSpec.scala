@@ -72,17 +72,30 @@ class PlanAuditSpec extends SparkSpec {
     // is 20 rows by construction at ANY scale)
     "q165_knn_classify_sampled", "q166_mrl_recall_sampled")
 
-  // every query's executed plan, built once and shared by the audits.
-  // Plan strings truncate metadata at maxMetadataStringLength (100);
-  // it is raised while the plans are built and printed so the full
-  // ReadSchema is visible to the pruning audits' regex
-  private lazy val plans: Seq[(String, String)] = {
+  // every query's executed plan, built once and shared by the audits,
+  // and whether building it left a frame in the CacheManager (persist
+  // registers when it is called, so construction is enough; the cache
+  // is cleared before each query). Plan strings truncate metadata at
+  // maxMetadataStringLength (100); it is raised while the plans are
+  // built and printed so the full ReadSchema is visible to the pruning
+  // audits' regex
+  private lazy val built: Seq[(String, String, Boolean)] = {
+    val cacheManager = spark.sharedState.cacheManager
     val prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sfDir).queryExecution.executedPlan.toString
+      spark.catalog.clearCache()
+      val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
+      (name, plan, !cacheManager.isEmpty)
     }
     finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+  }
+
+  private lazy val plans: Seq[(String, String)] = built.map { case (n, p, _) => n -> p }
+
+  test("no query leaves a cached frame behind") {
+    val leaking = built.collect { case (name, _, true) => name }
+    assert(leaking.isEmpty, s"queries that leave a cached frame behind: ${leaking.mkString(", ")}")
   }
 
   test("no query plans a CartesianProduct; nested-loop joins only where intended") {

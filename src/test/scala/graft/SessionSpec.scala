@@ -20,13 +20,25 @@ class SessionSpec extends SparkSpec {
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
 
-  test("graft.Session holds the only session builder in src/main") {
+  /** The `src/main` sources containing any of `needles`, relative and sorted. */
+  private def mainSourcesContaining(needles: String*): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
-    val builders = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .filter { p => val src = Files.readString(p); needles.exists(src.contains) }
       .map(root.relativize(_).toString).toSeq.sorted
-    assert(builders == Seq("graft/Session.scala"))
+  }
+
+  test("graft.Session holds the only session builder in src/main") {
+    assert(mainSourcesContaining("SparkSession.builder") == Seq("graft/Session.scala"))
+  }
+
+  // Pipeline's held frames and a table projection's CTAS are the only
+  // caches: every other operator reuses an intermediate through
+  // localCheckpoint, whose blocks are freed with the frame
+  test("Pipeline and Projections are the only code in src/main that persists") {
+    assert(mainSourcesContaining(".persist(", ".cache()") ==
+      Seq("graft/pipeline/Pipeline.scala", "graft/project/Projections.scala"))
   }
 }
