@@ -97,7 +97,7 @@ object GraftFunctions {
 
   /** Fused nearest-centroid argmin over a broadcast codebook — the
     * min of the composed per-centroid struct(negsim, cell) under
-    * struct ordering (== Similarity.ivfSearch's keep=1 assignment,
+    * struct ordering (== Similarity.ivfTopKCodebook's keep=1 assignment,
     * bit-for-bit; see graft.plans.BestCentroid).
     */
   def bestCentroid(vec: Column, cents: Column): Column =

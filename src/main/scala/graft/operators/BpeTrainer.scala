@@ -222,15 +222,6 @@ object BpeTrainer {
   def trainedWords(df: DataFrame, textCol: String, iterations: Int): DataFrame =
     train(df, textCol, iterations)._1
 
-  /** Post-merge symbol vocabulary: corpus frequency of every symbol
-    * after `iterations` merges — (sym, freq), the table a tokenizer
-    * would ship. One extra aggregate over the final word table.
-    */
-  def symbolVocab(df: DataFrame, textCol: String, iterations: Int): DataFrame =
-    trainedWords(df, textCol, iterations)
-      .select(col("freq"), explode(col("syms")).as("sym"))
-      .groupBy(col("sym")).agg(sum(col("freq")).as("freq"))
-
   /** ENCODE side of the tokenizer: apply the trained segmentation to
     * every document and report its symbol-expansion stats —
     * (idCol, n_words, n_symbols, avg_syms_per_word r6). The corpus

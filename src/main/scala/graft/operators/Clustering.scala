@@ -4,14 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Oracle-certifiable Lloyd's k-means over an embedding column.
-  *
-  * [[Similarity.kmeansCodebook]] wraps Spark ML's trainer (the
-  * production path); this trainer re-expresses the same algorithm in
-  * pure relational arithmetic so every step — init, assignment,
-  * centroid update — replays exactly in SQL on another engine, giving
-  * the k-means loop itself a hard DuckDB oracle instead of a
-  * spec-only check. Determinism conventions (SURVEY §8.4): distances
+/** Oracle-certifiable Lloyd's k-means over an embedding column, the
+  * only k-means trainer: the algorithm in pure relational arithmetic,
+  * so every step — init, assignment, centroid update — replays
+  * exactly in SQL on another engine, giving the k-means loop itself a
+  * hard DuckDB oracle. Determinism conventions (SURVEY §8.4): distances
   * round to 6 decimals before the argmin (tie-broken by cell id) and
   * centroid components round to 6 after each mean, so iteration N's
   * input is bit-identical cross-engine regardless of summation order.

@@ -207,26 +207,6 @@ object Curation {
       .drop("_cum")
   }
 
-  /** Per-group sampling weights that reshape the observed group mix
-    * into a target mix: weight(g) = target_frac(g) / observed_frac(g)
-    * (so sampling each row with probability ∝ its group weight yields
-    * the target mixture). Groups absent from `targets` weigh 0. The
-    * group table is tiny — one row per group — so the fraction windows
-    * are driver-free and effectively free.
-    */
-  def mixtureWeights(df: DataFrame, groupCol: String, targets: Map[String, Double]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val w = Window.partitionBy()
-    val counts = df.groupBy(col(groupCol)).agg(count(lit(1)).as("n_docs"))
-      .withColumn("observed_frac", col("n_docs") / sum(col("n_docs")).over(w))
-    val t = targets.toSeq.toDF(groupCol, "target_frac")
-    counts.join(broadcast(t), Seq(groupCol), "left")
-      .withColumn("weight",
-        round(coalesce(col("target_frac"), lit(0.0)) / col("observed_frac"), 6))
-      .select(col(groupCol), col("n_docs"), col("weight"))
-  }
-
   /** Temperature-scaled mixture fractions (the multi-corpus sampling
     * scheme multilingual/multi-source pretraining uses): the sampling
     * share of group g is n_g^τ normalized over all groups. τ=1
@@ -347,31 +327,6 @@ object Curation {
     val u = hash60(concat(lit(seed), lit(":"), col(idCol).cast("string")))
       .cast("double") / lit(1152921504606846976.0) // 2^60
     df.filter(u < least(greatest(weight.cast("double"), lit(0.0)), lit(1.0)))
-  }
-
-  /** Corpus snapshot diff by content hash: given two versions of a
-    * corpus keyed by `idCol`, classify every id as `added` (only in
-    * the new version), `removed` (only in the old), `changed` (both,
-    * different content), or `unchanged`. The workhorse of incremental
-    * corpus refreshes — downstream stages re-run only on
-    * added/changed ids instead of the full 100 TB. Each side reduces
-    * to (id, 60-bit content hash) before the single full-outer
-    * shuffle join, so the join never carries document bodies.
-    */
-  def snapshotDiff(
-      oldDf: DataFrame,
-      newDf: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame = {
-    val oldH = oldDf.select(col(idCol).as("_old_id"), hash60(col(textCol)).as("_old_h"))
-    val newH = newDf.select(col(idCol).as("_new_id"), hash60(col(textCol)).as("_new_h"))
-    oldH.join(newH, col("_old_id") === col("_new_id"), "full_outer")
-      .select(
-        coalesce(col("_old_id"), col("_new_id")).as(idCol),
-        when(col("_old_id").isNull, "added")
-          .when(col("_new_id").isNull, "removed")
-          .when(col("_old_h") =!= col("_new_h"), "changed")
-          .otherwise("unchanged").as("status"))
   }
 
   /** Uniform-target special case: weight(g) = N / (G · n_g). */

@@ -198,8 +198,8 @@ object Similarity {
   }
 
   /** IVF-style approximate top-k: a deterministic coarse quantizer
-    * (every `centroidStep`-th vector as a centroid — a k-means
-    * codebook drops in without changing the plan shape), vectors
+    * (every `centroidStep`-th vector as a centroid — a trained
+    * codebook drops in through [[ivfTopKCodebook]]), vectors
     * inverted into their nearest-centroid cell, queries probing the
     * `nProbe` nearest cells with exact cosine re-rank inside.
     *
@@ -217,37 +217,14 @@ object Similarity {
     val centroids = emb
       .filter(pmod(col(idCol), lit(centroidStep)) === 0)
       .select(col(idCol).as("cell"), col(vecCol).as("cv"))
-    ivfSearch(emb, queries, idCol, vecCol, k, centroids, nProbe)
+    ivfTopKCodebook(emb, queries, idCol, vecCol, k, centroids, nProbe)
   }
 
-  /** Train a k-means codebook over the embedding column with Spark ML
-    * (seeded → deterministic) and return it in the `(cell, cv)` shape
-    * [[ivfSearch]] consumes. On real clustered embeddings this beats
-    * the stride quantizer's recall at equal nProbe; training is one
-    * distributed pass per iteration and the k centroid vectors are
-    * driver-resident only momentarily before re-broadcast.
+  /** IVF top-k against any codebook: invert vectors into
+    * nearest-centroid cells, probe the query's `nProbe` nearest cells,
+    * exact re-rank inside. `centroids` must have columns
+    * (cell: long, cv: array<float>).
     */
-  def kmeansCodebook(
-      emb: DataFrame,
-      vecCol: String,
-      numCentroids: Int,
-      seed: Long = 42L,
-      maxIter: Int = 20): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val feat = emb.select(
-      array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-    val model = new KMeans()
-      .setK(numCentroids).setSeed(seed).setMaxIter(maxIter)
-      .fit(feat)
-    model.clusterCenters.toSeq.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toArray.map(_.toFloat)) }
-      .toDF("cell", "cv")
-  }
-
-  /** IVF top-k against a trained codebook (e.g. [[kmeansCodebook]]). */
   def ivfTopKCodebook(
       emb: DataFrame,
       queries: DataFrame,
@@ -255,21 +232,7 @@ object Similarity {
       vecCol: String,
       k: Int,
       centroids: DataFrame,
-      nProbe: Int = 4): DataFrame =
-    ivfSearch(emb, queries, idCol, vecCol, k, centroids, nProbe)
-
-  /** Shared IVF search: invert vectors into nearest-centroid cells,
-    * probe the query's `nProbe` nearest cells, exact re-rank inside.
-    * `centroids` must have columns (cell: long, cv: array<float>).
-    */
-  private def ivfSearch(
-      emb: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      centroids: DataFrame,
-      nProbe: Int): DataFrame = {
+      nProbe: Int = 4): DataFrame = {
     GraftFunctions.register(emb.sparkSession)
 
     // in-row top-`keep` cells: the centroids ride along as one
@@ -384,8 +347,8 @@ object Similarity {
     * codes — no full-vector math per candidate.
     *
     * The codebook is the deterministic stride quantizer (every
-    * `centroidStep`-th vector donates its blocks; [[kmeansCodebook]]'s
-    * trained centers drop into the same shape). Scale: encoding is one
+    * `centroidStep`-th vector donates its blocks; trained centers drop
+    * into the same shape). Scale: encoding is one
     * scan × broadcast(codebook); search touches only the code table
     * (n × subvectors tiny rows) plus a broadcast ADC table — the
     * original vectors are never read at query time.
@@ -508,32 +471,18 @@ object Similarity {
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    * arXiv:2303.09540): k-means-cluster the embedding space, compare
-    * cosine similarity only WITHIN each cluster, resolve the
-    * above-threshold pair graph to components, and keep one canonical
-    * row per semantic group (plus everything unpaired).
+    * arXiv:2303.09540) with the deterministic stride codebook (every
+    * `centroidStep`-th vector, cell = its id): compare cosine
+    * similarity only WITHIN each cell, resolve the above-threshold
+    * pair graph to components, and keep one canonical row per
+    * semantic group (plus everything unpaired). SQL-replayable end to
+    * end, so the DuckDB oracle certifies the full
+    * cluster→pair→component→survivor chain. Returns (survivors,
+    * removed).
     *
-    * Scale shape: assignment is corpus × broadcast(k centroids) — the
-    * published algorithm's cost, embarrassingly parallel; the pair
-    * stage is an equi-join on the cluster id, so the quadratic term is
-    * per-cluster (n/k)², never n² — k is the dial that bounds it.
-    * Returns (survivors, removed).
-    */
-  def semanticDedup(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      numClusters: Int,
-      threshold: Double,
-      seed: Long = 42L): (DataFrame, DataFrame) =
-    semanticDedupWith(emb, idCol, vecCol,
-      kmeansCodebook(emb, vecCol, numClusters, seed), threshold)
-
-  /** [[semanticDedup]] with the deterministic stride codebook (every
-    * `centroidStep`-th vector, cell = its id) — same pipeline, but
-    * SQL-replayable end to end, so the DuckDB oracle certifies the
-    * full cluster→pair→component→survivor chain (the k-means variant
-    * can only be spec-checked).
+    * Scale shape: assignment is corpus × broadcast(centroids); the
+    * pair stage is an equi-join on the cell id, so the quadratic term
+    * is per-cell (n/C)², never n².
     */
   def semanticDedupStride(
       emb: DataFrame,

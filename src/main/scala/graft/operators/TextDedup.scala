@@ -465,7 +465,7 @@ object TextDedup {
     * at least one full block, so an equi-join on (blk, bits) generates
     * ALL true candidates (100% recall) without an O(n²) cross product.
     */
-  def simhashBlocks(sim: DataFrame, maxHamming: Int): DataFrame = {
+  private def simhashBlocks(sim: DataFrame, maxHamming: Int): DataFrame = {
     // 60-bit hashes: beyond 59 the pigeonhole blocks degenerate to
     // zero-width (full cross join); reject rather than degrade
     require(maxHamming >= 0 && maxHamming < 60, s"maxHamming must be in [0,60), got $maxHamming")
@@ -487,7 +487,7 @@ object TextDedup {
 
   /** Near-duplicate pairs from ANY precomputed (doc_id, sh) simhash
     * frame — the pigeonhole block join + exact verify, shared by the
-    * text path, the binary-payload path, and the incremental ledger.
+    * text path and the binary-payload path.
     */
   def simhashPairsOf(sim: DataFrame, maxHamming: Int): DataFrame = {
     val blocked = simhashBlocks(sim, maxHamming)

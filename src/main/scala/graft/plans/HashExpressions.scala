@@ -33,13 +33,6 @@ object Md5Util {
 
   def hash60(s: String): Long =
     hash60(MessageDigest.getInstance("MD5"), s.getBytes("UTF-8"))
-
-  /** Full md5 digest as lowercase hex — stable key material (e.g. the
-    * per-batch commit markers in [[graft.operators.IncrementalDedup]]).
-    */
-  def hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
 }
 
 /** Element-wise 60-bit md5 hash of a string array — the ONE place the
@@ -462,7 +455,7 @@ case class CosineSim(left: Expression, right: Expression)
   * `struct(coalesce(when(isnan(s), -Inf).otherwise(-s), +Inf), cell)`
   * under struct ordering — exactly what
   * `explode(slice(array_sort(transform(_cs, ...)), 1, 1))` computed in
-  * `Similarity.ivfSearch`'s keep=1 assignment, with two costs removed
+  * `Similarity.ivfTopKCodebook`'s keep=1 assignment, with two costs removed
   * that made the 2M-vector IVF assignment infeasible (round 16):
   * the per-row materialization + O(C log C) sort of a C-element
   * struct array, and the C redundant recomputations of the ROW

@@ -400,8 +400,8 @@ object CurationQueries {
       // unique doc_id, so the full-outer join is per-row algebra
       // (round 18, guide §8): membership is the two modulo filters and
       // the hash comparison only matters where the texts can differ
-      // (doc_id % 11 = 0) — identical statuses to
-      // Curation.snapshotDiff(v1, v2) at zero joins/exchanges, with
+      // (doc_id % 11 = 0) — identical statuses to a full-outer join
+      // of the two (id, hash) sides at zero joins/exchanges, with
       // the md5s computed for ~9% of rows instead of ~166%.
       val docs = Tables.documents(s, d)
       val in1 = $"doc_id" % 7 =!= 0

@@ -2,8 +2,7 @@ package graft.sinks
 
 import graft.ingest.CsvIngest
 import graft.ingest.CsvIngest.RowId
-import graft.plans.SqlIdent
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -68,77 +67,14 @@ object Sinks {
       s"${entity}_${errorType}_errors.csv", "csv", singleFile = true, keepEmpty = false)
   }
 
-  /** Hive-style partitioned dataset sink (the training-shard layout:
-    * `dir/col=value/part-*.parquet`). Rows are repartitioned on the
-    * partition columns first so each output partition is written by
-    * the tasks that own its rows — no small-file explosion from every
-    * task touching every partition — and partition pruning works for
-    * downstream readers that filter on the layout columns.
-    *
-    * `filesPerPartition` bounds hot-value skew: hashing a partition
-    * value to ONE task means a dominant value (e.g. `split=train`
-    * holding 80% of rows) is written by a single straggling task as
-    * one huge file. A deterministic row-hash salt fans each partition
-    * value across up to `filesPerPartition` tasks/files; small values
-    * still collapse to few files. Size it to ~rows(hottest value) /
-    * rows-per-task-budget at the target scale; 1 keeps the
-    * one-file-per-value layout.
+  /** Writes a commit marker: an empty file at `marker` (parents
+    * created), written once the output it seals is durable, so a replay
+    * can tell finished output from a failed attempt's partial one.
+    * Readers of parquet and csv directories skip `_`-prefixed paths.
     */
-  def writePartitioned(df: DataFrame, dir: String, partitionCols: Seq[String],
-      format: String = "parquet", filesPerPartition: Int = 1): String = {
-    require(partitionCols.nonEmpty, "writePartitioned needs at least one partition column")
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val keys = partitionCols.map(col)
-    val shuffled =
-      if (filesPerPartition == 1) df.repartition(keys: _*)
-      else {
-        // salt from the hashable columns only — `hash` rejects MAP
-        // types at analysis; a row id keeps the fan-out working for
-        // frames with no hashable column at all
-        def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-          case _: org.apache.spark.sql.types.MapType => false
-          case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
-          case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-          case _ => true
-        }
-        val saltSrc = df.schema.fields.filter(f => hashable(f.dataType))
-          .map(f => col(SqlIdent.quote(f.name)))
-        val salt = pmod(
-          if (saltSrc.nonEmpty) hash(saltSrc.toIndexedSeq: _*)
-          else hash(monotonically_increasing_id()),
-          lit(filesPerPartition))
-        // a fresh name — overwriting a real user column would corrupt
-        // then drop it
-        val saltCol = SqlIdent.freshName("_salt", df.columns)
-        // explicit partition count: a bare repartition-by-column is an
-        // AQE coalescing target, which would re-merge the salt groups
-        // into one task and undo the fan-out
-        val n = df.sparkSession.sessionState.conf.numShufflePartitions
-        df.withColumn(saltCol, salt)
-          .repartition(n, keys :+ col(saltCol): _*)
-          .drop(saltCol)
-      }
-    shuffled
-      .write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .format(format)
-      .save(dir)
-    dir
-  }
-
-  /** Commit markers: an empty `_`-prefixed file `dir/name`, written
-    * once the output it seals is durable, so a replay can tell finished
-    * output from a failed attempt's partial one. Readers of parquet and
-    * csv directories skip `_`-prefixed files.
-    */
-  def markerExists(spark: SparkSession, dir: String, name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  def writeMarker(spark: SparkSession, dir: String, name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true).close()
+  def writeMarker(marker: Path): Unit = {
+    Files.createDirectories(marker.getParent)
+    Files.write(marker, Array.emptyByteArray)
   }
 
   /** Writes `df` to `dir/fileName` and returns the rows written. A

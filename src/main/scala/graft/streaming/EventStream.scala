@@ -139,17 +139,16 @@ object EventStream {
         col("_m.right_id").as("right_id"), col("_m.right_ts").as("right_ts"))
   }
 
-  /** Streaming form of the cross-batch exact-dedup ledger: drop every
-    * stream row whose canonical content fingerprint already exists in
-    * the (static) ledger written by
-    * [[graft.operators.IncrementalDedup.ingestBatch]] — a stream-static
-    * LEFT ANTI join, stateless per micro-batch. The ledger frame is a
-    * SNAPSHOT: a parquet-backed static DataFrame fixes its file
-    * listing when `spark.read` resolves it, so fingerprints appended
-    * after the stream starts are NOT seen until the query restarts
-    * with a fresh read. For a live ledger, re-read it inside
-    * `foreachBatch` instead. Within-stream duplicates compose
-    * upstream via [[dedupWithinWatermark]] on the fingerprint.
+  /** Drop every stream row whose canonical content fingerprint
+    * already exists in `ledger`, a frame of `_fp` fingerprints
+    * ([[graft.functions.TextFunctions.canonicalFingerprint]] values) —
+    * a stream-static LEFT ANTI join, stateless per micro-batch. The
+    * ledger frame is a SNAPSHOT: a parquet-backed static DataFrame
+    * fixes its file listing when `spark.read` resolves it, so
+    * fingerprints appended after the stream starts are NOT seen until
+    * the query restarts with a fresh read. For a live ledger, re-read
+    * it inside `foreachBatch` instead. Within-stream duplicates
+    * compose upstream via [[dedupWithinWatermark]] on the fingerprint.
     */
   def dropLedgered(stream: DataFrame, textCol: String, ledger: DataFrame): DataFrame = {
     val fp = graft.functions.TextFunctions.canonicalFingerprint(col(textCol))
@@ -286,47 +285,6 @@ object EventStream {
           val cnt = state.getOption.getOrElse(0L) + incoming.size
           state.update(cnt)
           CmsCell(cell._1, cell._2, cnt)
-      }
-  }
-
-  final case class QuantileEstimate(bucket_lo: Double, n_total: Long, q: Double)
-
-  /** Streaming quantile with BOUNDED state: values land in fixed-width
-    * histogram buckets (one count per touched bucket — state is the
-    * histogram, not the stream), and each batch emits the current
-    * q-quantile estimate as the lower edge of the bucket where the
-    * cumulative count crosses q·n. Error is one bucket width — the
-    * classic bounded-memory quantile for monitoring dashboards; the
-    * exact batch operator (`Quantiles`) remains the offline path.
-    *
-    * Single global group (key = ()): the histogram merge is one
-    * state update per batch; per-key variants shard the same state by
-    * key. Deterministic: bucket counts are order-insensitive.
-    */
-  def streamingQuantile(values: Dataset[Double], q: Double,
-      bucketWidth: Double): Dataset[QuantileEstimate] = {
-    require(q > 0 && q < 1, "need 0 < q < 1")
-    require(bucketWidth > 0, "need bucketWidth > 0")
-    val spark = values.sparkSession
-    import spark.implicits._
-    values
-      .groupByKey(_ => 0)
-      .mapGroupsWithState[Map[Long, Long], QuantileEstimate](
-        GroupStateTimeout.NoTimeout()) {
-        (_: Int, incoming: Iterator[Double], state: GroupState[Map[Long, Long]]) =>
-          val hist = incoming.foldLeft(state.getOption.getOrElse(Map.empty[Long, Long])) {
-            (acc, v) =>
-              val b = math.floor(v / bucketWidth).toLong
-              acc.updated(b, acc.getOrElse(b, 0L) + 1L)
-          }
-          state.update(hist)
-          val n = hist.values.sum
-          val target = q * n
-          var cum = 0L
-          val crossing = hist.toSeq.sortBy(_._1).find { case (_, c) =>
-            cum += c; cum >= target
-          }.map(_._1).getOrElse(0L)
-          QuantileEstimate(crossing * bucketWidth, n, q)
       }
   }
 

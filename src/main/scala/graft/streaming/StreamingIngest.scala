@@ -8,7 +8,7 @@ import graft.sinks.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 
 /** Structured-Streaming form of the import pipeline: each micro-batch
   * of a stream is one [[Pipeline.runMinted]] into `outDir/batch_<id>`,
@@ -94,15 +94,14 @@ object StreamingIngest {
     val missing = spec.fields.map(_.name).filterNot(source.columns.contains)
     require(missing.isEmpty,
       s"streaming source is missing entity fields: ${missing.mkString(", ")}")
-    val commits = s"$outDir/_committed"
 
     source.writeStream
       .queryName(s"graft-ingest-${spec.name}")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(0))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = s"batch_$batchId"
-        if (!Sinks.markerExists(batch.sparkSession, commits, marker)) {
+        val marker = Paths.get(outDir, "_committed", s"batch_$batchId")
+        if (!Files.exists(marker)) {
           val dir = s"$outDir/batch_$batchId"
           // a failed attempt's partial output
           Sinks.deleteTree(Paths.get(dir))
@@ -113,49 +112,8 @@ object StreamingIngest {
             else
               batch.withColumn(CsvIngest.RowId, monotonically_increasing_id())
           val result = Pipeline.runMinted(minted, spec, dir)
-          try Sinks.writeMarker(batch.sparkSession, commits, marker)
+          try Sinks.writeMarker(marker)
           finally result.unpersist()
-        }
-      }
-      .start()
-  }
-
-  /** Streaming NEAR-duplicate suppression: every micro-batch flows
-    * through [[graft.operators.IncrementalDedup.ingestBatchNearDup]] —
-    * cross-batch dedup against the simhash ledger (8 bytes per
-    * document ever admitted), then within-batch pigeonhole pairs +
-    * connected components. Survivors land under
-    * `outDir/batch_<id>`; the ledger grows by the admitted hashes.
-    *
-    * Why foreachBatch and not a stateful operator: near-dup state is
-    * the FULL history of admitted signatures — unbounded, so it can't
-    * live in watermark-evicted streaming state. The ledger is that
-    * state made durable and cheap (a probe is a block equi-join, never
-    * batch × history), and the two-marker commit protocol makes each
-    * batch idempotent: a replay after a crash resumes exactly where
-    * the markers say, so the stream is effectively-once end to end.
-    */
-  def startNearDup(
-      source: DataFrame,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      ledgerPath: String,
-      checkpoint: String,
-      maxHamming: Int = 10,
-      shingleN: Int = 2): StreamingQuery = {
-    require(source.isStreaming, "startNearDup needs a streaming DataFrame (readStream)")
-    source.writeStream
-      .queryName("graft-near-dup")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.IncrementalDedup.ingestBatchNearDup(
-            batch, idCol, textCol, ledgerPath,
-            outputDir = s"$outDir/batch_$batchId",
-            maxHamming = maxHamming, shingleN = shingleN)
-          ()
         }
       }
       .start()

@@ -69,22 +69,6 @@ class BpeTrainerSpec extends SparkSpec {
     assert(r(1) == ((1L, 2L, 12L, 6.0)))
   }
 
-  test("symbolVocab shrinks total symbol occurrences as merges land") {
-    val df = docs("low low lower")
-    // corpus-weighted initial symbol count = total characters = 11
-    val v0 = BpeTrainer.wordTable(df, "text")
-      .select(($"freq" * size($"syms")).as("n"))
-      .agg(sum($"n")).as[Long].head()
-    assert(v0 == 11L)
-    val vocab2 = BpeTrainer.symbolVocab(df, "text", iterations = 2)
-    // every merge strictly reduces total symbol occurrences
-    val totalSyms = vocab2.agg(sum($"freq")).as[Long].head()
-    assert(totalSyms < v0)
-    // frequencies stay word-frequency weighted: "lo"/"low" appear 3x
-    val m = vocab2.as[(String, Long)].collect().toMap
-    assert(m.getOrElse("lo", m.getOrElse("low", 0L)) == 3L)
-  }
-
   test("wordTable splits non-BMP text into whole codepoints, not surrogates") {
     // java.util.regex's '.' matches a full code point (a surrogate PAIR
     // for astral-plane chars), matching DuckDB's RE2 codepoint

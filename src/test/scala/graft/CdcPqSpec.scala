@@ -71,14 +71,19 @@ class CdcPqSpec extends SparkSpec {
 
   test("semanticDedup removes duplicate directions, keeps orthogonal ones") {
     // 16 orthogonal unit vectors + exact duplicates of the first four
-    // (identical points land in the same k-means cell by construction;
+    // (identical points land in the same cell by construction;
     // orthogonal vectors have cosine 0, so no spurious pairs)
     val vecs = (0 until 20).map { i =>
       val unit = if (i < 16) i else i - 16
       (i.toLong, (0 until 16).map(dimj => if (dimj == unit) 1.0f else 0.0f).toArray)
     }.toDF("vec_id", "embedding")
-    val (survivors, removed) = Similarity.semanticDedup(
-      vecs, "vec_id", "embedding", numClusters = 4, threshold = 0.99)
+    // a fixed 4-cell codebook: cell c spans dims 4c..4c+3, so unit
+    // vector i lands in cell i / 4 (cosine 0.5 there, 0 elsewhere)
+    val codebook = (0 until 4).map { c =>
+      (c.toLong, (0 until 16).map(dimj => if (dimj / 4 == c) 1.0f else 0.0f).toArray)
+    }.toDF("cell", "cv")
+    val (survivors, removed) = Similarity.semanticDedupWith(
+      vecs, "vec_id", "embedding", codebook, threshold = 0.99)
     val removedIds = removed.select("vec_id").as[Long].collect().toSet
     // each duplicate loses to the smaller id of its component
     assert(removedIds == Set(16L, 17L, 18L, 19L), s"got $removedIds")

@@ -61,28 +61,6 @@ class CurationSpec extends SparkSpec {
     // weight * n_docs is the same for every group (= N/G)
     val products = uni.select(($"weight" * $"n_docs").as("p")).as[Double].collect()
     assert(products.forall(p => math.abs(p - products.head) < 0.01), products.toSeq.toString)
-    // explicit-target form: one source up-weighted, unknown source → 0
-    val aSource = docs.select("source").as[String].head()
-    val tw = Curation.mixtureWeights(docs, "source", Map(aSource -> 1.0))
-    val wFor = tw.filter($"source" === aSource).select("weight").as[Double].head()
-    assert(wFor > 1.0) // its observed frac < 1, target 1 → up-weight
-    assert(tw.filter($"source" =!= aSource).filter($"weight" =!= 0.0).count() == 0)
-  }
-
-  test("writePartitioned lays out hive-style dirs and prunes on read") {
-    import graft.sinks.Sinks
-    val dir = tmpDir("part-sink") + "/byspit"
-    val assigned = Curation.assignSplit(docs, "doc_id")
-    Sinks.writePartitioned(assigned, dir, Seq("split"))
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("split=test", "split=train", "split=val"))
-    val back = spark.read.parquet(dir)
-    assert(back.count() == docs.count())
-    // partition pruning: a split filter reads only that directory
-    val plan = back.filter($"split" === "train").queryExecution.executedPlan.toString
-    assert(!plan.contains("split=test"))
-    assert(back.filter($"split" === "train").count() ==
-      assigned.filter($"split" === "train").count())
   }
 
   test("DataProfiler: correct null/distinct counts from a single scan") {
@@ -119,92 +97,6 @@ class CurationSpec extends SparkSpec {
     assert(cc2 == cc)
   }
 
-  test("incremental dedup: ledger drops cross-batch dups, re-runs are no-ops") {
-    import graft.operators.IncrementalDedup
-    val base = tmpDir("inc-ledger")
-    val ledger = s"$base/fp"
-    val b1 = Seq((1L, "Hello  World"), (2L, "doc two"), (3L, "hello world"))
-      .toDF("doc_id", "text") // 3 == canonical dup of 1
-    val s1 = IncrementalDedup.ingestBatch(b1, "doc_id", "text", ledger, s"$base/out1")
-    assert(s1.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-
-    // batch 2: one cross-batch dup (of doc 2), one genuinely new doc
-    val b2 = Seq((10L, "DOC TWO"), (11L, "fresh content"))
-      .toDF("doc_id", "text")
-    val s2 = IncrementalDedup.ingestBatch(b2, "doc_id", "text", ledger, s"$base/out2")
-    assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(11L))
-    // durable: the output dir holds the survivors independently
-    assert(spark.read.parquet(s"$base/out2").count() == 1)
-
-    // re-running an already-ledgered batch admits nothing
-    val s3 = IncrementalDedup.ingestBatch(b2, "doc_id", "text", ledger, s"$base/out2b")
-    assert(s3.count() == 0)
-  }
-
-  test("incremental dedup: committed batch re-run replays; crash windows never clobber output") {
-    import graft.operators.IncrementalDedup
-    val base = tmpDir("inc-commit")
-    val ledger = s"$base/fp"
-    val out = s"$base/out"
-    val b = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-    val s1 = IncrementalDedup.ingestBatch(b, "doc_id", "text", ledger, out)
-    // the durable output carries only caller columns — no leaked _fp
-    assert(spark.read.parquet(out).columns.sorted.toSeq == Seq("doc_id", "text"))
-    assert(s1.columns.sorted.toSeq == Seq("doc_id", "text"))
-
-    // re-running the SAME batch to the SAME dir (at-least-once
-    // redelivery / retry after full commit) must replay the published
-    // survivors — NOT anti-join to zero and overwrite with empty
-    val s2 = IncrementalDedup.ingestBatch(b, "doc_id", "text", ledger, out)
-    assert(s2.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    assert(spark.read.parquet(out).count() == 2)
-
-    // crash between ledger append and seal: drop the ledger marker;
-    // the retry re-appends (duplicate fingerprints are harmless) and
-    // still never rewrites the output directory
-    val markers = new java.io.File(ledger).listFiles()
-      .filter(f => f.getName.startsWith("_commit_") && f.getName.endsWith("_ledger"))
-    assert(markers.length == 1)
-    markers.foreach(_.delete())
-    val s3 = IncrementalDedup.ingestBatch(b, "doc_id", "text", ledger, out)
-    assert(s3.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    assert(spark.read.parquet(out).count() == 2)
-
-    // the (possibly duplicated) ledger still dedups the next batch
-    val b2 = Seq((5L, "ALPHA"), (6L, "gamma")).toDF("doc_id", "text")
-    val s4 = IncrementalDedup.ingestBatch(b2, "doc_id", "text", ledger, s"$base/out2")
-    assert(s4.select("doc_id").as[Long].collect().toSeq == Seq(6L))
-  }
-
-  test("incremental near-dup: ledger suppresses near matches across batches") {
-    import graft.operators.IncrementalDedup
-    val base = tmpDir("inc-near")
-    val ledger = s"$base/sh"
-    // 30-token texts; B differs from A by one word → shingle sets
-    // overlap ~28/31 → simhash within the hamming budget
-    val words = (1 to 30).map(i => s"tok$i").mkString(" ")
-    val nearA = words.replace("tok17", "changed")
-    val distinct1 = (1 to 30).map(i => s"other$i").mkString(" ")
-    val b1 = Seq((1L, words), (2L, nearA), (3L, distinct1)).toDF("doc_id", "text")
-    val s1 = IncrementalDedup.ingestBatchNearDup(
-      b1, "doc_id", "text", ledger, s"$base/out1", maxHamming = 20)
-    // within-batch: 1 and 2 cluster, min id 1 survives; 3 unpaired
-    assert(s1.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
-
-    // batch 2: 10 ≈ ledgered doc 1 → suppressed; 11 genuinely new
-    val distinct2 = (1 to 30).map(i => s"fresh$i").mkString(" ")
-    val b2 = Seq((10L, words.replace("tok3", "swap")), (11L, distinct2)).toDF("doc_id", "text")
-    val s2 = IncrementalDedup.ingestBatchNearDup(
-      b2, "doc_id", "text", ledger, s"$base/out2", maxHamming = 20)
-    assert(s2.select("doc_id").as[Long].collect().toSeq == Seq(11L))
-
-    // full re-run of a committed batch replays, never empties
-    val s2b = IncrementalDedup.ingestBatchNearDup(
-      b2, "doc_id", "text", ledger, s"$base/out2", maxHamming = 20)
-    assert(s2b.select("doc_id").as[Long].collect().toSeq == Seq(11L))
-    assert(spark.read.parquet(s"$base/out2").count() == 1)
-  }
-
   test("connectedComponents labels a chain deeper than min-label propagation's old cap") {
     import graft.operators.DupGraph
     // a 200-node chain has diameter 199: min-label propagation needs a
@@ -238,34 +130,6 @@ class CurationSpec extends SparkSpec {
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L,
       30L -> 30L))
-  }
-
-  test("writePartitioned fans a hot partition value across filesPerPartition files") {
-    import graft.sinks.Sinks
-    val dir = tmpDir("part-salt") + "/salted"
-    // 90% of rows land in split=train — the straggler shape
-    val skewed = docs.withColumn("split",
-      when($"doc_id" % 10 === 0, "val").otherwise("train"))
-    Sinks.writePartitioned(skewed, dir, Seq("split"), filesPerPartition = 4)
-    val hotFiles = new java.io.File(s"$dir/split=train").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(hotFiles >= 2 && hotFiles <= 4, s"hot partition wrote $hotFiles files")
-    // readback is lossless
-    val back = spark.read.parquet(dir)
-    assert(back.count() == skewed.count())
-    assert(back.select("doc_id").as[Long].collect().sorted.toSeq ==
-      skewed.select("doc_id").as[Long].collect().sorted.toSeq)
-    // a MAP column (unhashable) and a pre-existing _salt column must
-    // not break or be corrupted by the salting path
-    val tricky = skewed
-      .withColumn("meta", map(lit("k"), $"source"))
-      .withColumn("_salt", $"doc_id" * 2)
-    val dir2 = tmpDir("part-salt-map") + "/salted"
-    Sinks.writePartitioned(tricky, dir2, Seq("split"), filesPerPartition = 4)
-    val back2 = spark.read.parquet(dir2)
-    assert(back2.columns.sorted.toSeq == tricky.columns.sorted.toSeq)
-    assert(back2.select(sum($"_salt")).as[Long].head() ==
-      tricky.select(sum($"_salt")).as[Long].head())
   }
 
   test("nearDedupSurvivors keeps one canonical row per cluster + unpaired rows") {
@@ -400,14 +264,6 @@ class CurationSpec extends SparkSpec {
     val idOrder = Curation.groupQuota(docs, "source", "doc_id", quota = 10)
       .select("doc_id").as[Long].collect().toSet
     assert(again != idOrder, "hash-ordered cap should differ from lowest-id quota")
-  }
-
-  test("snapshotDiff classifies added/removed/changed/unchanged") {
-    val old = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")).toDF("id", "text")
-    val neu = Seq((2L, "beta"), (3L, "GAMMA"), (4L, "delta")).toDF("id", "text")
-    val d = Curation.snapshotDiff(old, neu, "id", "text")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(d == Map(1L -> "removed", 2L -> "unchanged", 3L -> "changed", 4L -> "added"))
   }
 
   test("bigramNegLogProb: hand-computed add-one smoothing on a toy corpus") {

@@ -90,7 +90,6 @@ class EmptyInputSpec extends SparkSpec {
     assert(DupGraph.labelPropagate(
       edges, "src", "dst", seeds, "node", "lbl", iters = 2).count() == 0)
     assert(BpeTrainer.merges(emptyDocs, "text", iterations = 2).count() == 0)
-    assert(BpeTrainer.symbolVocab(emptyDocs, "text", iterations = 1).count() == 0)
     assert(TextDedup.ngramNovelty(emptyDocs, "doc_id", "text").count() == 0)
     assert(TextDedup.minhashEstimateAccuracy(emptyDocs, "doc_id", "text").count() == 0)
     val toks = Seq.empty[String].toDF("tok")
@@ -142,8 +141,14 @@ class EmptyInputSpec extends SparkSpec {
   test("sinks handle empty frames") {
     val dir = tmpDir("empty-sinks")
     val e = Seq.empty[(Long, String)].toDF("id", "split")
-    // empty partitioned write: no partition dirs, readable as empty via schema
-    Sinks.writePartitioned(e, s"$dir/p", Seq("split"), filesPerPartition = 4)
-    assert(spark.read.schema(e.schema).parquet(s"$dir/p").count() == 0)
+    // an empty export still writes its file, readable as empty
+    assert(Sinks.exportProjection(e, "none", dir) == 0)
+    assert(spark.read.option("header", "true").schema(e.schema)
+      .csv(s"$dir/exports/none.csv").count() == 0)
+    assert(Sinks.exportProjection(e, "none", dir, format = "parquet") == 0)
+    assert(spark.read.schema(e.schema).parquet(s"$dir/exports/none.parquet").count() == 0)
+    // an empty error set leaves no file and no errors directory
+    assert(Sinks.saveErrors(e, "schema", "ent", dir) == 0)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "errors")))
   }
 }

@@ -60,16 +60,6 @@ class SinksProjectionsSpec extends SparkSpec {
       .asScala.toSeq == Seq("row,seat", "c,1", "a,2", "b,3"))
   }
 
-  test("salted partitioned write keeps an input column whose name differs from the salt's only in case") {
-    val dir = tmpDir("sink-salt-case") + "/out"
-    val df = Seq(("a", 10L, "x"), ("a", 20L, "y"), ("b", 30L, "z")).toDF("k", "_SALT", "v")
-    Sinks.writePartitioned(df, dir, Seq("k"), filesPerPartition = 2)
-    val back = spark.read.parquet(dir)
-    assert(back.columns.toSeq == Seq("_SALT", "v", "k"))
-    assert(back.select("k", "_SALT", "v").as[(String, Long, String)].collect().sorted.toSeq ==
-      Seq(("a", 10L, "x"), ("a", 20L, "y"), ("b", 30L, "z")))
-  }
-
   test("json single-file export round-trips") {
     val dir = tmpDir("sink-json")
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v")

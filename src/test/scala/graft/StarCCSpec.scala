@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{DupGraph, TextDedup}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Round-5 operators: star-contraction connected components (the
@@ -132,24 +131,4 @@ class StarCCSpec extends SparkSpec {
     d(a.length)(b.length)
   }
 
-  test("startNearDup drops cross-batch near-duplicates through the ledger") {
-    val base = tmpDir("stream-neardup")
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val source = input.toDF().toDF("doc_id", "text")
-    val q = graft.streaming.StreamingIngest.startNearDup(
-      source, "doc_id", "text", s"$base/out", s"$base/ledger", s"$base/ckpt",
-      maxHamming = 10, shingleN = 2)
-    try {
-      input.addData((1L, "the quick brown fox jumps over the lazy dog every day"),
-        (2L, "completely different content about spark shuffles and joins here"))
-      q.processAllAvailable()
-      // batch 2: doc 3 is a near-dup of doc 1 (one word changed), doc 4 is fresh
-      input.addData((3L, "the quick brown fox jumps over the lazy cat every day"),
-        (4L, "yet another unrelated document discussing parquet footers and stats"))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$base/out/batch_*")
-      assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 4L))
-    } finally q.stop()
-  }
 }

@@ -153,12 +153,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream rows already in the exact-dedup ledger are dropped; new content passes") {
-    import graft.operators.IncrementalDedup
     implicit val sqlCtx = spark.sqlContext
-    // seed a ledger through the batch operator
+    // seed a parquet ledger of the two rows' canonical fingerprints
     val base = tmpDir("stream-ledger")
-    val b = Seq((1L, "seen before"), (2L, "also seen")).toDF("doc_id", "text")
-    IncrementalDedup.ingestBatch(b, "doc_id", "text", s"$base/fp", s"$base/out")
+    Seq("seen before", "also seen").toDF("text")
+      .select(graft.functions.TextFunctions.canonicalFingerprint($"text").as("_fp"))
+      .write.parquet(s"$base/fp")
     val ledger = spark.read.parquet(s"$base/fp")
 
     val input = MemoryStream[(Long, String)]
@@ -243,22 +243,4 @@ class StreamingSpec extends SparkSpec {
     assert(est == Seq(("apple", 4L), ("banana", 3L), ("durian", 1L)))
   }
 
-  test("streamingQuantile tracks the batch quantile within one bucket") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Double]
-    val query = EventStream.streamingQuantile(input.toDS(), q = 0.5, bucketWidth = 1.0)
-      .writeStream.format("memory").queryName("squant").outputMode("update").start()
-    input.addData(1.2, 2.7, 3.1, 9.9)            // median in bucket 2
-    query.processAllAvailable()
-    input.addData(10.1, 10.5, 11.0, 12.2, 13.3)  // pooled median moves right
-    query.processAllAvailable()
-    val rows = spark.table("squant")
-      .orderBy($"n_total").as[(Double, Long, Double)].collect()
-    query.stop()
-    assert(rows.length == 2)
-    assert(rows(0) == ((2.0, 4L, 0.5)), "batch 1: cum crosses 2 at bucket [2,3)")
-    // pooled: 9 values, target 4.5; cum hits 4 at bucket [9,10) and
-    // 6 at [10,11) -> crossing at bucket [10,11)
-    assert(rows(1) == ((10.0, 9L, 0.5)), "state must pool across batches")
-  }
 }

@@ -165,30 +165,6 @@ class TextOpsSpec extends SparkSpec {
     assert(recall >= 0.3, s"recall $recall too low")
   }
 
-  test("k-means IVF codebook recall >= stride quantizer at equal nProbe") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val queries = emb.filter($"vec_id" < 10)
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val numCentroids = math.max((emb.count() / 10).toInt, 2) // = cells at centroidStep=10
-    val codebook = Similarity.kmeansCodebook(emb, "embedding", numCentroids)
-    val km = Similarity.ivfTopKCodebook(
-      emb, queries, "vec_id", "embedding", k = 5, codebook, nProbe = 3)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val stride = Similarity.ivfTopK(
-      emb, queries, "vec_id", "embedding", k = 5, centroidStep = 10, nProbe = 3)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    def recall(s: Set[(Long, Long)]) = (exact & s).size.toDouble / exact.size
-    assert(recall(km) >= recall(stride),
-      s"kmeans recall ${recall(km)} < stride recall ${recall(stride)}")
-    // determinism: seeded training twice gives identical results
-    val again = Similarity.ivfTopKCodebook(
-      emb, queries, "vec_id", "embedding", k = 5,
-      Similarity.kmeansCodebook(emb, "embedding", numCentroids), nProbe = 3)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    assert(again == km)
-  }
-
   test("IVF cell assignment ranks degenerate sims like the old window (NaN first, null last)") {
     // centroid 5 is 3-dim (null sim vs 2-dim vectors), centroid 7 is
     // 2-dim. A zero-norm 2-dim query has sim NaN vs cell 7 and null vs
