@@ -6,12 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Document deduplication operators for the training-data pipeline:
-  * exact (hash groupBy), MinHash+LSH (shingle → signature → band →
-  * bucket join → exact-Jaccard verify), SimHash (banded Hamming join).
+/** Near-duplicate document operators for the training-data pipeline:
+  * MinHash+LSH (shingle → signature → band → bucket join →
+  * exact-Jaccard verify), SimHash (banded Hamming join). Exact dedup is
+  * one aggregate on `canonicalFingerprint` (the `exact_dedup_docs`
+  * query).
   *
   * Scale design: no operator ever forms the full O(n²) pair space.
-  *   - exact: one shuffle on the 128-bit content hash;
   *   - MinHash LSH: candidate pairs come from equi-joins on band
   *     buckets (shuffle on band key; bucket sizes are tiny for honest
   *     near-dup thresholds, and a count-based guard can drop
@@ -21,17 +22,6 @@ import org.apache.spark.sql.expressions.Window
   *     100% recall, then the exact bit_count filter verifies.
   */
 object TextDedup {
-
-  /** Exact dedup on canonicalized content: keeps the smallest id per
-    * fingerprint group. Returns (survivors, removed).
-    */
-  def exact(df: DataFrame, idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    val fp = canonicalFingerprint(col(textCol))
-    val w = Window.partitionBy(fp).orderBy(col(idCol))
-    val ranked = df.withColumn("_fp_rn", row_number().over(w))
-    (ranked.filter(col("_fp_rn") === 1).drop("_fp_rn"),
-      ranked.filter(col("_fp_rn") > 1).drop("_fp_rn"))
-  }
 
   /** MinHash-LSH near-duplicate pairs.
     *

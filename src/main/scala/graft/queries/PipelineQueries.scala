@@ -1,28 +1,41 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.config.FieldSpec
+import graft.dedup.Dedup
+import graft.ingest.CsvIngest.RowId
+import graft.rules.AgeGte
+import graft.validate.SchemaValidator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import java.time.LocalDate
 
-/** The reference pipeline's operators re-expressed over the driver's
-  * `events` table (composite key (user_id, event_type), tie-break
-  * event_id standing in for the reference's ROWID — main.py:135).
+/** The importer's stages run over the driver's tables, so the oracle
+  * certifies the operators the importer ships. `events` stands in for a
+  * staged source: composite key (user_id, event_type), event_id as the
+  * row id (the reference's ROWID, main.py:135).
   *
-  * Covers SURVEY.md §2: dedup first/last/exclude_all
-  * (main.py:97-159), duplicate capture (main.py:109-139), dup-key
-  * HAVING set (main.py:113-117), schema validation as vectorized
-  * expressions (main.py:35-88), the age_gte custom rule
-  * (main.py:161-197), default back-fill (main.py:58-63), and the
-  * union of heterogeneous error captures (main.py:158).
+  * Covers SURVEY.md §2: dedup first/last/exclude_all and the duplicate
+  * captures through [[graft.dedup.Dedup]] (main.py:97-159), schema
+  * validation and default back-fill through
+  * [[graft.validate.SchemaValidator]] (main.py:35-88, 58-63), the
+  * age_gte rule through [[graft.rules.AgeGte]] (main.py:161-197), the
+  * union of heterogeneous error captures (main.py:158), the dup-key
+  * HAVING set (main.py:113-117), and the export and error sinks.
   */
 object PipelineQueries {
 
-  // The reference orders duplicates by ROWID (insertion order); event_id
-  // is the stable ingest order of the events table.
   private val keyCols = Seq("user_id", "event_type")
 
+  /** [[Dedup]] of `events` over one key set, event_id as its row id. */
+  private def dedup(events: DataFrame, keys: Seq[String], resolution: String): Dedup.DedupResult =
+    Dedup(events.withColumnRenamed("event_id", RowId), Seq(keys), resolution)
+
+  /** A dedup split with its row id back under the name event_id. */
+  private def byEventId(split: DataFrame): DataFrame = split.withColumnRenamed(RowId, "event_id")
+
   val all: Seq[Q] = Seq(
-    // dedup keep-first: row_number ascending over the composite key.
+    // dedup keep-first: the survivors rank 1 over the key by event_id.
     Q.sql(
       "dedup_first",
       """SELECT event_id, user_id, event_type, value FROM (
@@ -33,10 +46,7 @@ object PipelineQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy($"event_id")
-      Tables.events(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      byEventId(dedup(Tables.events(s, d), keyCols, "first").survivors)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .orderBy($"event_id")
     },
@@ -53,30 +63,26 @@ object PipelineQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy($"event_id".desc)
-      Tables.events(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      byEventId(dedup(Tables.events(s, d), keyCols, "last").survivors)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .orderBy($"event_id")
     },
 
     // dedup exclude_all: drop every member of any >1-count key group
-    // (reference main.py:121-129) — anti-join against the dup key set.
+    // (reference main.py:121-129). The key adds the event's UTC day:
+    // every (user_id, event_type) repeats in the testdata, so without
+    // it no row survives.
     Q.sql(
       "dedup_exclude_all",
       """SELECT event_id, user_id, event_type, value FROM events
-        |WHERE (user_id, event_type) NOT IN (
-        |  SELECT (user_id, event_type) FROM events
-        |  GROUP BY user_id, event_type HAVING count(*) > 1)
+        |WHERE (user_id, event_type, CAST(ts AS DATE)) NOT IN (
+        |  SELECT (user_id, event_type, CAST(ts AS DATE)) FROM events
+        |  GROUP BY user_id, event_type, CAST(ts AS DATE) HAVING count(*) > 1)
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val ev = Tables.events(s, d)
-      val dupKeys = ev.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("cnt")).filter($"cnt" > 1)
-        .select(keyCols.map(col): _*)
-      ev.join(dupKeys, keyCols, "left_anti")
+      val ev = Tables.events(s, d).withColumn("day", to_date($"ts"))
+      byEventId(dedup(ev, keyCols :+ "day", "exclude_all").survivors)
         .select($"event_id", $"user_id", $"event_type", $"value")
         .orderBy($"event_id")
     },
@@ -96,7 +102,7 @@ object PipelineQueries {
         .orderBy($"user_id", $"event_type")
     },
 
-    // all members of dup groups (semi-join capture, main.py:109-118).
+    // all members of dup groups: exclude_all's capture (main.py:109-118).
     Q.sql(
       "dup_members_semi",
       """SELECT event_id, user_id, event_type FROM events
@@ -106,17 +112,13 @@ object PipelineQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val ev = Tables.events(s, d)
-      val dupKeys = ev.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("cnt")).filter($"cnt" > 1)
-        .select(keyCols.map(col): _*)
-      ev.join(dupKeys, keyCols, "left_semi")
+      byEventId(dedup(Tables.events(s, d), keyCols, "exclude_all").removed)
         .select($"event_id", $"user_id", $"event_type")
         .orderBy($"event_id")
     },
 
-    // removed-rows capture for keep-first (`rn > 1`, main.py:132-139);
-    // rn kept in the output like the reference's capture frame.
+    // keep-first's capture (`rn > 1`, main.py:132-139), which keeps rn
+    // like the reference's capture frame.
     Q.sql(
       "dedup_removed_capture",
       """SELECT event_id, user_id, event_type, rn FROM (
@@ -127,49 +129,47 @@ object PipelineQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy($"event_id")
-      Tables.events(s, d)
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter($"rn" > 1)
+      byEventId(dedup(Tables.events(s, d), keyCols, "first").removed)
         .select($"event_id", $"user_id", $"event_type", $"rn")
         .orderBy($"event_id")
     },
 
-    // schema validation compiled to vectorized expressions: each failed
-    // check contributes one message; rows with no failures are dropped.
-    // This is the Spark-first replacement for the reference's per-row
-    // Pydantic loop (main.py:68-78) — whole-stage codegen, no UDF.
+    // schema validation (main.py:68-78): the validator's error split,
+    // its messages joined as the error file joins them. `value` is read
+    // as a string, as the importer reads a typed source.
     Q.sql(
       "validate_errors",
       """SELECT event_id, errors FROM (
         |  SELECT event_id, concat_ws('; ',
-        |    CASE WHEN event_type IS NULL OR NOT regexp_matches(event_type, '^(click|view|purchase|signup)$')
-        |         THEN 'event_type: pattern mismatch' END,
-        |    CASE WHEN value IS NULL OR value < 1 THEN 'value: below min 1' END,
-        |    CASE WHEN props IS NULL OR NOT regexp_matches(props, '^\{.*\}$')
-        |         THEN 'props: pattern mismatch' END) AS errors
+        |    CASE WHEN event_type IS NULL THEN 'event_type: field required' END,
+        |    CASE WHEN NOT regexp_matches(event_type, '^(click|view|purchase|signup)$')
+        |         THEN 'event_type: string does not match pattern ''^(click|view|purchase|signup)$''' END,
+        |    CASE WHEN value IS NULL THEN 'value: field required' END,
+        |    CASE WHEN isnan(value) OR isinf(value) THEN 'value: value is not a valid number' END,
+        |    CASE WHEN value < 1 THEN 'value: input should be greater than or equal to 1.0' END,
+        |    CASE WHEN props IS NULL THEN 'props: field required' END,
+        |    CASE WHEN NOT regexp_matches(props, '^\{.*\}$')
+        |         THEN 'props: string does not match pattern ''^\{.*\}$''' END) AS errors
         |  FROM events) t
         |WHERE errors <> ''
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      Tables.events(s, d)
-        .select(
-          $"event_id",
-          concat_ws("; ",
-            when($"event_type".isNull || !$"event_type".rlike("^(click|view|purchase|signup)$"),
-              lit("event_type: pattern mismatch")),
-            when($"value".isNull || $"value" < 1, lit("value: below min 1")),
-            when($"props".isNull || !$"props".rlike("^\\{.*\\}$"),
-              lit("props: pattern mismatch"))).as("errors"))
-        .filter($"errors" =!= "")
+      val fields = Seq(
+        FieldSpec("event_type", required = true, pattern = Some("^(click|view|purchase|signup)$")),
+        FieldSpec("value", "float", required = true, min = Some(1)),
+        FieldSpec("props", required = true, pattern = Some("^\\{.*\\}$")))
+      val events = Tables.events(s, d)
+        .withColumnRenamed("event_id", RowId)
+        .withColumn("value", $"value".cast("string"))
+      SchemaValidator.validate(events, fields).errors
+        .select($"row".as("event_id"), concat_ws("; ", $"errors").as("errors"))
         .orderBy($"event_id")
     },
 
-    // the age_gte rule's failing-row predicate (main.py:172-176):
-    // completed years between an as-of date and a date column, compared
-    // to a minimum. DuckDB date_part('year', age(a,b)) == completed
-    // years == floor(months_between(a,b)/12) in Spark.
+    // the age_gte rule's failing rows (main.py:172-176) and their
+    // completed years. DuckDB date_part('year', age(a,b)) == completed
+    // years == AgeGte.completedYears.
     Q.sql(
       "age_gte_failures",
       """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate,
@@ -179,16 +179,17 @@ object PipelineQueries {
         |ORDER BY o_orderkey""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      val asOf = lit("2024-01-01").cast("date")
-      val yrs = floor(months_between(asOf, to_date($"o_orderdate")) / 12)
+      val asOf = LocalDate.parse("2024-01-01")
+      val odate = to_date($"o_orderdate")
       Tables.orders(s, d)
-        .select($"o_orderkey", to_date($"o_orderdate").as("odate"), yrs.as("yrs"))
-        .filter($"yrs" < 28)
+        .filter(AgeGte.failPredicate("o_orderdate", Map("min_age" -> 28), asOf))
+        .select($"o_orderkey", odate.as("odate"),
+          AgeGte.completedYears(lit(asOf.toString).cast("date"), odate).as("yrs"))
         .orderBy($"o_orderkey")
     },
 
-    // default back-fill (generalizing main.py:58-63): nulls introduced
-    // then filled — na.fill is the declarative fillna.
+    // default back-fill (generalizing main.py:58-63): nulls introduced,
+    // then filled with the field's declared default.
     Q.sql(
       "fillna_defaults",
       """SELECT event_id, coalesce(nullif(event_type, 'error'), 'unknown') AS etype
@@ -196,10 +197,10 @@ object PipelineQueries {
         |ORDER BY event_id""".stripMargin
     ) { (s, d) =>
       import s.implicits._
-      Tables.events(s, d)
+      val etype = Tables.events(s, d)
         .select($"event_id",
           when($"event_type" === "error", lit(null: String)).otherwise($"event_type").as("etype"))
-        .na.fill(Map("etype" -> "unknown"))
+      SchemaValidator.fillDefaults(etype, Seq(FieldSpec("etype", default = Some("unknown"))))
         .orderBy($"event_id")
     },
 
@@ -222,15 +223,9 @@ object PipelineQueries {
     ) { (s, d) =>
       import s.implicits._
       val ev = Tables.events(s, d)
-      val w = Window.partitionBy(keyCols.map(col): _*).orderBy($"event_id")
-      val removedFirst = ev
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter($"rn" > 1)
+      val removedFirst = byEventId(dedup(ev, keyCols, "first").removed)
         .select($"event_id", lit("removed_first").as("kind"), $"rn")
-      val dupKeys = ev.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("cnt")).filter($"cnt" > 1)
-        .select(keyCols.map(col): _*)
-      val dupMembers = ev.join(dupKeys, keyCols, "left_semi")
+      val dupMembers = byEventId(dedup(ev, keyCols, "exclude_all").removed)
         .select($"event_id", lit("dup_member").as("kind"))
       removedFirst.unionByName(dupMembers, allowMissingColumns = true)
         .orderBy($"kind", $"event_id")

@@ -40,7 +40,6 @@ object SchemaValidator {
       valid: DataFrame,
       /** rows with >=1 error: row (1-based id), errors array, original string data */
       errors: DataFrame,
-      fields: Seq[FieldSpec],
       /** the input plus the `_errors` array; both splits filter it, so a
         * caller that reads both persists it to run the checks once
         */
@@ -152,7 +151,7 @@ object SchemaValidator {
           expr(s"try_cast(`${f.name}` AS DOUBLE)").cast(LongType)))
       else Some(f.name -> expr(s"try_cast(`${f.name}` AS DOUBLE)"))
     }.toMap)
-    ValidationResult(typed, errorRows(flagged), fields, flagged)
+    ValidationResult(typed, errorRows(flagged), flagged)
   }
 
   /** The error split of a validation's flagged frame, or of a frame

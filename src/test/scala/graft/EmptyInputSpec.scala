@@ -16,8 +16,6 @@ class EmptyInputSpec extends SparkSpec {
   private def emptyDocs = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
 
   test("dedup family handles empty corpora") {
-    val (surv, removed) = TextDedup.exact(emptyDocs, "doc_id", "text")
-    assert(surv.count() == 0 && removed.count() == 0)
     assert(TextDedup.minhashLshPairs(emptyDocs, "doc_id", "text").count() == 0)
     assert(TextDedup.simhashPairs(emptyDocs, "doc_id", "text").count() == 0)
     assert(TextDedup.ngramJaccardPairs(emptyDocs, "doc_id", "text").count() == 0)
